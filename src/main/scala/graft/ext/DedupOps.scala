@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -764,82 +765,32 @@ object DedupOps {
   def connectedComponents(pairs: DataFrame, iterations: Int): DataFrame = {
     // Iterative algorithm, run EAGERLY round by round (the GraphX/ML shape):
     // each round references the previous labels TWICE (neighbor build side
-    // + join base) and the edges once — without persistence, lineage would
-    // re-evaluate the previous round per reference, O(2^iterations)
-    // recomputations of the (possibly expensive: minhashDedupPairs) pair
-    // job. Each round persists + materializes, then the previous round's
-    // cache is released, so peak cache = edges + two label generations.
-    // The next round is REBASED on the persisted RDD (LogicalRDD leaf —
-    // the same materializeCut discipline as [[connectedComponentsStar]]):
-    // persist() alone does not truncate the logical plan, and with two
-    // label references per round the un-cut plan TREE doubles every
-    // iteration — analysis walks it as a tree, so high iteration counts
-    // would stall in the optimizer long before any data moved.
-    // The RETURNED frame holds no cache-manager entry: the final labels are
-    // local-checkpointed (lineage cut, blocks owned by the RDD and released
-    // by the ContextCleaner once the caller drops the frame) and every
-    // loop-persist is unpersisted before returning — repeated invocations
-    // (per-batch dedup) accumulate nothing.
+    // + join base) and the edges once — without a per-round cut the plan
+    // TREE doubles every iteration and lineage re-evaluates the previous
+    // round per reference, O(2^iterations) recomputations of the
+    // (possibly expensive: minhashDedupPairs) pair job. [[Iterate.fold]]
+    // cuts every round and releases the previous one, so peak state =
+    // edges + two label generations. The RETURNED frame is the last
+    // round's checkpoint and every loop-persist is unpersisted before
+    // returning — repeated invocations (per-batch dedup) accumulate
+    // nothing.
     val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .unionByName(pairs.select(col("id2").as("a"), col("id1").as("b")))
       .persist()
-    var labels = edges.select(col("a").as("id")).distinct()
-      .withColumn("label", col("id"))
-    var handle: Option[DataFrame] = None
-    var i = 0
-    while (i < iterations) {
-      val next = labels.join(
+    val labels = Iterate.fold(
+        edges.select(col("a").as("id")).distinct()
+          .withColumn("label", col("id")), iterations) { (labels, _) =>
+      labels.join(
           edges.join(labels.select(col("id").as("b"), col("label").as("nl")), "b")
             .groupBy(col("a").as("id")).agg(min(col("nl")).as("min_nbr")),
           Seq("id"), "left")
         .select(col("id"),
           least(col("label"), coalesce(col("min_nbr"), col("label"))).as("label"))
-        .persist()
-      next.count()                            // materialize this round
-      handle.foreach(_.unpersist(blocking = false))
-      // rebase on the persisted blocks: constant-size plan per round
-      labels = next.sparkSession.createDataFrame(next.rdd, next.schema)
-      handle = Some(next)
-      i += 1
-    }
-    val result =
-      if (iterations > 0) {
-        val checkpointed = labels.localCheckpoint()   // eager; cuts lineage
-        handle.foreach(_.unpersist(blocking = false))
-        checkpointed
-      } else labels
+    }.df
     edges.unpersist(blocking = false)
-    result.withColumnRenamed("label", "cluster_id")
+    labels.withColumnRenamed("label", "cluster_id")
   }
 
-  /**
-   * Connected components via alternating large-star/small-star rewiring —
-   * the production variant for graphs whose diameter exceeds any sane
-   * iteration budget (long duplicate chains). Same contract as
-   * [[connectedComponents]]: (id, cluster_id) with cluster_id = component
-   * min. Where plain min-label propagation needs `iterations` ≥ diameter,
-   * star rewiring HALVES tree heights every round and converges in
-   * O(log d) rounds regardless of chain length.
-   *
-   * Per round (edges kept canonically oriented larger→smaller):
-   *   - large-star: every node hooks its LARGER neighbors directly onto
-   *     the min of its neighborhood (min(Γ(u) ∪ u)),
-   *   - small-star: every node hooks its smaller neighbors + itself onto
-   *     that min.
-   * Each op is one hash-agg (per-node min) + one join (re-emit edges) —
-   * shuffle volume O(edges); nothing quadratic, no transitive closure
-   * materialized. One round = smallStar∘largeStar composed LAZILY and
-   * materialized once: the intra-round intermediate only re-reads the
-   * cached previous edge set (cheap at any scale), so each round costs a
-   * single job instead of three. Convergence = the edge set reaches a
-   * fixed point, detected by (count, Σ xxhash64(u,v)) riding the round's
-   * materializing aggregate — zero extra jobs; with equal counts a
-   * differing set escapes detection only on a 2⁻⁶⁴ checksum collision
-   * (and a false positive still yields star-shaped near-final edges, not
-   * arbitrary garbage). Persistence discipline matches
-   * [[connectedComponents]]: eager rounds, rolling release,
-   * localCheckpoint on return so callers own nothing.
-   */
   /**
    * INCREMENTAL connected-components maintenance: fold a batch of new
    * dup pairs into an existing (id, cluster_id) assignment WITHOUT
@@ -878,6 +829,34 @@ object DedupOps {
     remapped.unionByName(fresh)
   }
 
+  /**
+   * Connected components via alternating large-star/small-star rewiring —
+   * the production variant for graphs whose diameter exceeds any sane
+   * iteration budget (long duplicate chains). Same contract as
+   * [[connectedComponents]]: (id, cluster_id) with cluster_id = component
+   * min. Where plain min-label propagation needs `iterations` ≥ diameter,
+   * star rewiring HALVES tree heights every round and converges in
+   * O(log d) rounds regardless of chain length.
+   *
+   * Per round (edges kept canonically oriented larger→smaller):
+   *   - large-star: every node hooks its LARGER neighbors directly onto
+   *     the min of its neighborhood (min(Γ(u) ∪ u)),
+   *   - small-star: every node hooks its smaller neighbors + itself onto
+   *     that min.
+   * Each op is one hash-agg (per-node min) + one join (re-emit edges) —
+   * shuffle volume O(edges); nothing quadratic, no transitive closure
+   * materialized. One round = smallStar∘largeStar composed LAZILY and
+   * materialized once: the intra-round intermediate only re-reads the
+   * previous round's cut edge set (cheap at any scale), so each round
+   * costs a single job instead of three. Convergence = the edge set reaches a
+   * fixed point, detected by (count, Σ xxhash64(u,v)) riding the round's
+   * materializing aggregate — zero extra jobs; with equal counts a
+   * differing set escapes detection only on a 2⁻⁶⁴ checksum collision
+   * (and a false positive still yields star-shaped near-final edges, not
+   * arbitrary garbage). Persistence discipline matches
+   * [[connectedComponents]]: eager [[Iterate]] cuts, rolling release, a
+   * cut result so callers own nothing.
+   */
   def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
     val nodes = pairs.select(col("id1").as("id"))
       .unionByName(pairs.select(col("id2").as("id"))).distinct()
@@ -904,39 +883,34 @@ object DedupOps {
 
     // Each round references the previous round's frame several times, so an
     // un-cut plan tree grows ~4× per round — O(4^rounds) nodes, a driver
-    // OOM in plan stringification long before any data moves. persist()
-    // alone does NOT truncate the logical plan; rebasing the next round on
-    // the persisted RDD does (LogicalRDD leaf), while the persisted
-    // original stays available as an explicit unpersist handle. The
-    // materializing action is a (count, checksum) aggregate — the checksum
-    // doubles as the fixed-point probe, so no extra per-round job. ANSI
-    // overflow-safe: the hash sum rides an unbounded decimal.
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame, Long, java.math.BigDecimal) = {
-      val p = df.persist()
-      val row = p.agg(count(lit(1)).as("n"),
+    // OOM in plan stringification long before any data moves; every round
+    // is an [[Iterate]] cut. The (count, checksum) aggregate is the cut's
+    // probe — the materializing job itself — so the fixed-point test adds
+    // no per-round job. ANSI overflow-safe: the hash sum rides an
+    // unbounded decimal.
+    def fingerprint(e: DataFrame): (Long, BigDecimal) = {
+      val row = e.agg(count(lit(1)).as("n"),
         sum(xxhash64(col("u"), col("v")).cast("decimal(38,0)")).as("chk")).head()
-      val chk = if (row.isNullAt(1)) java.math.BigDecimal.ZERO else row.getDecimal(1)
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p, row.getLong(0), chk)
+      (row.getLong(0),
+        if (row.isNullAt(1)) BigDecimal(0) else BigDecimal(row.getDecimal(1)))
     }
 
-    var (edges, edgesHandle, edgeCount, edgeChk) = materializeCut(
+    var (edges, fp) = Iterate.cut(
       pairs.filter(col("id1") =!= col("id2"))
         .select(greatest(col("id1"), col("id2")).as("u"),
           least(col("id1"), col("id2")).as("v"))
-        .distinct())
-    var converged = edgeCount == 0L
+        .distinct(), fingerprint)
+    var converged = fp._1 == 0L
     var round = 0
     while (!converged && round < maxRounds) {
       // one lazy composed round, one materializing job; the doubled
-      // references inside each star op re-read the CACHED previous edges
-      val (next, nextHandle, nextCount, nextChk) =
-        materializeCut(smallStar(largeStar(edges)))
-      converged = nextCount == edgeCount && nextChk.compareTo(edgeChk) == 0
-      edgesHandle.unpersist(blocking = false)
+      // references inside each star op re-read the previous round's cut
+      val (next, nextFp) =
+        Iterate.cut(smallStar(largeStar(edges.df)), fingerprint)
+      converged = nextFp == fp
+      edges.release()
       edges = next
-      edgesHandle = nextHandle
-      edgeCount = nextCount
-      edgeChk = nextChk
+      fp = nextFp
       round += 1
     }
     // the doc advertises O(log d) convergence — if the round budget ran out
@@ -945,15 +919,14 @@ object DedupOps {
     if (!converged)
       throw new IllegalStateException(
         s"connectedComponentsStar did not converge in $maxRounds rounds " +
-          s"($edgeCount edges remain in motion); raise maxRounds")
+          s"(${fp._1} edges remain in motion); raise maxRounds")
     // converged edges form stars (child → component min); roots and
     // isolated nodes label themselves
-    val childLabel = edges.groupBy(col("u").as("id")).agg(min(col("v")).as("lbl"))
-    val labels = nodes.join(childLabel, Seq("id"), "left")
-      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id"))
-    val result = labels.localCheckpoint()
-    edgesHandle.unpersist(blocking = false)
-    result
+    val childLabel = edges.df.groupBy(col("u").as("id")).agg(min(col("v")).as("lbl"))
+    val labels = Iterate.cut(nodes.join(childLabel, Seq("id"), "left")
+      .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id")))
+    edges.release()
+    labels.df
   }
 
   /** Exact Jaccard of two texts' shingle sets as a single expression —

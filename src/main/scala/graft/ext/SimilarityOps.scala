@@ -1,6 +1,7 @@
 package graft.ext
 
 import graft.functions.GraftFunctions
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -1249,33 +1250,6 @@ object SimilarityOps {
     pos.join(neg, "anchor_id")
   }
 
-  /**
-   * MMR (Maximal Marginal Relevance) DIVERSITY re-rank — the retrieval
-   * finisher plain top-k lacks: a dense dup cluster fills all k slots
-   * with one answer restated k times; MMR greedily picks
-   * argmax λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s), so each pick is
-   * penalized by its similarity to what's ALREADY selected. The RAG
-   * context-packing and eval-set-diversification primitive (λ = 1 is
-   * plain relevance; λ ~ 0.7 the usual operating point).
-   *
-   * Two stages: (1) the relevance POOL — [[cosineTopK]]'s bounded-heap
-   * top-`pool` per query (the corpus-sized work, done once); (2) `k`
-   * greedy rounds over the pool only. Pick 1 is pure relevance (empty
-   * S has nothing to be redundant with; `mmr` = `rel` there). Emits
-   * (query_id, neighbor_id, rel, mmr, pick 1..k), ties (score desc,
-   * id asc) at every argmax.
-   *
-   * Determinism: rel and every pairwise sim are 6dp-rounded BEFORE any
-   * decision; the λ-blend is one pinned double expression on rounded
-   * inputs; argmax ties break on id — the greedy path is replayable by
-   * SQL round-unrolling.
-   *
-   * Scale: the pool join + per-round work is |Q|·pool·k rows — corpus
-   * cost is exactly one cosineTopK (corpus never shuffles, heap-pruned
-   * exchange); each round joins the remaining pool against the ≤ k-row
-   * selected set per query (broadcast) and localCheckpoints the tiny
-   * selection, keeping plans constant-depth.
-   */
   /** Cosine with DECIMAL-summed components — bit-exact in ANY engine at
     * any summation order (each product is one double multiply of the
     * same floats, 9dp-rounded, then an order-invariant decimal sum),
@@ -1330,14 +1304,16 @@ object SimilarityOps {
       .persist()
     val sums = (1 to dims).map(i =>
       sum(round(col(s"x$i"), 9).cast(dec)).as(s"s$i"))
-    // checkpointed for the same reason as the loop below: round 1 reads
-    // the seed estimate twice
-    var m = base.groupBy("label")
+    // Every estimate is an [[Iterate]] cut: each round reads m TWICE (the
+    // broadcast to the points and the keep-on-degenerate join), so without
+    // the cut the plan doubles per round and round r re-executes ~2^r
+    // copies of the point aggregate; m is |labels| rows, so the cut is
+    // ~free.
+    val seed = base.groupBy("label")
       .agg(count(lit(1)).as("n"), sums: _*)
       .select(col("label") +: (1 to dims).map(i =>
         round(col(s"s$i").cast("double") / col("n"), 6).as(s"m$i")): _*)
-      .localCheckpoint()
-    for (_ <- 1 to rounds) {
+    val m = Iterate.fold(seed, rounds) { (m, _) =>
       val j = base.join(broadcast(m), "label")
       val dist = sqrt((1 to dims).map(i =>
         (col(s"x$i") - col(s"m$i")) * (col(s"x$i") - col(s"m$i")))
@@ -1356,20 +1332,41 @@ object SimilarityOps {
       // a label whose every point coincides with the estimate has no
       // dd > 0 contributions — it KEEPS the estimate (it IS the
       // median), rather than vanishing from the output.
-      // Per-round localCheckpoint (the graph-family discipline): each
-      // round reads m TWICE (the broadcast to the points and the
-      // keep-on-degenerate join), so without the cut the plan doubles
-      // per round and round r re-executes ~2^r copies of the point
-      // aggregate; m is |labels| rows, so the cut is ~free.
-      m = m.join(upd, Seq("label"), "left")
+      m.join(upd, Seq("label"), "left")
         .select(col("label") +: (1 to dims).map(i =>
           coalesce(col(s"u$i"), col(s"m$i")).as(s"m$i")): _*)
-        .localCheckpoint()
-    }
+    }.df
     base.unpersist(blocking = false)
     m
   }
 
+  /**
+   * MMR (Maximal Marginal Relevance) DIVERSITY re-rank — the retrieval
+   * finisher plain top-k lacks: a dense dup cluster fills all k slots
+   * with one answer restated k times; MMR greedily picks
+   * argmax λ·rel(c) − (1−λ)·max_{s∈S} sim(c, s), so each pick is
+   * penalized by its similarity to what's ALREADY selected. The RAG
+   * context-packing and eval-set-diversification primitive (λ = 1 is
+   * plain relevance; λ ~ 0.7 the usual operating point).
+   *
+   * Two stages: (1) the relevance POOL — [[cosineTopK]]'s bounded-heap
+   * top-`pool` per query (the corpus-sized work, done once); (2) `k`
+   * greedy rounds over the pool only. Pick 1 is pure relevance (empty
+   * S has nothing to be redundant with; `mmr` = `rel` there). Emits
+   * (query_id, neighbor_id, rel, mmr, pick 1..k), ties (score desc,
+   * id asc) at every argmax.
+   *
+   * Determinism: rel and every pairwise sim are 6dp-rounded BEFORE any
+   * decision; the λ-blend is one pinned double expression on rounded
+   * inputs; argmax ties break on id — the greedy path is replayable by
+   * SQL round-unrolling.
+   *
+   * Scale: the pool join + per-round work is |Q|·pool·k rows — corpus
+   * cost is exactly one cosineTopK (corpus never shuffles, heap-pruned
+   * exchange); each round joins the remaining pool against the ≤ k-row
+   * selected set per query (broadcast) and cuts the tiny selection with
+   * [[graft.ops.Iterate]], keeping plans constant-depth.
+   */
   def mmrRerank(queries: DataFrame, corpus: DataFrame, idCol: String,
                 vecCol: String, pool: Int, k: Int,
                 lambda: Double): DataFrame = {
@@ -1392,13 +1389,13 @@ object SimilarityOps {
     require(k >= 1, s"bad k $k")
     require(lambda >= 0.0 && lambda <= 1.0, s"bad lambda $lambda")
     val cands = pool.persist()
-    var selected = cands.groupBy("query_id")
+    val first = cands.groupBy("query_id")
       .agg(max(struct(col("rel"), (-col("neighbor_id")).as("ni"))).as("b"))
       .select(col("query_id"), (-col("b.ni")).as("neighbor_id"),
         col("b.rel").as("rel"), col("b.rel").as("mmr"),
         lit(1).as("pick"))
-      .localCheckpoint()
-    for (step <- 2 to k) {
+    // round r of the fold makes pick r + 1; every selection is a cut
+    val selected = Iterate.fold(first, k - 1) { (selected, r) =>
       val selVec = selected.select(col("query_id"),
           col("neighbor_id").as("sel_id"))
         .join(cands.select(col("query_id"),
@@ -1426,9 +1423,9 @@ object SimilarityOps {
           col("rel"))).as("b"))
         .select(col("query_id"), (-col("b.ni")).as("neighbor_id"),
           col("b.rel").as("rel"), col("b.mmr").as("mmr"),
-          lit(step).as("pick"))
-      selected = selected.unionByName(next).localCheckpoint()
-    }
+          lit(r + 1).as("pick"))
+      selected.unionByName(next)
+    }.df
     cands.unpersist(blocking = false)
     selected
   }

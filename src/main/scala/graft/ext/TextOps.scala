@@ -1,5 +1,6 @@
 package graft.ext
 
+import graft.ops.Iterate
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,9 +44,9 @@ object TextOps {
    *
    * Scale: ONE corpus-token-cardinality shuffle builds the weighted
    * vocabulary; every training round then aggregates the vocabulary-sized
-   * frame (persisted, rebased per round) and collects a bounded winning-
-   * pair set — a model artifact, like centroids. Returns merge rules in
-   * priority order, for [[subwordCountBpe]].
+   * frame (a [[graft.ops.Iterate]] cut per round) and collects a bounded
+   * winning-pair set — a model artifact, like centroids. Returns merge
+   * rules in priority order, for [[subwordCountBpe]].
    *
    * Production merge counts (32k) make round count the wall-clock driver,
    * so two standard levers are first-class:
@@ -64,21 +65,20 @@ object TextOps {
                      batch: Int = 1): Seq[String] = {
     require(nMerges >= 1, s"nMerges must be positive, got $nMerges")
     require(batch >= 1, s"batch must be positive, got $batch")
-    var vocab = df.filter(col(textCol).isNotNull)
+    // every vocab generation is an Iterate cut: constant-depth plans
+    var vocab = Iterate.cut(df.filter(col(textCol).isNotNull)
       .select(explode(tokens(col(textCol))).as("w"))
       .filter(col("w") =!= "")
       .groupBy("w").agg(count(lit(1)).as("freq"))
       .select(col("freq"),
-        concat(lit("."), regexp_replace(col("w"), "(.)", "$1.")).as("st"))
-      .persist()
-    vocab.count()
+        concat(lit("."), regexp_replace(col("w"), "(.)", "$1.")).as("st")))
     val merges = scala.collection.mutable.ArrayBuffer.empty[String]
     var exhausted = false
     while (merges.length < nMerges && !exhausted) {
       val b = math.min(batch, nMerges - merges.length)
       // tokens of ".a.b.c." split on '.' sit at 1-based positions
       // 2..size-1 (leading/trailing empties kept by both engines)
-      val pairCounts = vocab
+      val pairCounts = vocab.df
         .select(col("freq"), split(col("st"), "\\.").as("tk"))
         .filter(size(col("tk")) >= 4)
         .select(col("freq"), explode(expr(
@@ -125,17 +125,16 @@ object TextOps {
       if (selected.isEmpty) exhausted = true
       else {
         merges ++= selected
-        val next = vocab.select(col("freq"),
+        val next = Iterate.cut(vocab.df.select(col("freq"),
           selected.foldLeft(col("st")) { (st, m) =>
             call_function("replace", st, lit(m),
               lit("." + m.replace(".", "") + "."))
-          }.as("st")).persist()
-        next.count()
-        vocab.unpersist(blocking = false)
+          }.as("st")))
+        vocab.release()
         vocab = next
       }
     }
-    vocab.unpersist(blocking = false)
+    vocab.release()
     merges.toSeq
   }
 

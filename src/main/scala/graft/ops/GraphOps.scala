@@ -77,8 +77,8 @@ object GraphOps {
     new PreparedGraph(edges, src, dst)
 
   /** One-shot wrapper: run `body` against a throwaway artifact, release
-    * it after the result has been cut loose (every family member ends in
-    * `localCheckpoint`, so unpersisting afterwards is safe). The
+    * it after the result has been cut loose (every family member returns
+    * an [[Iterate]] cut, so unpersisting afterwards is safe). The
     * unpersist can evict a LIVE shared artifact's caches when both were
     * built over plan-identical edges — see the [[PreparedGraph]] caveat. */
   private def withPrepared(edges: DataFrame, src: String, dst: String)(
@@ -133,32 +133,6 @@ object GraphOps {
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
   }
 
-  /**
-   * PageRank over an undirected edge list, in SCALED-INTEGER fixed-point
-   * arithmetic: ranks live in units of 10⁻¹² (initial rank = 10¹², the
-   * damping step is `0.15·10¹² + (85 · Σ contrib) div 100` with integral
-   * division). Floating-point PageRank is order-of-summation dependent —
-   * a distributed group-sum of doubles is not reproducible run-to-run,
-   * let alone across engines; integer contributions make every iteration
-   * exact, deterministic, and oracle-checkable bit-for-bit. The floor
-   * divisions lose < deg·10⁻¹² per node per round — noise at rank scale.
-   *
-   * Per iteration: one join of ranks onto the degree-annotated directed
-   * edge list + one hash agg — the standard distributed PageRank round,
-   * O(edges) shuffle, no driver data. Edges are canonicalized and doubled
-   * (u→v, v→u), so every node has out-degree ≥ 1 and the dangling-mass
-   * term vanishes.
-   *
-   * Iterations MATERIALIZE: the edge list + node set are derived once and
-   * cached, and each round's ranks are persisted and rebased onto the
-   * persisted RDD (`LogicalRDD` leaf) — the discipline of
-   * [[graft.ext.DedupOps.connectedComponentsStar]]. A lazily-composed loop
-   * embeds all i−1 predecessor plans inside iteration i's, so total work
-   * is O(iters²) re-executions of the edge join and the plan tree itself
-   * outgrows the driver at high iteration counts; per-round cuts make
-   * every round O(edges) and the plan O(1)-deep regardless of `iterations`.
-   * The returned frame is localCheckpoint-ed so callers own no cache.
-   */
   /**
    * Per-cluster modularity terms of a node→cluster assignment against an
    * undirected edge list — the standard quality score for a dedup
@@ -274,8 +248,8 @@ object GraphOps {
    * "given these known-bad/known-gold docs, rank everything by how close
    * it sits in the duplicate graph". Initial rank 10¹² on seeds, 0
    * elsewhere; round: pr = [seed]·0.15·10¹² + 0.85·Σ contrib (integer
-   * div). Same per-round persist/rebase discipline — O(edges) per round,
-   * O(1)-deep plans at any iteration count.
+   * div). Same per-round [[Iterate]] cut — O(edges) per round, O(1)-deep
+   * plans at any iteration count.
    */
   def personalizedPageRankScaled(edges: DataFrame, src: String, dst: String,
                                  seeds: DataFrame, seedCol: String,
@@ -306,49 +280,18 @@ object GraphOps {
     val eSeed = g.biDeg
       .join(nodes.select(col("node").as("v"), col("is_seed")), "v")
       .persist()
-    var (pr, prRelease) = checkpointCut(
-      nodes.withColumn("pr", col("is_seed") * lit(1000000000000L))
-        .select("node", "pr"))
-    for (_ <- 1 to iterations) {
-      val (next, nextRelease) = checkpointCut(
-        eSeed.join(pr, eSeed("u") === pr("node"))
-          .selectExpr("v AS node", "is_seed", "pr div deg AS c")
-          .groupBy("node", "is_seed").agg(sum(col("c")).as("s"))
-          .selectExpr("node",
-            "is_seed * 150000000000 + (85 * s) div 100 AS pr"))
-      prRelease()
-      pr = next
-      prRelease = nextRelease
-    }
-    // pr is already lineage-cut; its blocks are released by the
-    // ContextCleaner once the caller drops the frame (the
-    // [[graft.ext.DedupOps.connectedComponents]] return discipline) —
-    // the final release thunk is deliberately NOT invoked.
+    val pr = Iterate.fold(
+        nodes.withColumn("pr", col("is_seed") * lit(1000000000000L))
+          .select("node", "pr"), iterations) { (pr, _) =>
+      eSeed.join(pr, eSeed("u") === pr("node"))
+        .selectExpr("v AS node", "is_seed", "pr div deg AS c")
+        .groupBy("node", "is_seed").agg(sum(col("c")).as("s"))
+        .selectExpr("node",
+          "is_seed * 150000000000 + (85 * s) div 100 AS pr")
+    }.df
     eSeed.unpersist(blocking = false)
     nodes.unpersist(blocking = false)
     pr
-  }
-
-  /** Materialize one iteration's frame and TRULY cut its lineage:
-    * eager `localCheckpoint` truncates both the logical plan AND the
-    * physical RDD dependency chain. persist()+rdd-rebase (the
-    * [[graft.ext.DedupOps.connectedComponentsStar]] materializeCut)
-    * truncates only the logical plan — each round's serialized task
-    * binary still references the full RDD object graph of every
-    * previous round (ShuffleDependency links are not pruned at stage
-    * boundaries), and ~50 accumulated rounds overflow the task
-    * DESERIALIZER's stack (pinned by CdcStatsSpec's 50-iteration
-    * PageRank test). Returns the checkpointed frame plus a release
-    * thunk that frees the checkpoint blocks (the LogicalRDD leaf's
-    * RDD) once the next round has materialized. */
-  private def checkpointCut(df: DataFrame): (DataFrame, () => Unit) = {
-    val p = df.localCheckpoint()
-    val release = () => p.queryExecution.analyzed.foreach {
-      case l: org.apache.spark.sql.execution.LogicalRDD =>
-        l.rdd.unpersist(false)
-      case _ =>
-    }
-    (p, release)
   }
 
   /**
@@ -362,9 +305,8 @@ object GraphOps {
    *
    * Each round is one broadcast-or-shuffle semi-join of the static doubled
    * edge list against the (shrinking) survivor set plus one count
-   * aggregation — O(edges) per round. Survivor sets are persisted and
-   * plan-rebased per round ([[graft.ext.DedupOps.connectedComponentsStar]]
-   * discipline): without the cut, round i's plan embeds all i−1
+   * aggregation — O(edges) per round. Survivor sets are cut per round
+   * by [[Iterate]]: without the cut, round i's plan embeds all i−1
    * predecessors and the loop degenerates to O(rounds²) edge scans.
    */
   def kCoreBounded(edges: DataFrame, src: String, dst: String,
@@ -377,34 +319,41 @@ object GraphOps {
   def kCoreBounded(g: PreparedGraph, k: Int, rounds: Int): DataFrame = {
     require(k >= 1 && rounds >= 1 && rounds <= 50,
       s"bad k=$k rounds=$rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (s, sHandle) =
-      materializeCut(g.bi.select(col("u").as("n")).distinct())
-    for (_ <- 1 to rounds) {
-      val surv = g.bi
-        .join(s.select(col("n").as("u")), "u")
-        .join(s.select(col("n").as("v")), "v")
-        .groupBy(col("u").as("n")).agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k)
-        .select("n")
-      val (next, nextHandle) = materializeCut(surv)
-      sHandle.unpersist(blocking = false)
-      s = next
-      sHandle = nextHandle
-    }
-    val out = g.bi
+    // degree of every survivor inside the survivor set s
+    def degIn(s: DataFrame, node: String) = g.bi
       .join(s.select(col("n").as("u")), "u")
       .join(s.select(col("n").as("v")), "v")
-      .groupBy(col("u").as("node")).agg(count(lit(1)).as("deg"))
-      .localCheckpoint()
-    sHandle.unpersist(blocking = false)
-    out
+      .groupBy(col("u").as(node)).agg(count(lit(1)).as("deg"))
+    val s = Iterate.fold(g.bi.select(col("u").as("n")).distinct(), rounds) {
+      (s, _) => degIn(s, "n").filter(col("deg") >= k).select("n")
+    }
+    val out = Iterate.cut(degIn(s.df, "node"))
+    s.release()
+    out.df
   }
 
+  /**
+   * PageRank over an undirected edge list, in SCALED-INTEGER fixed-point
+   * arithmetic: ranks live in units of 10⁻¹² (initial rank = 10¹², the
+   * damping step is `0.15·10¹² + (85 · Σ contrib) div 100` with integral
+   * division). Floating-point PageRank is order-of-summation dependent —
+   * a distributed group-sum of doubles is not reproducible run-to-run,
+   * let alone across engines; integer contributions make every iteration
+   * exact, deterministic, and oracle-checkable bit-for-bit. The floor
+   * divisions lose < deg·10⁻¹² per node per round — noise at rank scale.
+   *
+   * Per iteration: one join of ranks onto the degree-annotated directed
+   * edge list + one hash agg — the standard distributed PageRank round,
+   * O(edges) shuffle, no driver data. Edges are canonicalized and doubled
+   * (u→v, v→u), so every node has out-degree ≥ 1 and the dangling-mass
+   * term vanishes.
+   *
+   * Iterations MATERIALIZE: the edge list + node set are derived once and
+   * cached, and every round's ranks are cut by [[Iterate]] (checkpointed,
+   * plan and RDD lineage truncated), so every round is O(edges) and the
+   * plan O(1)-deep regardless of `iterations`. The returned frame is the
+   * last round's checkpoint, so callers own no cache.
+   */
   def pageRankScaled(edges: DataFrame, src: String, dst: String,
                      iterations: Int): DataFrame =
     withPrepared(edges, src, dst)(pageRankScaled(_, iterations))
@@ -414,30 +363,18 @@ object GraphOps {
     * once across the whole graph-query family. */
   def pageRankScaled(g: PreparedGraph, iterations: Int): DataFrame = {
     require(iterations >= 1 && iterations <= 50, s"bad iterations $iterations")
-    // Rounds materialize via [[checkpointCut]] (eager localCheckpoint):
-    // a TRUE lineage cut per round — see its scaladoc for why the
-    // persist+rdd-rebase form is not enough here. No per-round left-join
-    // back onto `nodes`: bi is symmetric, so contrib already covers
-    // every node and the coalesce(s, 0) branch was dead — one join (two
-    // exchanges plus a pass over the node set) gone per round at any
-    // scale.
-    var (pr, prRelease) = checkpointCut(
-      g.nodes.withColumn("pr", lit(1000000000000L)))
-    for (_ <- 1 to iterations) {
-      val (next, nextRelease) = checkpointCut(
-        g.biDeg
-          .join(pr, g.biDeg("u") === pr("node"))
-          .selectExpr("v AS node", "pr div deg AS c")
-          .groupBy("node").agg(sum(col("c")).as("s"))
-          .selectExpr("node",
-            "150000000000 + (85 * s) div 100 AS pr"))
-      prRelease()
-      pr = next
-      prRelease = nextRelease
-    }
-    // already lineage-cut; blocks released by the ContextCleaner once
-    // the caller drops the frame
-    pr
+    // No per-round left-join back onto `nodes`: bi is symmetric, so
+    // contrib already covers every node and the coalesce(s, 0) branch
+    // was dead — one join (two exchanges plus a pass over the node set)
+    // gone per round at any scale.
+    Iterate.fold(g.nodes.withColumn("pr", lit(1000000000000L)),
+        iterations) { (pr, _) =>
+      g.biDeg
+        .join(pr, g.biDeg("u") === pr("node"))
+        .selectExpr("v AS node", "pr div deg AS c")
+        .groupBy("node").agg(sum(col("c")).as("s"))
+        .selectExpr("node", "150000000000 + (85 * s) div 100 AS pr")
+    }.df
   }
 
   /**
@@ -458,8 +395,8 @@ object GraphOps {
    * fixed — partition-invariant and replayable by SQL round-unrolling.
    *
    * Scale: per round one neighbor-label equi-join + two hash
-   * aggregations — O(edges) per round; per-round persist/rebase keeps
-   * the plan constant-depth (the [[pageRankScaled]] discipline).
+   * aggregations — O(edges) per round; the per-round [[Iterate]] cut
+   * keeps the plan constant-depth.
    */
   def labelPropagation(edges: DataFrame, src: String, dst: String,
                        rounds: Int): DataFrame =
@@ -468,30 +405,17 @@ object GraphOps {
   /** [[labelPropagation]] off a shared [[PreparedGraph]]. */
   def labelPropagation(g: PreparedGraph, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"bad rounds $rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (labels, handle) = materializeCut(
-      g.nodes.withColumn("label", col("node")))
-    for (_ <- 1 to rounds) {
-      // every node appears as some v (bi is symmetric), so the vote
-      // covers the whole node set — no keep-old-label branch needed
-      val (next, nextHandle) = materializeCut(
+    // every node appears as some v (bi is symmetric), so the vote
+    // covers the whole node set — no keep-old-label branch needed
+    Iterate.fold(g.nodes.withColumn("label", col("node")), rounds) {
+      (labels, _) =>
         g.bi.join(labels, g.bi("u") === labels("node"))
           .select(col("v").as("node"), col("label"))
           .groupBy("node", "label").agg(count(lit(1)).as("c"))
           .groupBy("node")
           .agg(max(struct(col("c"), (-col("label")).as("nl"))).as("b"))
-          .select(col("node"), (-col("b.nl")).as("label")))
-      handle.unpersist(blocking = false)
-      labels = next
-      handle = nextHandle
-    }
-    val result = labels.localCheckpoint()
-    handle.unpersist(blocking = false)
-    result
+          .select(col("node"), (-col("b.nl")).as("label"))
+    }.df
   }
 
   /**
@@ -568,7 +492,7 @@ object GraphOps {
    *
    * Scale: per round one frontier-neighbor equi-join + a min
    * aggregate — O(edges) per round like [[labelPropagation]]; the
-   * per-round persist/rebase keeps the plan constant-depth, and state
+   * per-round [[Iterate]] cut keeps the plan constant-depth, and state
    * is one (node, hop) row per reached node, never per path.
    */
   def bfsHops(edges: DataFrame, src: String, dst: String,
@@ -579,28 +503,15 @@ object GraphOps {
   def bfsHops(g: PreparedGraph,
               seeds: DataFrame, seedCol: String, rounds: Int): DataFrame = {
     require(rounds >= 1 && rounds <= 50, s"bad rounds $rounds")
-    def materializeCut(df: DataFrame): (DataFrame, DataFrame) = {
-      val p = df.persist()
-      p.count()
-      (p.sparkSession.createDataFrame(p.rdd, p.schema), p)
-    }
-    var (dist, handle) = materializeCut(
-      seeds.select(col(seedCol).as("node")).distinct()
-        .filter(col("node").isNotNull)
-        .withColumn("hop", lit(0L)))
-    for (_ <- 1 to rounds) {
-      val (next, nextHandle) = materializeCut(
-        g.bi.join(dist, g.bi("u") === dist("node"))
-          .select(col("v").as("node"), (col("hop") + 1).as("hop"))
-          .unionAll(dist.select(col("node"), col("hop")))
-          .groupBy("node").agg(min(col("hop")).as("hop")))
-      handle.unpersist(blocking = false)
-      dist = next
-      handle = nextHandle
-    }
-    val result = dist.localCheckpoint()
-    handle.unpersist(blocking = false)
-    result
+    Iterate.fold(
+        seeds.select(col(seedCol).as("node")).distinct()
+          .filter(col("node").isNotNull)
+          .withColumn("hop", lit(0L)), rounds) { (dist, _) =>
+      g.bi.join(dist, g.bi("u") === dist("node"))
+        .select(col("v").as("node"), (col("hop") + 1).as("hop"))
+        .unionAll(dist.select(col("node"), col("hop")))
+        .groupBy("node").agg(min(col("hop")).as("hop"))
+    }.df
   }
 
   /**
@@ -662,28 +573,6 @@ object GraphOps {
   }
 
   /**
-   * ADAMIC–ADAR link prediction — for every NON-adjacent node pair at
-   * distance 2, the classic common-neighbor score
-   * `aa = Σ_w 1/ln(deg(w))` over their common neighbors w (rare shared
-   * neighbors are strong evidence, hub co-membership is weak). On a dup
-   * graph this ranks the pairs the pairwise tiers MISSED: two docs that
-   * never collided directly but share near-dup neighbors are the
-   * transitive-duplicate candidates worth re-verifying — the
-   * link-prediction face of connected components (CC merges what IS
-   * connected; this scores what PROBABLY SHOULD be).
-   *
-   * Emits (u, v, n_common, aa_score 6dp), u < v, existing edges
-   * excluded. Deterministic: per-center terms 6dp-rounded then
-   * DECIMAL-summed (order-invariant), one final double round.
-   *
-   * Scale: wedge enumeration per CENTER node — volume Σ deg(w)², with
-   * `maxCenterDegree` capping hub centers exactly like the df-caps on
-   * the shingle tiers (a hub's 1/ln(deg) term is the weakest evidence
-   * in the formula AND its wedge volume is quadratic — dropping it cuts
-   * the blowup while biasing scores DOWN only, never inventing a pair).
-   * Two hash joins + one hash agg + one anti-join; never all-pairs.
-   */
-  /**
    * LOCAL CLUSTERING COEFFICIENTS — per node with degree ≥ 2, the
    * fraction of its neighbor pairs that are themselves connected:
    * `2·triangles(v) / (deg(v)·(deg(v)−1))`. The community-density lens
@@ -721,6 +610,28 @@ object GraphOps {
           .as("clustering_coeff"))
   }
 
+  /**
+   * ADAMIC–ADAR link prediction — for every NON-adjacent node pair at
+   * distance 2, the classic common-neighbor score
+   * `aa = Σ_w 1/ln(deg(w))` over their common neighbors w (rare shared
+   * neighbors are strong evidence, hub co-membership is weak). On a dup
+   * graph this ranks the pairs the pairwise tiers MISSED: two docs that
+   * never collided directly but share near-dup neighbors are the
+   * transitive-duplicate candidates worth re-verifying — the
+   * link-prediction face of connected components (CC merges what IS
+   * connected; this scores what PROBABLY SHOULD be).
+   *
+   * Emits (u, v, n_common, aa_score 6dp), u < v, existing edges
+   * excluded. Deterministic: per-center terms 6dp-rounded then
+   * DECIMAL-summed (order-invariant), one final double round.
+   *
+   * Scale: wedge enumeration per CENTER node — volume Σ deg(w)², with
+   * `maxCenterDegree` capping hub centers exactly like the df-caps on
+   * the shingle tiers (a hub's 1/ln(deg) term is the weakest evidence
+   * in the formula AND its wedge volume is quadratic — dropping it cuts
+   * the blowup while biasing scores DOWN only, never inventing a pair).
+   * Two hash joins + one hash agg + one anti-join; never all-pairs.
+   */
   def adamicAdar(edges: DataFrame, src: String, dst: String,
                  maxCenterDegree: Int = Int.MaxValue): DataFrame = {
     require(maxCenterDegree >= 2, s"maxCenterDegree $maxCenterDegree < 2")

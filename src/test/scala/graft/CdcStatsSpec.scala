@@ -184,21 +184,59 @@ class CdcStatsSpec extends SparkSpec {
     } finally g.unpersist()
   }
 
-  test("pageRankScaled: 50 iterations stay cheap (per-round persist/rebase)") {
-    // WITHOUT the per-round LogicalRDD rebase, iteration i's plan embeds
-    // all i−1 predecessors — O(iters²) re-executions of the edge join and
-    // a plan tree that outgrows the driver at high iteration counts.
-    // Completing all 50 rounds promptly, with the symmetric triangle still
-    // at its exact integer fixed point and the hub still dominant, proves
-    // each round ran O(edges) off the persisted previous ranks.
+  test("graph operators complete 50 rounds with exact results") {
+    import graft.ops.GraphOps
+    // 50 rounds is the cap every bounded graph operator allows. Each round
+    // must cut BOTH the plan and the RDD chain: a lazily composed loop
+    // re-executes every predecessor, and a plan-only cut still ships the
+    // whole RDD chain in each task binary, whose deserialization overflows
+    // the stack around round 50.
     val edges = ((2L to 21L).map(l => (1L, l)) ++
       Seq((100L, 101L), (101L, 102L), (100L, 102L))).toDF("s", "t")
-    val pr = graft.ops.GraphOps.pageRankScaled(edges, "s", "t", 50)
+    val pr = GraphOps.pageRankScaled(edges, "s", "t", 50)
       .orderBy("node").as[(Long, Long)].collect()
     val byNode = pr.toMap
     byNode(100L) shouldBe 1000000000000L +- 50L
     byNode(1L) should be > byNode(2L) * 10
     byNode(2L) shouldBe byNode(21L)
+
+    // a 51-node chain 0-1-…-50, seeded at node 0: the far end is 50 hops out
+    val chain = (0L until 50L).map(i => (i, i + 1)).toDF("s", "t")
+    val seed = Seq(0L).toDF("node")
+    val ppr = GraphOps.personalizedPageRankScaled(
+        chain, "s", "t", seed, "node", 50)
+      .orderBy("node").as[(Long, Long)].collect()
+    ppr.length shouldBe 51
+    // driver-side replay of the same integer recurrence
+    val deg = (0 to 50).map(n => if (n == 0 || n == 50) 1L else 2L)
+    val replay = (1 to 50).foldLeft(
+      (0 to 50).map(n => if (n == 0) 1000000000000L else 0L)) { (r, _) =>
+      (0 to 50).map { v =>
+        val s = Seq(v - 1, v + 1).filter(u => u >= 0 && u <= 50)
+          .map(u => r(u) / deg(u)).sum
+        (if (v == 0) 150000000000L else 0L) + (85 * s) / 100
+      }
+    }
+    ppr.head shouldBe ((0L, replay(0)))
+
+    val bfs = GraphOps.bfsHops(chain, "s", "t", seed, "node", 50)
+      .orderBy("node").as[(Long, Long)].collect()
+    bfs.length shouldBe 51
+    bfs.last shouldBe ((50L, 50L))
+
+    // k = 1 keeps every node of a chain; the ends have degree 1
+    val core = GraphOps.kCoreBounded(chain, "s", "t", k = 1, rounds = 50)
+      .orderBy("node").as[(Long, Long)].collect()
+    core.length shouldBe 51
+    core.head shouldBe ((0L, 1L))
+
+    // synchronous LPA on a bipartite chain oscillates, so no closed form —
+    // but the rounds are exact, so the partitioning cannot matter
+    val lpa = GraphOps.labelPropagation(chain, "s", "t", 50)
+      .orderBy("node").as[(Long, Long)].collect()
+    lpa.length shouldBe 51
+    GraphOps.labelPropagation(chain.repartition(7), "s", "t", 50)
+      .orderBy("node").as[(Long, Long)].collect() shouldBe lpa
   }
 
   test("modularity: disjoint cliques score the clique bound, one-blob scores zero") {

@@ -408,12 +408,12 @@ class DedupOpsSpec extends SparkSpec {
       (10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L))
   }
 
-  test("connectedComponents: 50 iterations stay cheap (plan rebased on the persisted RDD each round)") {
+  test("connectedComponents: 50 iterations close a 51-node chain") {
     // a 51-node chain needs all 50 propagation rounds; each round
-    // references the previous labels twice, so WITHOUT the per-round
-    // LogicalRDD rebase the analyzed plan TREE doubles per round —
-    // analysis alone would walk ~2^50 nodes and never return. Completing
-    // 50 rounds (and producing the right closure) proves the rebase.
+    // references the previous labels twice, so WITHOUT a per-round cut
+    // the analyzed plan TREE doubles per round — analysis alone would
+    // walk ~2^50 nodes and never return. Completing 50 rounds (and
+    // producing the right closure) proves every round was cut.
     val chain = (0L until 50L).map(i => (i, i + 1)).toDF("id1", "id2")
     val cc = DedupOps.connectedComponents(chain, iterations = 50)
     cc.count() shouldBe 51L
