@@ -109,18 +109,20 @@ object ClusterStore {
   private def commit(spark: SparkSession, path: String, asg: DataFrame,
                      pairs: DataFrame, newVersion: Long): Unit = {
     import spark.implicits._
-    // localCheckpoint: materialize BEFORE the swap renames the live dirs
-    // this plan might read (append's merged/unioned frames scan them)
-    val asgM = asg.select(col("id").cast("long"),
-      col("cluster_id").cast("long")).localCheckpoint()
-    val pairsM = pairs.localCheckpoint()
-    val nPairs = pairsM.count()
-    val nNodes = asgM.count()
+    // append's merged/unioned frames scan the live dirs; both writes finish
+    // inside the swap's build, before any rename touches those dirs. The
+    // meta counts ride the two writes as Observations — no extra jobs.
+    val nodesObs, pairsObs = new org.apache.spark.sql.Observation()
     graft.sources.TreeSwap.swap(spark, path, ".next", ".prev",
         Marker) { tmp =>
-      asgM.write.parquet(s"$tmp/assignment")
-      pairsM.write.parquet(s"$tmp/pairs")
-      Seq((newVersion, nPairs, nNodes)).toDF("version", "n_pairs", "n_nodes")
+      asg.select(col("id").cast("long"), col("cluster_id").cast("long"))
+        .observe(nodesObs, count(lit(1)).as("n"))
+        .write.parquet(s"$tmp/assignment")
+      pairs.observe(pairsObs, count(lit(1)).as("n"))
+        .write.parquet(s"$tmp/pairs")
+      Seq((newVersion, pairsObs.get("n").asInstanceOf[Long],
+          nodesObs.get("n").asInstanceOf[Long]))
+        .toDF("version", "n_pairs", "n_nodes")
         .write.parquet(s"$tmp/meta")
     }
   }

@@ -28,6 +28,31 @@ object StatsOps {
         .cast("long"))
       .otherwise(lit(null))
 
+  /** Row cap of the grid a driver-side finisher ([[ipfRake]],
+    * [[medianTest]]) collects: their contract is bounded LEVELS, and a
+    * grid past a million cells is a high-cardinality key, not a level set. */
+  private[graft] val FinisherGridCap = 1000000
+
+  /** Collects a finisher's grid, failing with a named contract violation
+    * over [[FinisherGridCap]] rows instead of risking a driver OOM. The cap
+    * rides the collect as a LIMIT cap + 1 — no separate counting job. */
+  private def collectGrid(grid: DataFrame, op: String): Array[org.apache.spark.sql.Row] = {
+    val rows = grid.limit(FinisherGridCap + 1).collect()
+    if (rows.length > FinisherGridCap)
+      throw new IllegalArgumentException(
+        s"$op: bounded-levels contract violated — the collected grid exceeds " +
+          s"$FinisherGridCap cells; its key columns are not bounded levels")
+    rows
+  }
+
+  /** A collected key as a driver-side grouping key: BinaryType values
+    * collect as Array[Byte], whose equality is by reference, so two
+    * content-equal keys would form two groups where Spark forms one. */
+  private def contentKey(v: Any): Any = v match {
+    case b: Array[Byte] => b.toSeq
+    case x => x
+  }
+
   /**
    * Winsorize `valueCol` per `group`: clip to the exact [`lo`, `hi`]
    * quantiles of the group's own distribution (bounds rounded to 6 dp so
@@ -235,7 +260,8 @@ object StatsOps {
    * order never touches a weight); ratios are single divisions.
    *
    * Scale: the corpus streams ONCE into the |A|×|B| observed-cell
-   * aggregate (bounded LEVELS are the contract, as for chi²); the
+   * aggregate (bounded LEVELS are the contract, as for chi², enforced at
+   * [[FinisherGridCap]] cells); the
    * Deming–Stephan sweeps then run DRIVER-SIDE on the collected grid —
    * a bounded post-aggregation model artifact, the distributedNtiles /
    * transition-grid class — in arithmetic that mirrors the engine
@@ -256,7 +282,7 @@ object StatsOps {
       .filter(col(aCol).isNotNull && col(bCol).isNotNull)
       .groupBy(col(aCol).as("a"), col(bCol).as("b"))
       .agg(count(lit(1)).as("n_cell"))
-    val grid = cells.collect()
+    val grid = collectGrid(cells, "ipfRake")
     val outSchema = org.apache.spark.sql.types.StructType(
       cells.schema.fields.take(2) ++ Seq(
         org.apache.spark.sql.types.StructField("n_cell",
@@ -270,8 +296,8 @@ object StatsOps {
       return spark.createDataFrame(
         Seq.empty[org.apache.spark.sql.Row].asJava, outSchema)
     }
-    val a = grid.map(_.get(0))
-    val b = grid.map(_.get(1))
+    val a = grid.map(r => contentKey(r.get(0)))
+    val b = grid.map(r => contentKey(r.get(1)))
     val nCell = grid.map(_.getLong(2))
     val n = nCell.sum.toDouble
     val ka = a.distinct.length.toDouble
@@ -307,14 +333,14 @@ object StatsOps {
       w = Array.tabulate(w.length)(i => requantize(w(i), k, sums(keys(i))))
     }
     for (_ <- 1 to rounds) {
-      sweep(a.asInstanceOf[Array[Any]], ka)
-      sweep(b.asInstanceOf[Array[Any]], kb)
+      sweep(a, ka)
+      sweep(b, kb)
     }
     def r6(x: Double): Double = java.math.BigDecimal.valueOf(x)
       .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue
     val rows = grid.indices.map { i =>
       val wd = w(i).doubleValue
-      org.apache.spark.sql.Row(a(i), b(i), nCell(i),
+      org.apache.spark.sql.Row(grid(i).get(0), grid(i).get(1), nCell(i),
         r6(wd), r6(wd / nCell(i)))
     }
     import scala.jdk.CollectionConverters._
@@ -3953,11 +3979,10 @@ object StatsOps {
     // latency at every scale. chi² runs over the FULL 2×k cross (the
     // chiSquareIndependence contract): a group entirely on one side
     // still contributes its empty cell's (0−e)²/e.
-    val observed = base.crossJoin(broadcast(med))
+    val observed = collectGrid(base.crossJoin(broadcast(med))
       .groupBy(col("__g"), (col("__v").cast("double") > col("__med"))
         .as("__above"))
-      .agg(count(lit(1)).as("o"))
-      .collect()
+      .agg(count(lit(1)).as("o")), "medianTest")
     val spark = df.sparkSession
     val outSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n",
@@ -3977,8 +4002,8 @@ object StatsOps {
         Seq.empty[org.apache.spark.sql.Row].asJava, outSchema)
     }
     val o = scala.collection.mutable.HashMap.empty[(Any, Boolean), Long]
-    observed.foreach(r => o((r.get(0), r.getBoolean(1))) = r.getLong(2))
-    val gs = observed.map(_.get(0)).distinct
+    observed.foreach(r => o((contentKey(r.get(0)), r.getBoolean(1))) = r.getLong(2))
+    val gs = observed.map(r => contentKey(r.get(0))).distinct
     val sidesSeen = observed.map(_.getBoolean(1)).distinct
     val k = gs.length.toLong
     val ns = sidesSeen.length

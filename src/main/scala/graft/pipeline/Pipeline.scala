@@ -21,6 +21,15 @@ import org.apache.spark.sql.types._
  * Mongo → XCom → worker → Postgres → soda subprocess), this is ONE lazy plan
  * per action: extract/transform compose into a single narrow stage; the merge
  * is the only shuffle; QC and reconciliation are single-pass aggregates.
+ *
+ * At a cron cadence a window holds a few dozen rows, so a run's cost is its
+ * Spark jobs, not its compute. A run asks no question it already knows the
+ * answer to: the empty-window decision and both reconciliation counts ride
+ * the write jobs as Observations, the probe is a file-system call, and the
+ * staging and QC reads take the schema this run wrote instead of inferring
+ * it from footers. What is left per steady-state window is the staging
+ * write, the merge (touched-day collect, target footer merge, upsert and
+ * write) and the QC aggregate.
  */
 object Pipeline {
 
@@ -167,10 +176,13 @@ object Pipeline {
     val stagingPath = s"$workDir/staging"
     val martPath    = s"$workDir/mart"
 
-    // -- task 1: check_connections (DAG:79-84)
+    // -- task 1: check_connections (DAG:79-84): a file-system status call,
+    //    no Spark job
     require(Stores.probe(spark, sfDir), s"source unreachable: $sfDir")
 
-    // -- task 2: extract (DAG:94-148): scan + project + window filter.
+    // -- task 2: extract (DAG:94-148): scan + project + window filter, lazy —
+    //    it runs inside the staging write below, which also answers the
+    //    empty-window question (no pre-scan of the source).
     //    No sort here: the reference sorts for XCom determinism (DAG:132);
     //    our staging is keyed, so a 100 TB-hostile global sort buys nothing.
     val src = Stores.table(spark, sfDir, "events")
@@ -179,9 +191,6 @@ object Pipeline {
       projectCols = src.columns.toSeq,
       tsCols = Seq("ts"),
       start = start, end = end)
-
-    // -- empty-batch short-circuit (DAG:136-143,156-159,197-199)
-    if (extracted.isEmpty) return Result(runId, 0L, 0L, Map.empty, reconciled = true)
 
     // -- task 3: transform (DAG:154-190): key cast + name normalization +
     //    JSON flatten + lineage tag. One narrow projection after Catalyst's
@@ -204,16 +213,28 @@ object Pipeline {
     val srcObs = new org.apache.spark.sql.Observation(s"graft_src_$runId")
     Stores.stageAppend(transformed.observe(srcObs, count(lit(1)).as("n")),
       stagingPath)
+    val srcN = srcObs.get("n").asInstanceOf[Long]
+
+    //    Empty-batch short-circuit (DAG:136-143,156-159,197-199), decided by
+    //    the staging write's own count: an empty window stages no rows, so
+    //    nothing is merged or checked.
+    if (srcN == 0L) {
+      Stores.dropRun(spark, stagingPath, runId)
+      return Result(runId, 0L, 0L, Map.empty, reconciled = true)
+    }
+
     //    The merge is PARTITION-SCOPED (Stores.martMergePartitioned): only
     //    the p_day directories present in this batch are read, merged, and
     //    swapped — an incremental run costs O(touched partitions), never
-    //    O(mart). The reconciliation count rides the merge write as an
-    //    Observation (zero extra passes).
-    val updates = Stores.stagingForRun(spark, stagingPath, runId)
+    //    O(mart). Staging is read back with the schema it was written
+    //    under; the merge returns the mart schema it wrote, for task 5. The
+    //    reconciliation count rides the merge write as an Observation
+    //    (zero extra passes).
+    val updates = Stores.stagingForRun(spark, stagingPath, runId, transformed.schema)
       .select(martSchema.fieldNames.map(col).toIndexedSeq: _*)
     val dstObs = new org.apache.spark.sql.Observation(s"graft_dst_$runId")
-    Stores.martMergePartitioned(spark, martPath, updates, "_id", updateCols,
-      martPartitionCol,
+    val mergedSchema = Stores.martMergePartitioned(spark, martPath, updates,
+      "_id", updateCols, martPartitionCol,
       instrument = df => df.observe(dstObs,
         sum(when(col("run_id") === lit(runId), 1L).otherwise(0L)).as("n")))
     Stores.dropRun(spark, stagingPath, runId)   // DAG:317-320
@@ -228,17 +249,19 @@ object Pipeline {
     //    The window is half-open, so when `end` falls exactly on midnight
     //    its calendar day was never touched — gating on it would scan (and
     //    fail on) a NEIGHBOR run's partition.
+    //    The read takes the merge's schema, the union every mart file
+    //    carries: the same frame Stores.martRead would give, without its
+    //    O(mart files) footer job.
     val endTs = lit(end).cast(TimestampType)
     val lastTouchedDay = when(endTs === to_date(endTs).cast(TimestampType),
       date_sub(to_date(endTs), 1)).otherwise(to_date(endTs))
-    val mart = Stores.martRead(spark, martPath)
+    val mart = Stores.martRead(spark, martPath, mergedSchema)
       .filter(col(martPartitionCol).between(to_date(lit(start)), lastTouchedDay))
     val qc = QualityCheck.check(mart, qcRules)
 
     // -- task 6: row-count reconciliation (DAG:375-422): source-window count
     //    vs this run's mart rows, both harvested from the write-job
     //    observations above — no extra scans.
-    val srcN = srcObs.get("n").asInstanceOf[Long]
     val dstN = dstObs.get("n") match {
       case null => 0L
       case n => n.asInstanceOf[Long]

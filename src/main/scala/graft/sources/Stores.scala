@@ -102,13 +102,16 @@ object Stores {
     df.write.mode("append").option("compression", ParquetCodec)
       .partitionBy("run_id").parquet(stagingPath)
 
-  /** Read one run's staging rows (DAG:309-310 `WHERE airflow_run_id = %s`).
-    * run_id is a partition column → partition pruning reads only that
-    * directory, never the other runs' data. */
-  def stagingForRun(spark: SparkSession, stagingPath: String, runId: String): DataFrame =
-    // mergeSchema: runs staged before a schema evolution have narrower
-    // files — a single sampled footer could hide the new run's new column
-    spark.read.option("mergeSchema", "true").parquet(stagingPath)
+  /** Read one run's staging rows (DAG:309-310 `WHERE airflow_run_id = %s`)
+    * with the `schema` the run staged them under (the staged frame's
+    * schema, run_id included). Only the run's own `run_id=` directory is
+    * listed (basePath keeps run_id a partition column), and the pinned
+    * schema skips footer inference, which costs a job on every read. The
+    * run_id filter keeps partition pruning explicit in the plan. */
+  def stagingForRun(spark: SparkSession, stagingPath: String, runId: String,
+                    schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).option("basePath", stagingPath)
+      .parquet(s"$stagingPath/run_id=$runId")
       .filter(col("run_id") === lit(runId))
 
   /** Drop one run's staging partition (DAG:317-320 predicate DELETE).
@@ -215,6 +218,13 @@ object Stores {
   def martRead(spark: SparkSession, martPath: String): DataFrame =
     spark.read.option("mergeSchema", "true").parquet(martPath)
 
+  /** Mart read under a schema the caller already holds — the one
+    * [[martMergePartitioned]] returns — with no footer job: files lacking a
+    * column read it as null, as under `mergeSchema`. */
+  def martRead(spark: SparkSession, martPath: String,
+               schema: org.apache.spark.sql.types.StructType): DataFrame =
+    spark.read.schema(schema).parquet(martPath)
+
   /**
    * Partition-scoped incremental merge — the 100 TB mart path. The mart is
    * partitioned by `partitionCol` (a key-immutable derivation, e.g. the
@@ -235,16 +245,23 @@ object Stores {
    * Requires `partitionCol` immutable per key (true for creation-date
    * partitioning; the reference's updatedAt-driven re-extract keeps _id's
    * createdAt fixed, dag_mgo_pg_schedule_etl_qc.py:124-129).
+   *
+   * Returns the mart's schema after the merge: the union of the batch's
+   * columns and every column any mart file carries (the target read's
+   * merged footers), with `partitionCol` typed as in the batch. Reading
+   * the mart under it sees what the `mergeSchema` [[martRead]] would,
+   * without that read's O(mart files) footer job.
    */
   def martMergePartitioned(spark: SparkSession, martPath: String,
                            updates: DataFrame, key: String,
                            updateCols: Seq[String],
                            partitionCol: String,
-                           instrument: DataFrame => DataFrame = identity): Unit = {
+                           instrument: DataFrame => DataFrame = identity)
+      : org.apache.spark.sql.types.StructType = {
     if (!martExists(spark, martPath)) {
       instrument(updates).write.option("compression", ParquetCodec)
         .partitionBy(partitionCol).parquet(martPath)
-      return
+      return updates.schema
     }
     val touched = updates.select(partitionCol).distinct().collect()
       .map(_.get(0)).toSeq
@@ -344,6 +361,7 @@ object Stores {
       }
     fs.delete(tmp, true)
     fs.delete(asideRoot, true)
+    merged.schema
   }
 
   /** Crash recovery for the [[martMergePartitioned]] per-partition swap:
@@ -558,13 +576,15 @@ object Stores {
   def writeOrc(df: DataFrame, path: String): Unit =
     df.write.mode("overwrite").option("compression", "zlib").orc(path)
 
-  /** Connectivity probe (DAG:79-84: Mongo ping + PG SELECT 1). The dir
-    * check goes through the Hadoop FileSystem API — java.io.File answers
-    * about the driver's LOCAL disk and would report false for every
-    * hdfs:///s3a:// source dir, failing the pipeline's require at startup
-    * on any real cluster (same bug class as dropRun's original). */
+  /** Connectivity probe (DAG:79-84: Mongo ping + PG SELECT 1): a status
+    * call on the source dir, the one question a directory source can be
+    * asked. No Spark job — a `SELECT 1` would only show the local session
+    * is up, never that the source is reachable. The check goes through
+    * the Hadoop FileSystem API — java.io.File answers about the driver's
+    * LOCAL disk and would report false for every hdfs:///s3a:// source
+    * dir, failing the pipeline's require at startup on any real cluster
+    * (same bug class as dropRun's original). */
   def probe(spark: SparkSession, sfDir: String): Boolean = {
-    spark.sql("SELECT 1").head()
     // contract: a boolean probe — malformed URIs and transient FS errors
     // answer false rather than propagate (the caller's `require` is the
     // loud path; the probe itself never throws on bad input)

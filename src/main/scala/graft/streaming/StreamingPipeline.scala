@@ -79,7 +79,8 @@ object StreamingPipeline {
         if (!batch.isEmpty) {
           val updates = CoreOps.tagRun(batch, s"stream_batch_$batchId")
             .withColumn("p_day", to_date(col("ts")))
-          Stores.martMergePartitioned(spark, martPath, updates, "event_id",
+          // a stream reads nothing back: the merged mart schema is unused
+          val _ = Stores.martMergePartitioned(spark, martPath, updates, "event_id",
             updateCols = updates.columns
               .filterNot(c => c == "event_id" || c == "p_day" || c == "ts").toSeq,
             partitionCol = "p_day")
@@ -187,7 +188,7 @@ object StreamingPipeline {
               dirty.write.mode("overwrite")
                 .parquet(s"$quarantinePath/run=$runTag/batch_id=$batchId")
             val clean = QualityCheck.passedRows(updates, rules)
-            Stores.martMergePartitioned(spark, martPath, clean, "event_id",
+            val _ = Stores.martMergePartitioned(spark, martPath, clean, "event_id",
               updateCols = clean.columns
                 .filterNot(c => c == "event_id" || c == "p_day" || c == "ts").toSeq,
               partitionCol = "p_day")

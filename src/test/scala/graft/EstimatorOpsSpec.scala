@@ -125,6 +125,34 @@ class EstimatorOpsSpec extends SparkSpec {
     bySrc("s2") shouldBe 5.0 +- 1e-3
   }
 
+  test("ipfRake and medianTest group binary keys by content, as Spark does") {
+    // 3 langs x 2 sources with one structural zero: counting each
+    // collected Array[Byte] as its own level would make ka = kb = 5
+    val rows = Seq((("en", "s1"), 6), (("en", "s2"), 2), (("de", "s1"), 1),
+      (("de", "s2"), 1), (("fr", "s1"), 3))
+      .flatMap { case (cell, n) => Seq.fill(n)(cell) }
+    val str = rows.toDF("lang", "src")
+    val bin = str.select(col("lang").cast("binary").as("lang"),
+      col("src").cast("binary").as("src"))
+    val raked = StatsOps.ipfRake(bin, "lang", "src", rounds = 20)
+    // Spark's own grouping of the output: every lang carries n/3, every
+    // source n/2
+    all(raked.groupBy("a").agg(sum("raked_weight")).collect()
+      .map(_.getDouble(1))) shouldBe 13.0 / 3 +- 1e-3
+    all(raked.groupBy("b").agg(sum("raked_weight")).collect()
+      .map(_.getDouble(1))) shouldBe 6.5 +- 1e-3
+    raked.select(col("a").cast("string"), col("b").cast("string"),
+      col("n_cell"), col("raked_weight"), col("row_weight")).collect() shouldBe
+      StatsOps.ipfRake(str, "lang", "src", rounds = 20).collect()
+
+    val byGroup = Seq(("A", 1.0), ("A", 2.0), ("A", 3.0), ("B", 4.0),
+      ("B", 5.0), ("C", 6.0), ("C", 0.5)).toDF("g", "v")
+    val binMedian = StatsOps.medianTest(
+      byGroup.withColumn("g", col("g").cast("binary")), "v", "g").collect()
+    binMedian.head.getLong(1) shouldBe 3L
+    binMedian shouldBe StatsOps.medianTest(byGroup, "v", "g").collect()
+  }
+
   test("partialCorr: identity survives an independent z; collinear z " +
     "NULLs the partial") {
     val rows = Seq((1.0, 1.0, 0.0), (2.0, 2.0, 1.0), (3.0, 3.0, 0.0),

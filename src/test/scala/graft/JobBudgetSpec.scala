@@ -1,0 +1,94 @@
+package graft
+
+import graft.ext.ClusterStore
+import graft.ops.StatsOps
+import graft.pipeline.Pipeline
+import org.apache.spark.sql.functions._
+import java.nio.file.Files
+
+/** Spark-job budgets of the paths whose cost is their job count, not their
+  * compute: one steady-state pipeline window, a ClusterStore commit, and a
+  * driver-side finisher's guarded grid collect. */
+class JobBudgetSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** One started job: the short call site of its result stage
+    * ("isEmpty at Pipeline.scala:184") and whether it ran inside a SQL
+    * execution (the ones outside are schema inference while a DataFrame is
+    * built). */
+  private final case class Job(site: String, inSql: Boolean)
+
+  /** `body`'s result and the jobs it started, read after the listener bus
+    * drains — no sleep. */
+  private def jobsOf[T](body: => T): (T, Seq[Job]) = {
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.add(Job(e.stageInfos.maxBy(_.stageId).name,
+          Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null)))
+    }
+    org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      val out = body
+      org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
+      import scala.jdk.CollectionConverters._
+      (out, jobs.asScala.toSeq)
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a steady-state pipeline window runs at most 10 Spark jobs") {
+    val work = Files.createTempDirectory("graft_jobs_pipe_").toString
+    Pipeline.run(spark, sf0001, start = "2024-01-05 00:00:00",
+      end = "2024-01-10 00:00:00", runId = "seed", workDir = work)
+    // overlaps the seeded mart's last day: the merge's update path runs
+    val (r, jobs) = jobsOf(Pipeline.run(spark, sf0001,
+      start = "2024-01-09 12:00:00", end = "2024-01-11 00:00:00",
+      runId = "w1", workDir = work))
+    r.extracted should be > 0L
+    r.reconciled shouldBe true
+    withClue(jobs.map(_.site).mkString("jobs: ", "; ", "\n")) {
+      // facts the run already holds are not re-derived by a job: the empty
+      // window (the staging write's count), the source probe (a
+      // file-system call), the staged schema and the merged mart schema
+      all(jobs.map(_.site)) should (not startWith "isEmpty at " and
+        not startWith "head at Stores.scala")
+      // the one schema inference left is the merge target's footer merge
+      jobs.filterNot(_.inSql).map(_.site.takeWhile(_ != ':')) shouldBe
+        Seq("parquet at Stores.scala")
+      jobs.size should be <= 10
+    }
+  }
+
+  test("ClusterStore commit: meta counts ride the two table writes") {
+    val path = Files.createTempDirectory("graft_jobs_cstore_").toString + "/s"
+    val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id1", "id2")
+    ClusterStore.build(path, pairs)
+    val (_, jobs) = jobsOf(ClusterStore.append(path,
+      Seq((3L, 4L), (11L, 12L), (30L, 31L)).toDF("id1", "id2")))
+    val meta = spark.read.parquet(s"$path/meta").head()
+    meta.getAs[Long]("version") shouldBe 2L
+    meta.getAs[Long]("n_pairs") shouldBe ClusterStore.pairs(spark, path).count()
+    meta.getAs[Long]("n_pairs") shouldBe 7L
+    meta.getAs[Long]("n_nodes") shouldBe ClusterStore.assignment(spark, path).count()
+    meta.getAs[Long]("n_nodes") shouldBe 11L
+    // the commit materializes nothing before its writes
+    all(jobs.map(_.site)) should not fullyMatch regex (
+      "(count|localCheckpoint) at ClusterStore\\.scala:\\d+")
+  }
+
+  test("ipfRake over the grid cap: a named contract violation, no extra job") {
+    val wide = spark.range(StatsOps.FinisherGridCap + 1L)
+      .select(col("id").as("a"), (col("id") % 2).as("b"))
+    val (_, plain) = jobsOf(wide.groupBy(col("a"), col("b"))
+      .agg(count(lit(1)).as("n_cell")).collect())
+    val (ex, guarded) = jobsOf(intercept[IllegalArgumentException] {
+      StatsOps.ipfRake(wide, "a", "b")
+    })
+    ex.getMessage shouldBe "ipfRake: bounded-levels contract violated — the " +
+      s"collected grid exceeds ${StatsOps.FinisherGridCap} cells; its key " +
+      "columns are not bounded levels"
+    guarded.size shouldBe plain.size
+  }
+}

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.QualityCheck
 import graft.sources.Stores
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
@@ -91,6 +92,41 @@ class PartitionedMartSpec extends SparkSpec {
         key = "id", updateCols = Seq("V"), partitionCol = "day")
     }
     ex.getMessage should include("case conflict")
+  }
+
+  test("QC over the merge's returned schema equals QC over the mergeSchema read") {
+    val work = Files.createTempDirectory("graft_pmart_qc_").toString
+    val mart = s"$work/mart"
+    def days(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("day", to_date(col("day")))
+    // the mart carries `legacy`, which the next batch lacks
+    Stores.martMergePartitioned(spark, mart, days(Seq(
+        (1L, "a", 1.0, "L1", "2024-01-01"), (2L, "b", 2.0, "L2", "2024-01-02"),
+        (3L, "c", 3.0, "L3", "2024-01-03"))
+      .toDF("id", "s", "v", "legacy", "day")),
+      key = "id", updateCols = Seq("v"), partitionCol = "day")
+    // the batch carries `fresh`, which the mart lacks; day 3 stays untouched
+    // in the window, its files without `fresh`
+    val schema = Stores.martMergePartitioned(spark, mart, days(Seq(
+        (2L, "b", 20.0, "F2", "2024-01-02"), (4L, "d", 4.0, "F4", "2024-01-04"))
+      .toDF("id", "s", "v", "fresh", "day")),
+      key = "id", updateCols = Seq("v", "fresh"), partitionCol = "day")
+    val window = col("day").between(lit("2024-01-02").cast("date"),
+      lit("2024-01-04").cast("date"))
+    val pinned = Stores.martRead(spark, mart, schema).filter(window)
+    val inferred = Stores.martRead(spark, mart).filter(window)
+    schema.fieldNames.toSet shouldBe inferred.columns.toSet
+    import QualityCheck.{NotNull, Regex, Unique, ValidType}
+    val passing = Seq(NotNull("id"), Unique("id"), Regex("legacy", "^L[0-9]$"),
+      Regex("fresh", "^F[0-9]$"), ValidType("s", "string"))
+    val qc = QualityCheck.check(pinned, passing)
+    qc shouldBe QualityCheck.check(inferred, passing)
+    qc("n_rows") shouldBe 3L
+    // columns one side lacks read as null on the other side's rows
+    val nulls = Seq(NotNull("legacy"), NotNull("fresh"), NotNull("s"))
+    val counted = QualityCheck.report(pinned, nulls).head()
+    counted shouldBe QualityCheck.report(inferred, nulls).head()
+    counted.toSeq shouldBe Seq(3L, 1L, 1L, 0L)
   }
 
   test("touched-partition read plans with directory-level pruning") {

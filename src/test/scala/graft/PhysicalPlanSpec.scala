@@ -140,9 +140,10 @@ class PhysicalPlanSpec extends SparkSpec {
   test("run_id-partitioned staging read prunes to one partition directory") {
     val work = Files.createTempDirectory("graft_prune_").toString
     val df = Stores.table(spark, sf0001, "events").limit(100)
-    Stores.stageAppend(graft.ops.CoreOps.tagRun(df, "runA"), s"$work/st")
+    val staged = graft.ops.CoreOps.tagRun(df, "runA")
+    Stores.stageAppend(staged, s"$work/st")
     Stores.stageAppend(graft.ops.CoreOps.tagRun(df, "runB"), s"$work/st")
-    val read = Stores.stagingForRun(spark, s"$work/st", "runA")
+    val read = Stores.stagingForRun(spark, s"$work/st", "runA", staged.schema)
     read.count() shouldBe 100
     val plan = read.queryExecution.executedPlan.toString
     plan should include("PartitionFilters")

@@ -71,7 +71,14 @@ class PipelineSpec extends SparkSpec {
     val r = Pipeline.run(spark, sf0001,
       start = "1990-01-01 00:00:00", end = "1990-01-02 00:00:00",
       runId = "r0", workDir = work)
-    r.extracted shouldBe 0L
-    r.reconciled shouldBe true
+    r shouldBe Pipeline.Result("r0", 0L, 0L, Map.empty, reconciled = true)
+    // the decision comes from the staging write's count, so the write ran:
+    // it leaves no run partition behind, and nothing reaches the mart
+    val fs = new org.apache.hadoop.fs.Path(work)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    fs.exists(new org.apache.hadoop.fs.Path(s"$work/staging")) shouldBe true
+    fs.exists(new org.apache.hadoop.fs.Path(s"$work/staging/run_id=r0")) shouldBe false
+    fs.exists(new org.apache.hadoop.fs.Path(s"$work/mart")) shouldBe false
+    Stores.martExists(spark, s"$work/mart") shouldBe false
   }
 }

@@ -24,7 +24,7 @@ class RobustnessSpec extends SparkSpec {
     Stores.dropRun(spark, s"$work/staging", "r1")
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$work/staging/run_id=r1")))
     // the other run's partition is untouched
-    Stores.stagingForRun(spark, s"$work/staging", "r2").count() shouldBe 1L
+    Stores.stagingForRun(spark, s"$work/staging", "r2", df.schema).count() shouldBe 1L
   }
 
   test("recoverMart promotes a complete .tmp when the live mart is missing") {
