@@ -37,14 +37,8 @@ import java.util.concurrent.atomic.AtomicInteger
   */
 object ArtifactRegistry {
 
-  /** One completed build: which artifact, how long the build lambda
-    * ran, and the 1-based build ordinal for the key in this JVM. */
-  final case class BuildEvent(key: String, seconds: Double, nth: Int)
-
   private val counts = new ConcurrentHashMap[String, AtomicInteger]()
   private val totalSecs = new ConcurrentHashMap[String, java.lang.Double]()
-  private val events =
-    new java.util.concurrent.ConcurrentLinkedQueue[BuildEvent]()
 
   /** Wrap a memoizer's build lambda: count it, time it, and shout on
     * any build after the first. Call this INSIDE the memoizer's
@@ -56,7 +50,6 @@ object ArtifactRegistry {
     val nth = counts.computeIfAbsent(key, _ => new AtomicInteger(0))
       .incrementAndGet()
     totalSecs.merge(key, sec, (a, b) => a + b)
-    events.add(BuildEvent(key, sec, nth))
     if (nth > 1)
       System.err.println(
         f"[artifact] REBUILD #$nth%d of '$key' took $sec%.3f s — " +
@@ -67,20 +60,16 @@ object ArtifactRegistry {
 
   /** (build count, total build seconds) per artifact key. */
   def snapshot(): Map[String, (Int, Double)] = {
-    val it = counts.entrySet().iterator()
-    val b = Map.newBuilder[String, (Int, Double)]
-    while (it.hasNext) {
-      val e = it.next()
-      b += e.getKey -> ((e.getValue.get(),
-        Option(totalSecs.get(e.getKey)).fold(0.0)(_.doubleValue())))
-    }
-    b.result()
+    import scala.jdk.CollectionConverters._
+    counts.asScala.map { case (k, n) =>
+      k -> ((n.get, Option(totalSecs.get(k)).fold(0.0)(_.doubleValue)))
+    }.toMap
   }
 
-  /** Ordered build history (insertion order, across threads). */
-  def history(): Seq[BuildEvent] = {
-    val b = Seq.newBuilder[BuildEvent]
-    events.forEach(e => b += e)
-    b.result()
-  }
+  /** [[snapshot]] as a JSON object, keys sorted:
+    * `{"<key>":{"builds":n,"secs":s}, ...}`, seconds to ms. */
+  def json(): String =
+    snapshot().toSeq.sortBy(_._1).map { case (k, (n, s)) =>
+      s"${Harness.quote(k)}:{\"builds\":$n,\"secs\":${Harness.r3(s)}}"
+    }.mkString("{", ",", "}")
 }

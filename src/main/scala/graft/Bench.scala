@@ -1,47 +1,39 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.lang.management.{ManagementFactory, MemoryType}
+import org.apache.spark.sql.SparkSession
+
+/** The one timing loop: every declared query (or the ones named as
+  * arguments), built then drained, best of `SPARK_GRAFT_BENCH_PASSES`
+  * (default 3) interleaved passes, against `SPARK_GRAFT_SF_DIR`. The
+  * summary line goes to stdout and the full JSON to `SPARK_GRAFT_BENCH_OUT`
+  * (default `bench_out.json`).
+  *
+  * A scale run is two Bench runs over the same query set, one against an
+  * sf dir and one against its [[ScaleGen]] k× replica;
+  * `tools/scale_compare.py` reads the two output files.
+  *
+  * Usage: `runMain graft.Bench [query ...]`
+  */
 object Bench {
 
-  /** Force full evaluation of every output row WITHOUT an aggregating
-    * action: `count()` lets Catalyst prune all columns (a projection-only
-    * query then measures ~nothing and expression cost is under-weighted).
-    * Draining the executed plan's internal-row iterator materializes every
-    * column of every row on the executors — an honest no-op sink with no
-    * driver collect. */
-  private def drain(df: DataFrame): Unit =
-    df.queryExecution.toRdd.foreachPartition { it =>
-      while (it.hasNext) it.next()
-    }
-
-  /** Fixed-work ambient-load probe: a single-thread dependent-LCG busy loop
-    * (~100 ms on an unloaded core, zero allocation, zero I/O) timed
-    * immediately before each measurement pass. The box is shared, and whole
-    * runs have recorded 2–4× inflation from neighbor load; emitting the
-    * probe times alongside the query times makes the bench
+  /** Fixed-work ambient-load probe: a dependent-LCG busy loop (~100 ms on
+    * an unloaded core, zero allocation, zero I/O) on each of `n` threads,
+    * all started together, timed immediately before each measurement pass;
+    * returns wall seconds until the LAST finishes. The box is shared, and
+    * whole runs have recorded 2–4× inflation from neighbor load; emitting
+    * the probe times alongside the query times makes the bench
     * self-adjudicating — a reader normalizes recorded seconds by the
     * calibration spread instead of re-running the bench to decide whether a
-    * "regression" is code or neighbors. */
-  private def calibrate(): Double = {
-    val t0 = System.nanoTime()
-    var x = 0x9E3779B97F4A7C15L
-    var i = 0
-    while (i < 60000000) {
-      x = x * 6364136223846793005L + 1442695040888963407L
-      i += 1
-    }
-    // data-dependent side effect so the JIT cannot elide the loop
-    if (x == 42L) System.err.print("")
-    (System.nanoTime() - t0) / 1e9
-  }
-
-  /** The calibrate() loop split across `n` threads, all started together;
-    * returns wall seconds until the LAST finishes. The 1-thread probe is
+    * "regression" is code or neighbors.
+    *
+    * `calibratePar(1)` is the single-thread probe (`calibration`). It is
     * blind to MODERATE neighbor load: a neighbor pinning 8 of 32 cores
     * leaves the single probe a free core (flat reading) while every
     * 32-thread query loses ~25% — exactly the "diffuse ×1.1 creep, flat
-    * calibration" signature round 14 could not adjudicate. On a quiet box
-    * this reads ≈ the 1-thread probe (independent cores); under multi-core
-    * contention it inflates proportionally. */
+    * calibration" signature round 14 could not adjudicate. So each pass
+    * also runs it on one thread per core (`calibration_par`): on a quiet
+    * box that reads ≈ the 1-thread probe (independent cores); under
+    * multi-core contention it inflates proportionally. */
   private def calibratePar(n: Int): Double = {
     val t0 = System.nanoTime()
     val threads = (1 to n).map { seed =>
@@ -52,6 +44,7 @@ object Bench {
           x = x * 6364136223846793005L + 1442695040888963407L
           i += 1
         }
+        // data-dependent side effect so the JIT cannot elide the loop
         if (x == 42L) System.err.print("")
       })
     }
@@ -67,7 +60,7 @@ object Bench {
     * creep. */
   private def gcMillis(): Long = {
     import scala.jdk.CollectionConverters._
-    java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    ManagementFactory.getGarbageCollectorMXBeans
       .asScala.map(b => math.max(0L, b.getCollectionTime)).sum
   }
 
@@ -84,28 +77,37 @@ object Bench {
       i.id -> ((i.name: String, i.numCachedPartitions, i.memSize, i.diskSize))
     }.toMap
 
+  /** Used heap after a forced GC, in MB. Read at the start and the end of
+    * the timed passes: a driver accumulating per-row state (the
+    * scale-killer class) shows an end−start delta growing with the data;
+    * bounded artifacts (grids, centroids, heaps) do not. */
+  private def usedHeapMb(): Long = {
+    System.gc()
+    ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed >> 20
+  }
+
+  /** Summed peak usage of the heap pools, in MB — mostly executor-side
+    * unified memory (shuffle and aggregation buffers) in local mode. */
+  private def peakHeapMb(): Long = {
+    import scala.jdk.CollectionConverters._
+    ManagementFactory.getMemoryPoolMXBeans.asScala
+      .filter(_.getType == MemoryType.HEAP)
+      .map(p => Option(p.getPeakUsage).fold(0L)(_.getUsed)).sum >> 20
+  }
+
+  /** One query's sample in one pass: build-and-drain seconds (negated on
+    * failure), build seconds (the query function's call, incl. eager driver
+    * jobs), and what it ran. */
+  private final case class Sample(time: Double, build: Double, profile: Harness.Profile)
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default matches the recorded protocol (BASELINE.md runs local[32]);
-    // the driver sets the env var explicitly either way
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // Warm the session (codegen, shuffle service, parquet footer reads) so
-    // startup cost isn't attributed to whichever query happens to run first.
-    spark.read.parquet(s"$sfDir/region.parquet").count()
-    SparkEntry.queries.get("q_projection")
-      .foreach(fn => try drain(fn(spark, sfDir)) catch { case _: Throwable => })
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
+    Harness.warm(spark, sfDir)
     // A failed query records the NEGATED elapsed time — a broken query must
     // stay distinguishable from a fast one in the JSON.
-    // Best-of-2 per query, passes INTERLEAVED (all queries pass 1, then all
+    // Best-of-N per query, passes INTERLEAVED (all queries pass 1, then all
     // pass 2): single-pass timings on a shared box are hostage to whoever
     // else is on the CPU, and noise bursts are time-local — back-to-back
     // passes of one query sit inside the same burst (observed: a 0.5s query
@@ -130,17 +132,20 @@ object Bench {
     // unchanged code (the r13→r14 driver compare shows a diffuse ×1.1
     // shift plus ±1.5× scatter on small queries — exactly order-churn's
     // signature). Sorted order is stable under insertion: new keys shift
-    // only their alphabetic neighbors.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    // warm the probe's JIT once so pass-1 calibration isn't interpreter time
-    calibrate()
+    // only their alphabetic neighbors. Trailing query names restrict the
+    // run to those queries (a scale run over a chosen set), same order.
+    val names = (if (args.isEmpty) SparkEntry.queries.keys.toSeq else args.toSeq)
+      .distinct.sorted
+    val unknown = names.filterNot(SparkEntry.queries.contains)
+    require(unknown.isEmpty, s"no such query: ${unknown.mkString(", ")}")
+    // JIT-warm the probe once so pass-1 calibration isn't interpreter time
+    calibratePar(2)
     val calibrations = scala.collection.mutable.ArrayBuffer.empty[Double]
     val parCalibrations = scala.collection.mutable.ArrayBuffer.empty[Double]
     val gcSecs = scala.collection.mutable.ArrayBuffer.empty[Double]
     // storage-churn events: (pass, query, rddName, kind, detail)
     val churn = scala.collection.mutable.ArrayBuffer
       .empty[(Int, String, String, String, String)]
-    calibratePar(2) // JIT-warm the parallel probe's lambda too
     var storBefore = storageSnapshot(spark)
     // snapshots each RDD id has been observed in: per-op scratch frames
     // (persist → unpersist(blocking=false) inside ONE query) surface in at
@@ -152,21 +157,29 @@ object Bench {
     // warmup and evicted during the very first query would otherwise read
     // seenCount=1 at its disappearance and dodge the `gone` detector
     storBefore.keysIterator.foreach(id => seenCount.update(id, 1))
-    val passTimes = (1 to passes).map { pass =>
-      calibrations += calibrate()
-      parCalibrations += calibratePar(cpus.toInt)
+    val heapStart = usedHeapMb()
+    val passSamples = (1 to passes).map { pass =>
+      calibrations += calibratePar(1)
+      parCalibrations += calibratePar(cpus)
       val gc0 = gcMillis()
       val res = names.map { name =>
-        val fn = SparkEntry.queries(name)
-        val t0 = System.nanoTime()
-        val ok = try { drain(fn(spark, sfDir)); true } catch { case _: Throwable => false }
-        val sec = (System.nanoTime() - t0) / 1e9
+        // the profile's listener-bus drains sit outside the timed span
+        val ((time, build), profile) = Harness.profiled(spark.sparkContext) {
+          val t0 = System.nanoTime()
+          var build = 0.0
+          val ok = try {
+            val df = SparkEntry.queries(name)(spark, sfDir)
+            build = (System.nanoTime() - t0) / 1e9
+            Harness.drain(df); true
+          } catch { case _: Throwable => false }
+          val sec = (System.nanoTime() - t0) / 1e9
+          (if (ok) sec else -sec, build)
+        }
         val storAfter = storageSnapshot(spark)
         storAfter.keysIterator.foreach(id =>
           seenCount.update(id, seenCount.getOrElse(id, 0) + 1))
         storBefore.foreach { case (id, (nm, cp0, mem0, dsk0)) =>
-          val short = nm.replaceAll("\\s+", " ")
-            .replace("\\", "/").replace("\"", "'").take(48)
+          val short = nm.replaceAll("\\s+", " ").take(48)
           storAfter.get(id) match {
             case Some((_, cp1, mem1, dsk1)) =>
               if (cp1 < cp0)
@@ -180,28 +193,29 @@ object Bench {
           }
         }
         storBefore = storAfter
-        name -> (if (ok) sec else -sec)
+        name -> Sample(time, build, profile)
       }.toMap
       gcSecs += (gcMillis() - gc0) / 1e3
       res
     }
-    // chosen value: fastest clean pass, or the most-negative (failed) one —
+    val heapEnd = usedHeapMb()
+    val heapPeak = peakHeapMb()
+    // chosen sample: fastest clean pass, or the most-negative (failed) one —
     // a query that failed any pass stays visibly negative in the JSON.
-    // detail = (time, 1-based pass it came from, that pass's probe secs)
+    // detail = (chosen sample, 1-based pass it came from, that pass's probe)
     val detail = names.map { name =>
-      val samples = passTimes.map(_(name))
-      val best = samples.min
-      val passIdx = samples.indexOf(best)
-      name -> (best, passIdx + 1, calibrations(passIdx))
+      val times = passSamples.map(_(name).time)
+      val passIdx = times.indexOf(times.min)
+      name -> ((passSamples(passIdx)(name), passIdx + 1, calibrations(passIdx)))
     }.toMap
-    val results = detail.map { case (k, (t, _, _)) => k -> t }
     // Continuity metric: the same queries under the round-1 `.count()`
     // methodology (Catalyst prunes to counts — under-measures projection
     // cost, but directly comparable with earlier rounds' totals).
-    calibrations += calibrate()
-    val countTotal = SparkEntry.queries.values.map { fn =>
+    calibrations += calibratePar(1)
+    val countTotal = names.map { name =>
       val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch { case _: Throwable => false }
+      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
+      catch { case _: Throwable => false }
       val sec = (System.nanoTime() - t0) / 1e9
       if (ok) sec else -sec
     }.sum
@@ -209,18 +223,23 @@ object Bench {
     // driver's stdout tail window even at 130+ queries (full-precision
     // floats pushed the line past it); the file below keeps ms too — ±1 ms
     // is far inside run-to-run noise.
-    def r3(v: Double): String = BigDecimal(v)
-      .setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + r3(v) }
+    import Harness.r3
+    val qs = names.map(n => s"\"" + n + "\":" + r3(detail(n)._1.time))
       .mkString("{", ",", "}")
     // per-query provenance: which pass the min came from and that pass's
     // ambient-load probe — a judge separates "code got slower" from "that
-    // pass ran under neighbor load" per query, without re-running anything
+    // pass ran under neighbor load" per query, without re-running anything.
+    // The same pass's build seconds and job/stage/task counts split the
+    // time into driver build, scheduling and compute; a job count that
+    // differs between passes is a first build (or a rebuild) of an artifact.
     val qd = names.map { name =>
-      val (t, p, c) = detail(name)
-      s"\"" + name + s"\":{\"time\":${r3(t)},\"pass\":$p,\"cal\":${r3(c)}}"
+      val (s, p, c) = detail(name)
+      s"\"" + name + s"\":{\"time\":${r3(s.time)},\"pass\":$p,\"cal\":${r3(c)}," +
+        s"\"build\":${r3(s.build)},\"jobs\":${s.profile.jobs.size}," +
+        s"\"stages\":${s.profile.stages},\"tasks\":${s.profile.tasks}," +
+        passSamples.map(_(name).profile.jobs.size).mkString("\"jobs_by_pass\":[", ",", "]}")
     }.mkString("{", ",", "}")
-    val total = if (results.nonEmpty) results.values.sum else 0.0
+    val total = names.map(detail(_)._1.time).sum
     // calibration: fixed-work probe seconds, one before each drain pass and
     // one before the count-method sweep; spread = max/min. A spread near 1.0
     // means a quiet box; >>1 flags which passes ran under ambient load.
@@ -234,9 +253,6 @@ object Bench {
     val artifacts = ArtifactRegistry.snapshot()
     val artifactRebuilds = artifacts.valuesIterator.map(_._1 - 1).filter(_ > 0).sum
     val artifactSecs = artifacts.valuesIterator.map(_._2).sum
-    val artJson = artifacts.toSeq.sortBy(_._1).map { case (k, (n, s)) =>
-      s"\"" + k + s"\":{\"builds\":$n,\"secs\":${r3(s)}}"
-    }.mkString("{", ",", "}")
     // storage churn between queries: "drop" = cached partitions lost (next
     // touch recomputes — the silent-rebuild pathology), "spill" = memory →
     // disk movement (slower reads, no recompute), "gone" = RDD left the
@@ -246,7 +262,7 @@ object Bench {
     val dropCount = churn.count(_._4 == "drop")
     val spillCount = churn.count(_._4 == "spill")
     val churnJson = churn.map { case (p, q, nm, kind, det) =>
-      s"""{"pass":$p,"q":"$q","kind":"$kind","rdd":"$nm","detail":"$det"}"""
+      s"""{"pass":$p,"q":"$q","kind":"$kind","rdd":${Harness.quote(nm)},"detail":"$det"}"""
     }.mkString("[", ",", "]")
     val gcJson = gcSecs.map(r3).mkString("[", ",", "]")
     val pcalJson = parCalibrations.map(r3).mkString("[", ",", "]")
@@ -256,11 +272,13 @@ object Bench {
     // with the summary fields, keeping metric/value/calibration inside any
     // reasonable tail window; the committed bench_out.json carries the
     // complete form including per-query {time, pass, cal} provenance.
+    // Heap: used-after-GC before and after the timed passes, and the pools'
+    // peak — read outside the passes.
     val summary =
-      s""""metric":"total","value":${r3(total)},"unit":"sec","protocol":"v2.1-sorted-min","passes":$passes,"agg":"min","count_method_total":${r3(countTotal)},"calibration":$calJson,"calibration_par":$pcalJson,"gc_secs_per_pass":$gcJson,"artifact_rebuilds":$artifactRebuilds,"artifact_build_secs":${r3(artifactSecs)},"storage_drops":$dropCount,"storage_spills":$spillCount,"calibration_spread":${r3(calSpread)},"n_queries":${names.size},"sf":"$sfDir""""
+      s""""metric":"total","value":${r3(total)},"unit":"sec","protocol":"v2.1-sorted-min","passes":$passes,"agg":"min","count_method_total":${r3(countTotal)},"calibration":$calJson,"calibration_par":$pcalJson,"gc_secs_per_pass":$gcJson,"artifact_rebuilds":$artifactRebuilds,"artifact_build_secs":${r3(artifactSecs)},"storage_drops":$dropCount,"storage_spills":$spillCount,"calibration_spread":${r3(calSpread)},"heap_start_mb":$heapStart,"heap_end_mb":$heapEnd,"heap_peak_mb":$heapPeak,"n_queries":${names.size},"sf":"$sfDir""""
     println(s"""{"queries":$qs,$summary}""")
     val json =
-      s"""{"queries":$qs,"query_detail":$qd,"artifacts":$artJson,"storage_churn":$churnJson,$summary}"""
+      s"""{"queries":$qs,"query_detail":$qd,"artifacts":${ArtifactRegistry.json()},"storage_churn":$churnJson,$summary}"""
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     try java.nio.file.Files.write(
       java.nio.file.Paths.get(outPath),

@@ -8,6 +8,8 @@ package graft
   * `<outDir>/<q>_<suffix>.txt`. Plans are captured without executing the
   * query (formatted explain of the optimized physical plan; AQE shows the
   * initial plan, which is the committed shape the optimizer starts from).
+  * It stays its own main rather than a [[Bench]] mode: it explains without
+  * executing, so it is not a timing loop.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
@@ -17,16 +19,7 @@ object PlanDump {
     val names =
       if (args.length > 3) args.drop(3).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { name =>
       SparkEntry.queries.get(name) match {

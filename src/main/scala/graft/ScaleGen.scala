@@ -1,11 +1,10 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Deterministic k× replication of a testdata sf dir into a scratch dir —
-  * the input for the empirical scale audit ([[ScaleAudit]]). Each replica
-  * r is a DISJOINT consistent universe: every key column (PKs and the FKs
-  * that reference them) is offset by `r × STRIDE`, so per-key join
+  * the input for the empirical scale audit (a [[Bench]] run against it).
+  * Each replica r is a DISJOINT consistent universe: every key column (PKs
+  * and the FKs that reference them) is offset by `r × STRIDE`, so per-key join
   * fanouts, group sizes, and graph degrees are identical to the source —
   * the ideal shape for measuring a scaling exponent, because any
   * super-linear growth is then the operator's, not the data's.
@@ -49,15 +48,8 @@ object ScaleGen {
     val dst = args(1)
     val k = if (args.length > 2) args(2).toInt else 10
     require(k >= 1 && k <= 26, s"k=$k out of range (text rotation needs k<=26)")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val cpus = Harness.cpus
+    val spark = Harness.session(cpus)
 
     val lower = "abcdefghijklmnopqrstuvwxyz"
     val upper = lower.toUpperCase
@@ -81,7 +73,7 @@ object ScaleGen {
         d
       }
       replicas.reduce(_ union _)
-        .repartition(cpus.toInt)
+        .repartition(cpus)
         .write.mode("overwrite").parquet(s"$dst/$table.parquet")
       println(s"SCALEGEN $table x$k done")
     }

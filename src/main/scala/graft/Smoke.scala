@@ -1,21 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner for the driver's t1 check: runs `SparkEntry.entry`
   * (the flagship end-to-end pipeline on sf0.001) and prints the row count. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     val df = SparkEntry.entry(spark)
     df.show(truncate = false)
     println(s"ENTRY_ROWS=${df.count()}")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -8,16 +7,7 @@ object Verify {
     // args: <sfDir> <outDir> [queryName...] — trailing names restrict the
     // dump to those queries (local iteration; the driver passes none)
     val (Array(sfDir, outDir), onlyNames) = (args.take(2), args.drop(2).toSet)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.cpus)
     new java.io.File(outDir).mkdirs()
     // Plan-gate audit per query (graft.plans.PlanAudit — the SAME rule
     // set PlanAuditSpec enforces under `sbt test`): round 13 shipped a
@@ -37,18 +27,7 @@ object Verify {
           System.err.println(s"[verify] $name failed: ${e.getMessage}")
         }
       }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
+    import Harness.{quote => q}
     val json = SparkEntry.oracleSql
       .filter { case (k, _) => onlyNames.isEmpty || onlyNames(k) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
@@ -60,10 +39,7 @@ object Verify {
     // sweep in one session must build each exactly once — a count > 1
     // here is the same red finding Bench's artifact_rebuilds flags.
     Files.writeString(Paths.get(s"$outDir/artifact_builds.json"),
-      ArtifactRegistry.snapshot().toSeq.sortBy(_._1).map { case (k, (n, s)) =>
-        s"${q(k)}: {\"builds\":$n,\"secs\":${BigDecimal(s)
-          .setScale(3, BigDecimal.RoundingMode.HALF_UP)}}"
-      }.mkString("{", ",", "}"))
+      ArtifactRegistry.json())
     if (planViolations.nonEmpty)
       System.err.println(
         s"[verify] ${planViolations.size} plan-gate violation(s): " +

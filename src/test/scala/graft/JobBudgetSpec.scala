@@ -1,5 +1,6 @@
 package graft
 
+import graft.Harness.{Profile, profiled}
 import graft.ext.ClusterStore
 import graft.ops.StatsOps
 import graft.pipeline.Pipeline
@@ -11,39 +12,14 @@ import java.nio.file.Files
   * driver-side finisher's guarded grid collect. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
-
-  /** One started job: the short call site of its result stage
-    * ("isEmpty at Pipeline.scala:184") and whether it ran inside a SQL
-    * execution (the ones outside are schema inference while a DataFrame is
-    * built). */
-  private final case class Job(site: String, inSql: Boolean)
-
-  /** `body`'s result and the jobs it started, read after the listener bus
-    * drains — no sleep. */
-  private def jobsOf[T](body: => T): (T, Seq[Job]) = {
-    val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Job]()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        jobs.add(Job(e.stageInfos.maxBy(_.stageId).name,
-          Option(e.properties).exists(_.getProperty("spark.sql.execution.id") != null)))
-    }
-    org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
-    sc.addSparkListener(listener)
-    try {
-      val out = body
-      org.apache.spark.ListenerBusAccess.waitUntilEmpty(sc)
-      import scala.jdk.CollectionConverters._
-      (out, jobs.asScala.toSeq)
-    } finally sc.removeSparkListener(listener)
-  }
+  private lazy val sc = spark.sparkContext
 
   test("a steady-state pipeline window runs at most 10 Spark jobs") {
     val work = Files.createTempDirectory("graft_jobs_pipe_").toString
     Pipeline.run(spark, sf0001, start = "2024-01-05 00:00:00",
       end = "2024-01-10 00:00:00", runId = "seed", workDir = work)
     // overlaps the seeded mart's last day: the merge's update path runs
-    val (r, jobs) = jobsOf(Pipeline.run(spark, sf0001,
+    val (r, Profile(jobs, _, _)) = profiled(sc)(Pipeline.run(spark, sf0001,
       start = "2024-01-09 12:00:00", end = "2024-01-11 00:00:00",
       runId = "w1", workDir = work))
     r.extracted should be > 0L
@@ -65,7 +41,7 @@ class JobBudgetSpec extends SparkSpec {
     val path = Files.createTempDirectory("graft_jobs_cstore_").toString + "/s"
     val pairs = Seq((1L, 2L), (2L, 3L), (10L, 11L), (20L, 21L)).toDF("id1", "id2")
     ClusterStore.build(path, pairs)
-    val (_, jobs) = jobsOf(ClusterStore.append(path,
+    val (_, Profile(jobs, _, _)) = profiled(sc)(ClusterStore.append(path,
       Seq((3L, 4L), (11L, 12L), (30L, 31L)).toDF("id1", "id2")))
     val meta = spark.read.parquet(s"$path/meta").head()
     meta.getAs[Long]("version") shouldBe 2L
@@ -81,9 +57,9 @@ class JobBudgetSpec extends SparkSpec {
   test("ipfRake over the grid cap: a named contract violation, no extra job") {
     val wide = spark.range(StatsOps.FinisherGridCap + 1L)
       .select(col("id").as("a"), (col("id") % 2).as("b"))
-    val (_, plain) = jobsOf(wide.groupBy(col("a"), col("b"))
+    val (_, Profile(plain, _, _)) = profiled(sc)(wide.groupBy(col("a"), col("b"))
       .agg(count(lit(1)).as("n_cell")).collect())
-    val (ex, guarded) = jobsOf(intercept[IllegalArgumentException] {
+    val (ex, Profile(guarded, _, _)) = profiled(sc)(intercept[IllegalArgumentException] {
       StatsOps.ipfRake(wide, "a", "b")
     })
     ex.getMessage shouldBe "ipfRake: bounded-levels contract violated — the " +

@@ -7,15 +7,7 @@ import org.scalatest.matchers.should.Matchers
 /** Shared local SparkSession for all specs (one JVM, one session). */
 object TestSpark {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Harness.session(4)
     s.sparkContext.setLogLevel("ERROR")
     s
   }

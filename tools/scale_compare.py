@@ -1,7 +1,11 @@
 #!/usr/bin/env python3
-"""Compare two graft.ScaleAudit JSON outputs (small sf vs k-times sf).
+"""Compare two graft.Bench output files (small sf vs k-times sf).
 
 Usage: scale_compare.py SMALL.json BIG.json [k]
+
+Each file is a Bench run's full JSON (`SPARK_GRAFT_BENCH_OUT`, default
+bench_out.json), both over the same query names, one with
+SPARK_GRAFT_SF_DIR at an sf dir and one at its graft.ScaleGen k-times copy.
 
 Prints a per-query table of seconds at both scales and the measured
 time ratio, plus the implied scaling exponent log(ratio)/log(k) —
