@@ -12,7 +12,9 @@ import org.apache.spark.sql.functions._
  * "what's the cluster-size histogram?") then reads the persisted
  * assignment instead of re-clustering 100 TB per query. Incremental growth
  * goes through [[DedupOps.mergeComponents]] — O(batch) over touched
- * clusters, never a corpus re-cluster.
+ * clusters, never a corpus re-cluster. An append of up to a million
+ * pairs is clustered by a driver-side union-find after one collect, with
+ * no star rounds; [[build]] always runs the distributed star rounds.
  *
  * Layout under `path/`:
  *   - `assignment/`  (id: long, cluster_id: long) — cluster_id = component
@@ -23,6 +25,10 @@ import org.apache.spark.sql.functions._
  *     the GRAPH (leakage audits, modularity, conductance, graph analytics)
  *     read the same artifact generation as the labels;
  *   - `meta/`        1 row (version: long, n_pairs: long, n_nodes: long).
+ *
+ * `assignment` and `meta` are always written under those fixed schemas,
+ * so they are read back under them with no footer-inference job;
+ * `pairs` keeps inference, because its score columns vary.
  *
  * Commits swap the WHOLE store root atomically: all three tables write
  * beside the live tree under `path.next/`, a root `_STORE_SUCCESS`
@@ -141,14 +147,15 @@ object ClusterStore {
 
   /** The committed (id, cluster_id) table; cluster_id = component min. */
   def assignment(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(asgPath(path))
+    spark.read.schema("id long, cluster_id long").parquet(asgPath(path))
 
   /** The committed evidence edge set this assignment was clustered from. */
   def pairs(spark: SparkSession, path: String): DataFrame =
     spark.read.parquet(pairsPath(path))
 
   def version(spark: SparkSession, path: String): Long =
-    spark.read.parquet(metaPath(path)).select("version").head().getLong(0)
+    spark.read.schema("version long, n_pairs long, n_nodes long")
+      .parquet(metaPath(path)).select("version").head().getLong(0)
 
   /** Cluster sizes from the persisted assignment — the histogram /
     * keep-one bookkeeping read, one narrow aggregate over the artifact. */

@@ -1,9 +1,10 @@
 package graft.ext
 
-import graft.ops.Iterate
-import org.apache.spark.sql.{Column, DataFrame}
+import graft.ops.{Iterate, StatsOps}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /**
  * [EXT] Deduplication operators for LLM training-data pipelines: exact
@@ -795,26 +796,42 @@ object DedupOps {
    * INCREMENTAL connected-components maintenance: fold a batch of new
    * dup pairs into an existing (id, cluster_id) assignment WITHOUT
    * re-clustering the corpus. New-pair endpoints contract to their
-   * current cluster roots (their own id if unseen), the full CC runs
-   * only on that contracted graph — O(batch) edges over touched
-   * clusters, not O(corpus) — and the resulting root→root mapping
-   * (bounded by touched clusters, broadcast) remaps the big assignment
-   * in one narrow join. Labels stay "min member id" exactly as a full
+   * current cluster roots (their own id if unseen); components are found
+   * only on that contracted graph — O(batch) edges over touched clusters,
+   * not O(corpus) — and the resulting root→root mapping (bounded by
+   * touched clusters, broadcast) remaps the big assignment in one narrow
+   * join. Labels stay "min member id" exactly as a full
    * [[connectedComponentsStar]] recompute would produce (spec-proven):
    * old roots are their clusters' min ids, so the min over contracted
    * nodes IS the merged cluster's global min.
+   *
+   * The contracted edge list is collected once through a LIMIT of
+   * [[graft.ops.StatsOps.FinisherGridCap]] + 1 rows. At or under the cap
+   * a driver-side union-find ([[componentMins]]) builds the root map as a
+   * local relation: no Spark job beyond the collect, where the star
+   * rounds would cost a job per round plus their checkpoints. Over the
+   * cap (a wave with more than a million evidence pairs) the distributed
+   * [[connectedComponentsStar]] runs on the contracted graph instead.
+   * Null endpoints join nothing and self-loops union nothing on either
+   * branch, so both give the same rows.
    */
   def mergeComponents(assignment: DataFrame, newPairs: DataFrame): DataFrame = {
     val asg = assignment.select(col("id"), col("cluster_id"))
     val p = newPairs.select(col("id1"), col("id2"))
-    val contracted = p
+    def contract(pairs: DataFrame): DataFrame = pairs
       .join(asg.withColumnsRenamed(
         Map("id" -> "id1", "cluster_id" -> "r1")), Seq("id1"), "left")
       .join(asg.withColumnsRenamed(
         Map("id" -> "id2", "cluster_id" -> "r2")), Seq("id2"), "left")
       .select(coalesce(col("r1"), col("id1")).as("id1"),
         coalesce(col("r2"), col("id2")).as("id2"))
-    val rootMap = connectedComponentsStar(contracted)
+    // the probe reads the new pairs as ONE partition: a LIMIT collect over
+    // n partitions runs as a scale-up sequence of take jobs (1, 4, 16, …
+    // partitions), over one partition as a single job that stops at cap + 1
+    val rootMap = StatsOps.boundedCollect(contract(p.coalesce(1)).select(
+        col("id1").cast("long"), col("id2").cast("long")), StatsOps.FinisherGridCap)
+      .map(edges => componentMins(p.sparkSession, edges))
+      .getOrElse(connectedComponentsStar(contract(p)))
     val remapped = asg
       .join(broadcast(rootMap.select(col("id").as("cluster_id"),
         col("cluster_id").as("__newc"))), Seq("cluster_id"), "left")
@@ -827,6 +844,39 @@ object DedupOps {
         col("cluster_id").as("__newc"))), Seq("id"), "left")
       .select(col("id"), coalesce(col("__newc"), col("id")).as("cluster_id"))
     remapped.unionByName(fresh)
+  }
+
+  /** Connected components of a collected (id1: long, id2: long) edge list,
+    * on the driver: one (id, cluster_id = component min) row per distinct
+    * non-null endpoint, as a local relation. Union-find over primitive
+    * arrays — the sorted distinct ids and an Int parent array indexed by
+    * position — with union by smaller root and path compression; ids are
+    * sorted, so the smaller index is the smaller id and every root is its
+    * component's min. */
+  private def componentMins(spark: SparkSession, edges: Array[Row]): DataFrame = {
+    val ends = new Array[Long](2 * edges.length)
+    var k = 0
+    for (r <- edges; c <- 0 to 1 if !r.isNullAt(c)) { ends(k) = r.getLong(c); k += 1 }
+    java.util.Arrays.sort(ends, 0, k)
+    var n = 0
+    for (i <- 0 until k if i == 0 || ends(i) != ends(i - 1)) { ends(n) = ends(i); n += 1 }
+    val ids = java.util.Arrays.copyOf(ends, n)
+    val parent = Array.range(0, n)
+    def find(i: Int): Int = {
+      var root = i
+      while (parent(root) != root) root = parent(root)
+      var j = i
+      while (parent(j) != root) { val up = parent(j); parent(j) = root; j = up }
+      root
+    }
+    for (r <- edges if !r.isNullAt(0) && !r.isNullAt(1)) {
+      val a = find(java.util.Arrays.binarySearch(ids, r.getLong(0)))
+      val b = find(java.util.Arrays.binarySearch(ids, r.getLong(1)))
+      if (a < b) parent(b) = a else if (b < a) parent(a) = b
+    }
+    spark.createDataFrame(
+      java.util.Arrays.asList(Array.tabulate(n)(i => Row(ids(i), ids(find(i)))): _*),
+      StructType.fromDDL("id long, cluster_id long"))
   }
 
   /**

@@ -207,7 +207,8 @@ object IngestOps {
         // mid-sequence. Submitting them concurrently overlaps their job
         // scheduling/IO latency: each write is a handful of small jobs
         // over the cached frames, and the wave's wall cost is the max of
-        // the six instead of the sum.
+        // the six instead of the sum. The wave returns (or throws) only
+        // once all six have ended: see [[runAll]].
         // cluster evidence: BOTH pair families, canonical (min, max) order
         val waveEvidence = batchPairs.select("id1", "id2", "jaccard")
           .unionByName(crossPairs.select(
@@ -243,20 +244,35 @@ object IngestOps {
             textCol, batchId = waveId),
           () => report.write.mode("overwrite")
             .parquet(s"${stores.reportPath}/wave=$waveId"))
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(
-          actions.size)
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        try scala.concurrent.Await.result(
-          scala.concurrent.Future.sequence(
-            actions.map(a => scala.concurrent.Future(a()))),
-          scala.concurrent.duration.Duration.Inf)
-        finally pool.shutdown()
+        runAll(actions)
         spark.read.parquet(s"${stores.reportPath}/wave=$waveId")
       } finally admitted.unpersist(blocking = false)
     } finally {
       scoped.foreach(_.unpersist(blocking = false))
       b.unpersist(blocking = false)
+    }
+  }
+
+  /** Runs the actions concurrently and returns only once EVERY one has
+    * ended. A failure is rethrown after that, the first in `actions` order
+    * with the others attached as suppressed: returning at the first
+    * failure would leave its siblings running — still reading frames the
+    * caller unpersists on the way out, and racing a retry of the same
+    * wave on the same directories. */
+  private def runAll(actions: Seq[() => Unit]): Unit = {
+    import scala.jdk.CollectionConverters._
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)
+    val failures =
+      try pool.invokeAll(actions.map(a =>
+          (() => a()): java.util.concurrent.Callable[Unit]).asJava).asScala
+        .flatMap { f =>
+          try { f.get(); None }
+          catch { case e: java.util.concurrent.ExecutionException => Some(e.getCause) }
+        }
+      finally pool.shutdown()
+    failures.headOption.foreach { first =>
+      failures.tail.foreach(first.addSuppressed)
+      throw first
     }
   }
 }

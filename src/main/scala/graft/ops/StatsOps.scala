@@ -28,22 +28,29 @@ object StatsOps {
         .cast("long"))
       .otherwise(lit(null))
 
-  /** Row cap of the grid a driver-side finisher ([[ipfRake]],
-    * [[medianTest]]) collects: their contract is bounded LEVELS, and a
-    * grid past a million cells is a high-cardinality key, not a level set. */
+  /** Row cap of what a driver-side finisher collects: the grid of
+    * [[ipfRake]] and [[medianTest]], whose contract is bounded LEVELS (a
+    * grid past a million cells is a high-cardinality key, not a level
+    * set), and the contracted edge list of
+    * [[graft.ext.DedupOps.mergeComponents]]. */
   private[graft] val FinisherGridCap = 1000000
 
+  /** Collects `df` when it has at most `cap` rows, `None` otherwise. The
+    * cap rides the collect as a LIMIT cap + 1 — no separate counting job,
+    * and never more than cap + 1 rows on the driver. */
+  private[graft] def boundedCollect(df: DataFrame,
+                                    cap: Int): Option[Array[org.apache.spark.sql.Row]] = {
+    val rows = df.limit(cap + 1).collect()
+    if (rows.length > cap) None else Some(rows)
+  }
+
   /** Collects a finisher's grid, failing with a named contract violation
-    * over [[FinisherGridCap]] rows instead of risking a driver OOM. The cap
-    * rides the collect as a LIMIT cap + 1 — no separate counting job. */
-  private def collectGrid(grid: DataFrame, op: String): Array[org.apache.spark.sql.Row] = {
-    val rows = grid.limit(FinisherGridCap + 1).collect()
-    if (rows.length > FinisherGridCap)
+    * over [[FinisherGridCap]] rows instead of risking a driver OOM. */
+  private def collectGrid(grid: DataFrame, op: String): Array[org.apache.spark.sql.Row] =
+    boundedCollect(grid, FinisherGridCap).getOrElse(
       throw new IllegalArgumentException(
         s"$op: bounded-levels contract violated — the collected grid exceeds " +
-          s"$FinisherGridCap cells; its key columns are not bounded levels")
-    rows
-  }
+          s"$FinisherGridCap cells; its key columns are not bounded levels"))
 
   /** A collected key as a driver-side grouping key: BinaryType values
     * collect as Array[Byte], whose equality is by reference, so two

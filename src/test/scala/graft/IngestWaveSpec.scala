@@ -301,4 +301,42 @@ class IngestWaveSpec extends SparkSpec {
       .select(col("doc_id").cast("long"), col("cell").cast("long"))
       .as[(Long, Long)].collect().sorted shouldBe cells1
   }
+
+  test("ingestWave fan-out: a failed artifact write surfaces only after its siblings end") {
+    val work = Files.createTempDirectory("graft_wave_fail_").toString
+    // no lexical store at lexPath: LexIndexStore.append fails at once
+    val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
+      s"$work/clusters", s"$work/ann", s"$work/nolex", s"$work/report")
+    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
+    val base = Seq((10L, "the solid base document with plenty words here",
+      Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
+    base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
+    DedupOps.bandIndex(base, "doc_id", "text", 3, 16, 4)
+      .write.parquet(s"${st.bandIndexPath}/wave=0")
+    ClusterStore.build(st.clusterPath, Seq((9L, 10L)).toDF("id1", "id2"))
+    AnnIndexStore.save(st.annPath, base, "doc_id", "embedding", cents)
+    val wave = Seq(
+      (201L, "alpha beta gamma delta epsilon the zeta omega kappa iota",
+        Seq(0.1f, 0.9f, 0f, 0f)),
+      (202L, "alpha beta gamma delta epsilon the zeta omega kappa iota",
+        Seq(0.2f, 0.8f, 0f, 0f)))
+      .toDF("doc_id", "text", "embedding")
+    val sc = spark.sparkContext
+    val (ex, activeAtCatch) = try {
+      IngestOps.ingestWave(spark, wave, "doc_id", "text", "embedding", st,
+        waveId = 1, n = 3, numHashes = 16, bands = 4, threshold = 0.9,
+        minTokens = 5, maxTokens = 80, minStopHits = 1)
+      fail("a wave whose lexical store is missing must throw")
+    } catch {
+      case e: org.apache.spark.sql.AnalysisException =>
+        (e, sc.statusTracker.getActiveJobIds.toSeq)
+    }
+    ex.getMessage should include (s"$work/nolex/meta")
+    activeAtCatch shouldBe empty
+    // the sibling writes had all committed before the failure surfaced
+    for (dir <- Seq(s"${st.corpusPath}/wave=1", s"${st.bandIndexPath}/wave=1",
+        s"${st.reportPath}/wave=1"))
+      new java.io.File(s"$dir/_SUCCESS") should exist
+    ClusterStore.version(spark, st.clusterPath) shouldBe 2L
+  }
 }

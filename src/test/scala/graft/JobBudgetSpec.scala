@@ -52,6 +52,13 @@ class JobBudgetSpec extends SparkSpec {
     // the commit materializes nothing before its writes
     all(jobs.map(_.site)) should not fullyMatch regex (
       "(count|localCheckpoint) at ClusterStore\\.scala:\\d+")
+    // assignment and meta are read under their fixed schemas: the one
+    // footer inference left is the evidence table's, whose columns vary
+    jobs.filterNot(_.inSql).map(_.site.takeWhile(_ != ':')) shouldBe
+      Seq("parquet at ClusterStore.scala")
+    // a small batch folds in on the driver: no star round, no fixed-point probe
+    all(jobs.map(_.site)) should not fullyMatch regex (
+      "(localCheckpoint|checkpoint) at Iterate\\.scala:\\d+|head at DedupOps\\.scala:\\d+")
   }
 
   test("ipfRake over the grid cap: a named contract violation, no extra job") {

@@ -91,20 +91,56 @@ class SessionOpsPropertiesSpec extends SparkSpec {
     // brand-new node (21-22), and adds a disjoint new pair (30-31) —
     // plus a new node SMALLER than every old root in its merged cluster
     // (0-20): the merged label must become 0, not 20
+    // — and degenerate evidence: null endpoints beside an old node (11)
+    // and a new one (50), a pair inside one old cluster (1-3: a self-loop
+    // once contracted) and a literal self-loop of a new node (40-40)
     val pairs2 = Seq((3L, 10L), (21L, 22L), (30L, 31L), (0L, 20L))
       .toDF("id1", "id2")
+      .unionByName(Seq[(Option[Long], Option[Long])]((None, Some(11L)),
+        (Some(50L), None), (Some(1L), Some(3L)), (Some(40L), Some(40L)))
+        .toDF("id1", "id2"))
     val merged = DedupOps.mergeComponents(asg1, pairs2)
-      .orderBy("id").as[(Long, Long)].collect()
+      .orderBy("id").as[(Option[Long], Option[Long])].collect()
     val full = DedupOps
       .connectedComponentsStar(pairs1.unionByName(pairs2))
-      .orderBy("id").as[(Long, Long)].collect()
+      .orderBy("id").as[(Option[Long], Option[Long])].collect()
     merged shouldBe full
-    val byId = merged.toMap
+    merged.head shouldBe ((None, None)) // the null endpoint's one row
+    val byId = merged.collect { case (Some(id), Some(c)) => id -> c }.toMap
     byId(11L) shouldBe 1L // bridged chains share the global min label
     byId(20L) shouldBe 0L // label dropped to the smaller NEW id
     byId(22L) shouldBe 0L // the extension rides along
     byId(0L) shouldBe 0L
     byId(31L) shouldBe 30L
+    byId(40L) shouldBe 40L
+    byId(50L) shouldBe 50L
+  }
+
+  test("mergeComponents over the finisher cap: the star rounds label every component") {
+    import graft.ext.DedupOps
+    import graft.ops.StatsOps
+    // old clusters {10, 11, 12} and {20, 21}
+    val asg = Seq((10L, 10L), (11L, 10L), (12L, 10L), (20L, 20L), (21L, 20L))
+      .toDF("id", "cluster_id")
+    // cap + 1 disjoint new pairs (1000 + 2k, 1001 + 2k) — too many to
+    // collect — plus one pair bridging the two old clusters
+    val disjoint = StatsOps.FinisherGridCap + 1L
+    val pairs = spark.range(disjoint)
+      .select((col("id") * 2 + 1000L).as("id1"), (col("id") * 2 + 1001L).as("id2"))
+      .unionByName(Seq((12L, 21L)).toDF("id1", "id2"))
+    val (merged, Harness.Profile(jobs, _, _)) = Harness.profiled(spark.sparkContext)(
+      DedupOps.mergeComponents(asg, pairs).persist())
+    try {
+      atLeast(1, jobs.map(_.site)) should fullyMatch regex
+        "localCheckpoint at Iterate\\.scala:\\d+"
+      val fresh = merged.filter(col("id") >= 1000L)
+      fresh.count() shouldBe 2 * disjoint
+      // each new pair is labelled by its min, the even id
+      fresh.filter(col("cluster_id") =!= col("id") - col("id") % 2).count() shouldBe 0L
+      // the bridged cluster takes its global min
+      merged.filter(col("id") < 1000L).orderBy("id").as[(Long, Long)].collect() shouldBe
+        Array((10L, 10L), (11L, 10L), (12L, 10L), (20L, 10L), (21L, 10L))
+    } finally merged.unpersist()
   }
 
   test("blocklistFilterAC is output-identical to the literal-fold form") {
