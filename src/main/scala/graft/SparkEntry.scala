@@ -6282,7 +6282,11 @@ object SparkEntry {
     * ANY higher-ranked prefix pair, `TextOps.bpeTrainMerges`'s exact
     * rule — and applies them in rank order as the same flat string
     * replaces the Spark trainer uses, so the merge table DuckDB derives
-    * is identical to the one the Spark side trains. */
+    * is identical to the one the Spark side trains. Every CTE is
+    * MATERIALIZED (the [[markovAttributionOracle]] idiom): s$k and m$k are
+    * read several times each, and DuckDB inlining the whole predecessor
+    * chain per reference ran out of memory at sf0.01. The hint changes
+    * the plan, not the result. */
   private def bpeOracleRounds(n: Int, batch: Int = 1): String = {
     val kTop = 8 * batch
     val sizes = Iterator.unfold(n) { rem =>
@@ -6295,20 +6299,20 @@ object SparkEntry {
         s"""CASE WHEN $pick IS NULL THEN $prev
                  ELSE replace($prev, $pick, '.' || replace($pick, '.', '') || '.') END"""
       }
-      s"""p$k AS (SELECT '.' || tk[i] || '.' || tk[i+1] || '.' AS pair, SUM(freq) AS cnt
+      s"""p$k AS MATERIALIZED (SELECT '.' || tk[i] || '.' || tk[i+1] || '.' AS pair, SUM(freq) AS cnt
                   FROM (SELECT freq, string_split(st, '.') AS tk FROM s${k - 1}) t$k,
                        unnest(generate_series(2, len(tk)-2)) AS u$k(i)
                   GROUP BY 1),
-              r$k AS (SELECT pair, tk2[2] AS t1, tk2[3] AS t2, rn FROM (
+              r$k AS MATERIALIZED (SELECT pair, tk2[2] AS t1, tk2[3] AS t2, rn FROM (
                         SELECT pair, string_split(pair, '.') AS tk2,
                                row_number() OVER (ORDER BY cnt DESC, pair ASC) AS rn
                         FROM p$k) WHERE rn <= $kTop),
-              m$k AS (SELECT a.pair, row_number() OVER (ORDER BY a.rn ASC) AS sel
+              m$k AS MATERIALIZED (SELECT a.pair, row_number() OVER (ORDER BY a.rn ASC) AS sel
                       FROM r$k a
                       WHERE NOT EXISTS (SELECT 1 FROM r$k q WHERE q.rn < a.rn
                             AND (q.t1 = a.t1 OR q.t1 = a.t2 OR q.t2 = a.t1 OR q.t2 = a.t2))
                       QUALIFY sel <= $b),
-              s$k AS (SELECT w, freq, $apply AS st FROM s${k - 1})"""
+              s$k AS MATERIALIZED (SELECT w, freq, $apply AS st FROM s${k - 1})"""
     }.mkString(",\n              ")
   }
 
@@ -6316,7 +6320,8 @@ object SparkEntry {
     * over the full-corpus vocabulary: f0 is every corpus word's initial
     * char state; round k re-applies the trained round-k merges m$k (from
     * [[bpeOracleRounds]] — trained on the SAMPLE, applied to everything,
-    * exactly the Spark split). */
+    * exactly the Spark split). MATERIALIZED for the same reason as the
+    * training rounds. */
   private def bpeOracleApplyRounds(n: Int, batch: Int = 1): String = {
     val sizes = Iterator.unfold(n) { rem =>
       if (rem <= 0) None else Some((math.min(batch, rem), rem - math.min(batch, rem)))
@@ -6328,7 +6333,7 @@ object SparkEntry {
         s"""CASE WHEN $pick IS NULL THEN $prev
                  ELSE replace($prev, $pick, '.' || replace($pick, '.', '') || '.') END"""
       }
-      s"""f$k AS (SELECT w, $apply AS st FROM f${k - 1})"""
+      s"""f$k AS MATERIALIZED (SELECT w, $apply AS st FROM f${k - 1})"""
     }.mkString(",\n              ")
   }
 

@@ -454,51 +454,6 @@ object DedupOps {
     else df.repartition(target)
   }
 
-  /** MinHash signatures in exploded (id, i, minhash) form:
-    * sig[i] = min over shingles of fingerprint60(i ‖ ':' ‖ shingle-hash) —
-    * `numHashes` permutations simulated by salting the hash with i.
-    * One narrow pass per doc (kernel above), ZERO shuffle: at 100 TB the
-    * corpus streams once; the only wide op in minhash dedup is the band join. */
-  def minhashSignatures(df: DataFrame, idCol: String, textCol: String,
-                        n: Int, numHashes: Int): DataFrame =
-    spread(df)
-      .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
-      .select(col("id"),
-        posexplode(graft.functions.MinhashSignature(col("sh"), numHashes)))
-      .select(col("id"), col("pos").cast("bigint").as("i"),
-        col("col").as("minhash"))
-
-  /** LSH banding over exploded (id, i, minhash) signatures: docs sharing any
-    * band key become candidate pairs. The band self-join shuffles
-    * O(docs × bands) rows of 16-byte keys. Hot boilerplate buckets are the
-    * skew AND volume risk: band keys with document frequency > `maxBandDf`
-    * are dropped before the self-join ([[dropHotKeys]]) — AQE splits skewed
-    * partitions but cannot un-quadratic the pair count. */
-  def lshCandidatePairs(signatures: DataFrame, bands: Int, rows: Int,
-                        maxBandDf: Int = Int.MaxValue): DataFrame = {
-    val banded = signatures
-      .withColumn("band", (col("i") / rows).cast("int"))
-      .groupBy("id", "band")
-      .agg(md5(concat_ws(",",
-        transform(sort_array(collect_list(struct(col("i"), col("minhash")))),
-          s => s.getField("minhash").cast("string")))).as("band_key"))
-    bandJoin(banded, maxBandDf)
-  }
-
-  private def bandJoin(banded0: DataFrame, maxBandDf: Int): DataFrame = {
-    // the df key is the (band, band_key) pair — fold band into the key so
-    // dropHotKeys can cap on one column
-    val banded = dropHotKeys(
-      banded0.withColumn("band_key",
-        concat_ws(":", col("band").cast("string"), col("band_key"))),
-      "band_key", maxBandDf)
-    banded.as("a").join(banded.as("b"),
-        col("a.band_key") === col("b.band_key") &&
-        col("a.id") < col("b.id"))
-      .select(col("a.id").as("id1"), col("b.id").as("id2"))
-      .distinct()
-  }
-
   /** Full MinHash-LSH near-dup pipeline: per-row signatures → per-row band
     * keys → band-bucket join for candidates → exact-Jaccard verification ≥
     * threshold. Wide ops: the band join + the two verification joins — all

@@ -4,26 +4,25 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /**
- * The BATCH ingest wave — the production admission path composed as ONE
- * lazy DataFrame DAG, batch-side twin of
- * [[graft.streaming.StreamingPipeline.dedupAnnIngest]] (which proves the
- * same lockstep-artifact discipline per micro-batch): a wave of candidate
- * documents flows through quality gate → in-batch near-dup rejection →
- * incremental near-dup rejection against the persisted corpus band index,
- * and then EVERY persisted artifact advances with the admitted set in one
- * wave scope — corpus rows, band index, dup-cluster assignment
- * ([[ClusterStore.append]]), ANN cells ([[AnnIndexStore.append]]) and
- * BM25 postings ([[LexIndexStore.append]]). A doc is searchable
- * (semantically AND lexically) iff it was admitted, and the cluster
- * artifact carries the evidence for every REJECTED near-dup too — the
- * takedown/leakage consumers need the whole component, not the survivors.
+ * The BATCH ingest wave — the production admission path, batch-side twin
+ * of [[graft.streaming.StreamingPipeline.dedupAnnIngest]] (which proves
+ * the same lockstep-artifact discipline per micro-batch): a wave of
+ * candidate documents flows through quality gate → in-batch near-dup
+ * rejection → incremental near-dup rejection against the persisted corpus
+ * band index, and then EVERY persisted artifact advances with the admitted
+ * set in one wave scope — corpus rows, band index, dup-cluster assignment
+ * ([[ClusterStore.append]]), ANN cells ([[AnnIndexStore.append]]) and BM25
+ * postings ([[LexIndexStore.append]]). A doc is searchable (semantically
+ * AND lexically) iff it was admitted, and the cluster artifact carries the
+ * evidence for every REJECTED near-dup too — the takedown/leakage
+ * consumers need the whole component, not the survivors.
  *
  * Mirrors the reference pipeline's run-scoped batch discipline
  * (`/root/reference/dag_mgo_pg_schedule_etl_qc.py:310,320` — run_id
- * isolation; here `wave=`/`b=` directory scoping), re-expressed as lazy
- * Spark plans: Catalyst sees gate → dedup → admission as one plan per
- * artifact sink, so documents' unused columns prune at the single scan
- * and nothing materializes between operators except the artifact writes.
+ * isolation; here `wave=`/`b=` directory scoping). Each admission stage
+ * is materialized once as a lineage cut ([[graft.ops.Iterate.cut]]), so
+ * the six artifact writes plan small frames over `LogicalRDD` leaves
+ * instead of re-planning the whole gate → dedup → admission chain.
  */
 object IngestOps {
 
@@ -80,7 +79,12 @@ object IngestOps {
    * self-join (in-batch) and one band-key probe of the persisted index
    * (batch side broadcasts under AQE); corpus text is read only for
    * verification candidates, column-pruned. Store appends are O(admitted)
-   * — nothing here is O(corpus) except the one narrow index probe.
+   * — nothing here is O(corpus) except the one narrow index probe. The
+   * wave-scope cuts (batch, gated docs, in-batch pairs, in-batch
+   * survivors, corpus pairs, semantic losers when that gate is on,
+   * admitted) cost one job each and hold O(batch) rows until the wave
+   * returns; with a SparkContext checkpoint dir they are reliable
+   * checkpoints, deleted on the way out.
    */
   private val Marker = "_STORE_SUCCESS"
 
@@ -132,29 +136,34 @@ object IngestOps {
     Seq(stores.corpusPath, stores.bandIndexPath, stores.reportPath).foreach(
       graft.sources.TreeSwap.recover(spark, _, ".compact", ".precompact",
         Marker))
-    // one batch scan feeds every stage — persist the (small) wave, not
-    // the corpus. The gate outputs are ALSO persisted for the wave's
-    // scope: the lockstep section below runs ~6 independent actions
-    // (corpus write, band index, cluster append, ANN append, postings
-    // append, report), and without a cut each action would re-run the
-    // shingle/minhash/band/verify pipelines from scratch — measured 2-3×
-    // the whole wave's cost at sf0.1, pure recomputation.
-    val b = batch.persist()
-    val scoped = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def scopePersist(df: DataFrame): DataFrame = { scoped += df; df.persist() }
+    // every wave-scope stage is CUT (materialized once, rebased on a
+    // `LogicalRDD` leaf; [[graft.ops.Iterate.cut]]): the six writes below
+    // read the stages many times over, and a frame that merely persisted
+    // them would still carry the whole admission lineage in every later
+    // plan — Spark formats that plan into each SQL execution's start event
+    // and again at every AQE re-plan, so nested persisted stages made the
+    // driver re-print it per write (up to 1 MB of text per event). A cut
+    // is computed exactly once, before the fan-out, so the parallel
+    // writers never race to fill it.
+    val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
+    def cut(df: DataFrame): DataFrame = {
+      val c = graft.ops.Iterate.cut(df)
+      releases += c.release
+      c.df
+    }
     try {
-      val gatedIds = scopePersist(TextOps.gopherFilter(b, idCol, textCol,
+      val b = cut(batch)
+      val gated = cut(b.join(TextOps.gopherFilter(b, idCol, textCol,
           minTokens = minTokens, maxTokens = maxTokens,
           minStopHits = minStopHits)
-        .filter(col("keep")).select(idCol))
-      val gated = b.join(gatedIds, idCol)
+        .filter(col("keep")).select(idCol), idCol))
 
       // in-batch near-dup evidence: LSH candidates, exact-Jaccard verified
-      val batchPairs = scopePersist(DedupOps.minhashDedupPairs(gated,
+      val batchPairs = cut(DedupOps.minhashDedupPairs(gated,
         idCol, textCol, n, numHashes, bands, threshold))
       // pair-min admission: id2 of any verified pair (id1 < id2) rejects
       val batchLosers = batchPairs.select(col("id2").as(idCol)).distinct()
-      val batchKept = gated.join(batchLosers, Seq(idCol), "left_anti")
+      val batchKept = cut(gated.join(batchLosers, Seq(idCol), "left_anti"))
 
       // incremental near-dup vs the persisted corpus: band-probe + verify.
       // The CURRENT wave's partition is excluded (partition-pruned, so a
@@ -168,7 +177,7 @@ object IngestOps {
       val corpusText = spark.read.parquet(stores.corpusPath)
         .filter(col("wave") =!= waveId)
         .select(col(idCol), col(textCol))
-      val crossPairs = scopePersist(DedupOps.incrementalNearDupPairs(
+      val crossPairs = cut(DedupOps.incrementalNearDupPairs(
         batchKept, idCol, textCol, corpusIndex, corpusText,
         n, numHashes, bands, threshold))
       val corpusLosers = crossPairs.select(col("new_id").as(idCol)).distinct()
@@ -181,84 +190,72 @@ object IngestOps {
           val corpusVecs = spark.read.parquet(s"${stores.annPath}/cells")
             .filter(col("b") =!= waveId)
             .select(col(idCol), col(vecCol))
-          scopePersist(SimilarityOps.cosineNearDupPairsIncremental(
+          cut(SimilarityOps.cosineNearDupPairsIncremental(
               batchKept2.filter(col(vecCol).isNotNull), corpusVecs,
               idCol, vecCol, tau, nBits, stride)
             .select(col("new_id").as(idCol)).distinct())
         case None => batchKept2.select(idCol).limit(0)
       }
-      val admitted = batchKept2.join(semanticLosers, Seq(idCol), "left_anti")
-        .persist()
+      val admitted = cut(
+        batchKept2.join(semanticLosers, Seq(idCol), "left_anti"))
 
-      try {
-        // materialize the whole persisted admission chain with ONE action
-        // before fanning out: every scoped frame (gate, pairs, losers) is
-        // in `admitted`'s lineage, so this caches them all exactly once —
-        // concurrent first-touch from the parallel writers below would
-        // instead compute the same partitions redundantly (BlockManager
-        // races are correct but wasteful)
-        admitted.count()
-
-        // ---- artifacts advance in lockstep, all wave-scoped ----
-        // The six writes are pairwise independent (disjoint store dirs)
-        // and the wave is replay-idempotent at the directory level
-        // (IngestWaveSpec), so completion ORDER carries no recovery
-        // meaning — a crash mid-fanout heals exactly like a crash
-        // mid-sequence. Submitting them concurrently overlaps their job
-        // scheduling/IO latency: each write is a handful of small jobs
-        // over the cached frames, and the wave's wall cost is the max of
-        // the six instead of the sum. The wave returns (or throws) only
-        // once all six have ended: see [[runAll]].
-        // cluster evidence: BOTH pair families, canonical (min, max) order
-        val waveEvidence = batchPairs.select("id1", "id2", "jaccard")
-          .unionByName(crossPairs.select(
-            least(col("new_id"), col("corpus_id")).as("id1"),
-            greatest(col("new_id"), col("corpus_id")).as("id2"),
-            col("jaccard")))
-        // ---- per-doc admission report, the wave's audit artifact ----
-        val report = b.select(col(idCol))
-          .join(gatedIds.withColumn("__g", lit(1)), Seq(idCol), "left")
-          .join(batchLosers.withColumn("__b", lit(1)), Seq(idCol), "left")
-          .join(corpusLosers.withColumn("__c", lit(1)), Seq(idCol), "left")
-          .join(semanticLosers.withColumn("__s", lit(1)), Seq(idCol), "left")
-          .select(col(idCol),
-            when(col("__g").isNull, "rejected_quality")
-              .when(col("__b").isNotNull, "rejected_batch_dup")
-              .when(col("__c").isNotNull, "rejected_corpus_dup")
-              .when(col("__s").isNotNull, "rejected_semantic_dup")
-              .otherwise("admitted").as("disposition"))
-        val actions: Seq[() => Unit] = Seq(
-          () => admitted.drop(vecCol).write.mode("overwrite")
-            .parquet(s"${stores.corpusPath}/wave=$waveId"),
-          () => DedupOps.bandIndex(admitted, idCol, textCol, n, numHashes,
-              bands)
-            .write.mode("overwrite")
-            .parquet(s"${stores.bandIndexPath}/wave=$waveId"),
-          () => ClusterStore.append(stores.clusterPath, waveEvidence),
-          // a doc without an embedding is admitted but not ANN-searchable
-          // (the lexical index still carries it) — never NPE the assign
-          () => AnnIndexStore.append(stores.annPath,
-            admitted.filter(col(vecCol).isNotNull), idCol, vecCol,
-            batchId = waveId),
-          () => LexIndexStore.append(stores.lexPath, admitted, idCol,
-            textCol, batchId = waveId),
-          () => report.write.mode("overwrite")
-            .parquet(s"${stores.reportPath}/wave=$waveId"))
-        runAll(actions)
-        spark.read.parquet(s"${stores.reportPath}/wave=$waveId")
-      } finally admitted.unpersist(blocking = false)
-    } finally {
-      scoped.foreach(_.unpersist(blocking = false))
-      b.unpersist(blocking = false)
-    }
+      // ---- artifacts advance in lockstep, all wave-scoped ----
+      // The six writes are pairwise independent (disjoint store dirs)
+      // and the wave is replay-idempotent at the directory level
+      // (IngestWaveSpec), so completion ORDER carries no recovery
+      // meaning — a crash mid-fanout heals exactly like a crash
+      // mid-sequence. Submitting them concurrently overlaps their job
+      // scheduling/IO latency: each write is a handful of small jobs
+      // over the cut frames, and the wave's wall cost is the max of
+      // the six instead of the sum. The wave returns (or throws) only
+      // once all six have ended ([[runAll]]), so the cuts are released
+      // after the last reader.
+      // cluster evidence: BOTH pair families, canonical (min, max) order
+      val waveEvidence = batchPairs.select("id1", "id2", "jaccard")
+        .unionByName(crossPairs.select(
+          least(col("new_id"), col("corpus_id")).as("id1"),
+          greatest(col("new_id"), col("corpus_id")).as("id2"),
+          col("jaccard")))
+      // ---- per-doc admission report, the wave's audit artifact ----
+      val report = b.select(col(idCol))
+        .join(gated.select(col(idCol), lit(1).as("__g")), Seq(idCol), "left")
+        .join(batchLosers.withColumn("__b", lit(1)), Seq(idCol), "left")
+        .join(corpusLosers.withColumn("__c", lit(1)), Seq(idCol), "left")
+        .join(semanticLosers.withColumn("__s", lit(1)), Seq(idCol), "left")
+        .select(col(idCol),
+          when(col("__g").isNull, "rejected_quality")
+            .when(col("__b").isNotNull, "rejected_batch_dup")
+            .when(col("__c").isNotNull, "rejected_corpus_dup")
+            .when(col("__s").isNotNull, "rejected_semantic_dup")
+            .otherwise("admitted").as("disposition"))
+      val actions: Seq[() => Unit] = Seq(
+        () => admitted.drop(vecCol).write.mode("overwrite")
+          .parquet(s"${stores.corpusPath}/wave=$waveId"),
+        () => DedupOps.bandIndex(admitted, idCol, textCol, n, numHashes,
+            bands)
+          .write.mode("overwrite")
+          .parquet(s"${stores.bandIndexPath}/wave=$waveId"),
+        () => ClusterStore.append(stores.clusterPath, waveEvidence),
+        // a doc without an embedding is admitted but not ANN-searchable
+        // (the lexical index still carries it) — never NPE the assign
+        () => AnnIndexStore.append(stores.annPath,
+          admitted.filter(col(vecCol).isNotNull), idCol, vecCol,
+          batchId = waveId),
+        () => LexIndexStore.append(stores.lexPath, admitted, idCol,
+          textCol, batchId = waveId),
+        () => report.write.mode("overwrite")
+          .parquet(s"${stores.reportPath}/wave=$waveId"))
+      runAll(actions)
+      spark.read.parquet(s"${stores.reportPath}/wave=$waveId")
+    } finally releases.foreach(_())
   }
 
   /** Runs the actions concurrently and returns only once EVERY one has
     * ended. A failure is rethrown after that, the first in `actions` order
     * with the others attached as suppressed: returning at the first
-    * failure would leave its siblings running — still reading frames the
-    * caller unpersists on the way out, and racing a retry of the same
-    * wave on the same directories. */
+    * failure would leave its siblings running — still reading cuts the
+    * caller releases on the way out, and racing a retry of the same wave
+    * on the same directories. */
   private def runAll(actions: Seq[() => Unit]): Unit = {
     import scala.jdk.CollectionConverters._
     val pool = java.util.concurrent.Executors.newFixedThreadPool(actions.size)

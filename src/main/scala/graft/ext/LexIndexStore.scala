@@ -60,8 +60,10 @@ object LexIndexStore {
       nBucketsOf(newDocs.sparkSession, path), batchId)
   }
 
+  /** `meta` is always written as one `n_buckets int` row, so it is read
+    * under that schema: no footer-inference job before the read. */
   private def nBucketsOf(spark: SparkSession, path: String): Int =
-    spark.read.parquet(s"$path/meta").head().getInt(0)
+    spark.read.schema("n_buckets int").parquet(s"$path/meta").head().getInt(0)
 
   /**
    * COMPACT the ingest batches: a long-running append stream accretes one

@@ -7,7 +7,10 @@ import org.apache.spark.sql.execution.LogicalRDD
 /**
  * The one per-round lineage cut behind every iterative operator (the
  * graph family, both connected-components forms, Weiszfeld, MMR, BPE
- * training).
+ * training), and the stage cut of the ingest wave
+ * ([[graft.ext.IngestOps.ingestWave]]), whose six artifact writes read
+ * each admission stage as a `LogicalRDD` leaf instead of re-planning —
+ * and re-printing into every SQL event — the whole chain above it.
  *
  * Why every round is cut: a lazily composed loop embeds all i−1
  * predecessor plans inside round i's, so total work is O(rounds²)

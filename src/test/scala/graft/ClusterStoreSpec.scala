@@ -12,8 +12,21 @@ import org.apache.spark.sql.functions._
 class ClusterStoreSpec extends SparkSpec {
   import spark.implicits._
 
-  private def tmp(): String =
-    java.nio.file.Files.createTempDirectory("cstore_spec_").toString + "/s"
+  private val dirs = scala.collection.mutable.ArrayBuffer.empty[java.io.File]
+
+  /** A fresh store path; its temp dir is deleted when the test ends. */
+  private def tmp(): String = {
+    val dir = java.nio.file.Files.createTempDirectory("cstore_spec_")
+    dirs += dir.toFile
+    s"$dir/s"
+  }
+
+  override def withFixture(test: NoArgTest) =
+    try super.withFixture(test)
+    finally {
+      dirs.foreach(org.apache.commons.io.FileUtils.deleteDirectory)
+      dirs.clear()
+    }
 
   private def pairsDf(p: (Long, Long)*): DataFrame =
     p.toSeq.toDF("id1", "id2")

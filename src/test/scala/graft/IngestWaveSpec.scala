@@ -3,6 +3,11 @@ package graft
 import java.nio.file.Files
 import graft.ext.{AnnIndexStore, ClusterStore, DedupOps, IngestOps,
   LexIndexStore, SimilarityOps, TextOps}
+import org.apache.spark.{CheckpointDirAccess, GraftListenerBus}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
+  SparkListenerSQLExecutionStart}
 import org.apache.spark.sql.functions._
 
 /**
@@ -15,32 +20,18 @@ import org.apache.spark.sql.functions._
 class IngestWaveSpec extends SparkSpec {
   import spark.implicits._
 
-  test("ingestWave: report exact; clusters/ANN/lex equal batch rebuilds over base ∪ admitted") {
-    val work = Files.createTempDirectory("graft_wave_").toString
-    val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
-      s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
-
-    // base corpus (admitted as-is): two near-dup docs so the base cluster
-    // store is non-trivial
-    val baseTxt = "the quick brown fox jumps over the lazy dog today"
-    val base = Seq(
-      (10L, baseTxt, Seq(0.9f, 0.1f, 0f, 0f)),
-      (11L, baseTxt, Seq(0.8f, 0.2f, 0f, 0f)))
-      .toDF("doc_id", "text", "embedding")
-    base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
-    DedupOps.bandIndex(base, "doc_id", "text", n = 3, numHashes = 16,
-        bands = 4)
-      .write.parquet(s"${st.bandIndexPath}/wave=0")
-    ClusterStore.build(st.clusterPath,
-      DedupOps.minhashDedupPairs(base, "doc_id", "text",
-        n = 3, numHashes = 16, bands = 4, threshold = 0.9))
-    AnnIndexStore.save(st.annPath, base, "doc_id", "embedding", cents)
-    LexIndexStore.build(st.lexPath, base, "doc_id", "text", nBuckets = 8)
-
-    // the wave: one per disposition (plus a second admit)
+  // The first spec's shape: a two-doc base with one near-dup pair (so the
+  // base cluster store is non-trivial) and a six-doc wave with one doc
+  // per disposition plus a second admit.
+  private val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
+  private val baseTxt = "the quick brown fox jumps over the lazy dog today"
+  private lazy val shapeBase = Seq(
+    (10L, baseTxt, Seq(0.9f, 0.1f, 0f, 0f)),
+    (11L, baseTxt, Seq(0.8f, 0.2f, 0f, 0f)))
+    .toDF("doc_id", "text", "embedding")
+  private lazy val shapeWave = {
     val txt102 = "alpha beta gamma delta epsilon the zeta omega kappa iota"
-    val wave = Seq(
+    Seq(
       (101L, "xx", Seq(0.5f, 0.5f, 0f, 0f)),       // fails the gate
       (102L, txt102, Seq(0.1f, 0.9f, 0f, 0f)),      // admitted
       (103L, txt102, Seq(0.2f, 0.8f, 0f, 0f)),      // in-batch dup of 102
@@ -50,11 +41,35 @@ class IngestWaveSpec extends SparkSpec {
       (106L, null.asInstanceOf[String],
         Seq(0.4f, 0.6f, 0f, 0f)))                   // null text: no admission
       .toDF("doc_id", "text", "embedding")
+  }
 
-    val report = IngestOps.ingestWave(spark, wave, "doc_id", "text",
+  /** Fresh stores under `work` holding `shapeBase` as the admitted base. */
+  private def seedShape(work: String): IngestOps.WaveStores = {
+    val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
+      s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
+    shapeBase.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
+    DedupOps.bandIndex(shapeBase, "doc_id", "text", n = 3, numHashes = 16,
+        bands = 4)
+      .write.parquet(s"${st.bandIndexPath}/wave=0")
+    ClusterStore.build(st.clusterPath,
+      DedupOps.minhashDedupPairs(shapeBase, "doc_id", "text",
+        n = 3, numHashes = 16, bands = 4, threshold = 0.9))
+    AnnIndexStore.save(st.annPath, shapeBase, "doc_id", "embedding", cents)
+    LexIndexStore.build(st.lexPath, shapeBase, "doc_id", "text", nBuckets = 8)
+    st
+  }
+
+  private def runShape(st: IngestOps.WaveStores): DataFrame =
+    IngestOps.ingestWave(spark, shapeWave, "doc_id", "text",
       "embedding", st, waveId = 1,
       n = 3, numHashes = 16, bands = 4, threshold = 0.9,
       minTokens = 5, maxTokens = 80, minStopHits = 1)
+
+  test("ingestWave: report exact; clusters/ANN/lex equal batch rebuilds over base ∪ admitted") {
+    val work = Files.createTempDirectory("graft_wave_").toString
+    val st = seedShape(work)
+    val (base, wave) = (shapeBase, shapeWave)
+    val report = runShape(st)
 
     // ---- the report: every wave doc exactly once, dispositions exact ----
     report.orderBy("doc_id").as[(Long, String)].collect() shouldBe Array(
@@ -119,7 +134,6 @@ class IngestWaveSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft_wave_seq_").toString
     val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
       s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
     val base = Seq((10L, "the solid base document with plenty words here",
       Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
     base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
@@ -166,7 +180,6 @@ class IngestWaveSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft_wave_compact_").toString
     val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
       s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
     val base = Seq((10L, "the solid base document with plenty words here",
       Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
     base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
@@ -219,7 +232,6 @@ class IngestWaveSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft_wave_sem_").toString
     val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
       s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
     val base = Seq((10L, "the solid base document with plenty words here",
       Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
     base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
@@ -265,7 +277,6 @@ class IngestWaveSpec extends SparkSpec {
     val work = Files.createTempDirectory("graft_wave_replay_").toString
     val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
       s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
     val base = Seq((10L, "the solid base document with plenty words here",
       Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
     base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
@@ -307,7 +318,6 @@ class IngestWaveSpec extends SparkSpec {
     // no lexical store at lexPath: LexIndexStore.append fails at once
     val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
       s"$work/clusters", s"$work/ann", s"$work/nolex", s"$work/report")
-    val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
     val base = Seq((10L, "the solid base document with plenty words here",
       Seq(0.9f, 0.1f, 0f, 0f))).toDF("doc_id", "text", "embedding")
     base.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
@@ -338,5 +348,77 @@ class IngestWaveSpec extends SparkSpec {
         s"${st.reportPath}/wave=1"))
       new java.io.File(s"$dir/_SUCCESS") should exist
     ClusterStore.version(spark, st.clusterPath) shouldBe 2L
+  }
+
+  test("ingestWave plans stay small: no SQL event re-prints the admission chain") {
+    val st = seedShape(Files.createTempDirectory("graft_wave_plans_").toString)
+    val sc = spark.sparkContext
+    val sizes = new java.util.concurrent.ConcurrentLinkedQueue[(String, Int)]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          sizes.add(("start", s.physicalPlanDescription.length))
+        case u: SparkListenerSQLAdaptiveExecutionUpdate =>
+          sizes.add(("aqe", u.physicalPlanDescription.length))
+        case _ =>
+      }
+    }
+    GraftListenerBus.waitUntilEmpty(sc)
+    sc.addSparkListener(listener)
+    try {
+      runShape(st).collect()
+      GraftListenerBus.waitUntilEmpty(sc)
+    } finally sc.removeSparkListener(listener)
+    import scala.jdk.CollectionConverters._
+    val seen = sizes.asScala.toSeq
+    seen.map(_._1).distinct.sorted shouldBe Seq("aqe", "start")
+    // every write plans over cut leaves: a persisted chain printed each
+    // stage's cached plan inline, up to ~1 MB per event
+    withClue(seen.sortBy(-_._2).take(5).mkString("largest: ", ", ", "\n")) {
+      all(seen.map(_._2)) should be <= 32768
+    }
+  }
+
+  test("ingestWave leaves nothing behind, and a checkpoint dir changes no artifact") {
+    val sc = spark.sparkContext
+    val cacheManager = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // earlier specs' memoized query artifacts are not this wave's
+    spark.catalog.clearCache()
+    def artifacts(st: IngestOps.WaveStores): Seq[Seq[String]] = {
+      def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+      Seq(st.corpusPath, st.bandIndexPath, st.reportPath,
+          s"${st.annPath}/cells", s"${st.lexPath}/postings",
+          s"${st.lexPath}/stats")
+        .map(p => rows(spark.read.parquet(p))) ++
+        Seq(rows(ClusterStore.assignment(spark, st.clusterPath)),
+          rows(ClusterStore.pairs(spark, st.clusterPath)))
+    }
+    def wave(st: IngestOps.WaveStores): (Seq[String], Seq[Seq[String]]) = {
+      val before = sc.getPersistentRDDs.keySet
+      val report = runShape(st).collect().map(_.toString).toSeq.sorted
+      (sc.getPersistentRDDs.keySet -- before) shouldBe empty
+      cacheManager.isEmpty shouldBe true
+      (report, artifacts(st))
+    }
+
+    val plain = wave(seedShape(
+      Files.createTempDirectory("graft_wave_local_").toString))
+    // seeded before the checkpoint dir is set: the base build's cluster
+    // store returns its last connected-components cut unreleased
+    val reliable = seedShape(
+      Files.createTempDirectory("graft_wave_reliable_").toString)
+    val dir = Files.createTempDirectory("graft-wave-checkpoint")
+    sc.setCheckpointDir(dir.toString)
+    try {
+      wave(reliable) shouldBe plain
+      // every cut's files were deleted on the way out
+      val root = new java.io.File(new java.net.URI(sc.getCheckpointDir.get))
+      root.list().filter(_.startsWith("rdd-")) shouldBe empty
+    } finally {
+      CheckpointDirAccess.clear(sc)
+      org.apache.commons.io.FileUtils.deleteDirectory(dir.toFile)
+    }
+    plain._1 should have size 6
   }
 }

@@ -1,15 +1,16 @@
 package graft
 
 import graft.Harness.{Profile, profiled}
-import graft.ext.ClusterStore
+import graft.ext.{ClusterStore, LexIndexStore}
 import graft.ops.StatsOps
 import graft.pipeline.Pipeline
 import org.apache.spark.sql.functions._
 import java.nio.file.Files
 
 /** Spark-job budgets of the paths whose cost is their job count, not their
-  * compute: one steady-state pipeline window, a ClusterStore commit, and a
-  * driver-side finisher's guarded grid collect. */
+  * compute: one steady-state pipeline window, a ClusterStore commit, a
+  * LexIndexStore append, and a driver-side finisher's guarded grid
+  * collect. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
   private lazy val sc = spark.sparkContext
@@ -59,6 +60,20 @@ class JobBudgetSpec extends SparkSpec {
     // a small batch folds in on the driver: no star round, no fixed-point probe
     all(jobs.map(_.site)) should not fullyMatch regex (
       "(localCheckpoint|checkpoint) at Iterate\\.scala:\\d+|head at DedupOps\\.scala:\\d+")
+  }
+
+  test("LexIndexStore append: every job runs inside a SQL execution") {
+    val path = Files.createTempDirectory("graft_jobs_lex_").toString + "/lex"
+    LexIndexStore.build(path, Seq((1L, "the quick brown fox"), (2L, "a lazy dog"))
+      .toDF("doc_id", "text"), "doc_id", "text", nBuckets = 8)
+    val (_, Profile(jobs, _, _)) = profiled(sc)(LexIndexStore.append(path,
+      Seq((3L, "the brown dog")).toDF("doc_id", "text"), "doc_id", "text",
+      batchId = 1))
+    withClue(jobs.map(_.site).mkString("jobs: ", "; ", "\n")) {
+      jobs should not be empty
+      // `meta` is read under its fixed schema: no footer-inference job
+      jobs.filterNot(_.inSql) shouldBe empty
+    }
   }
 
   test("ipfRake over the grid cap: a named contract violation, no extra job") {
