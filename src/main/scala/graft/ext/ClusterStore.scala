@@ -56,15 +56,18 @@ object ClusterStore {
     * + meta as version `max(current, 0) + 1`. The pair frame may be an
     * expensive job (minhash LSH, embedding near-dup) — it is persisted for
     * the duration so the assignment build and the pair materialization
-    * share one evaluation. */
+    * share one evaluation. The labels' cut is released once the commit
+    * has written them, so a checkpoint dir keeps none of its files. */
   def build(path: String, pairs: DataFrame, maxRounds: Int = 20): Unit = {
     val spark = pairs.sparkSession
     val p = canonical(pairs).persist()
     try {
-      val asg = DedupOps.connectedComponentsStar(
+      val asg = DedupOps.connectedComponentsStarCut(
         p.select("id1", "id2"), maxRounds)
-      val prior = if (exists(spark, path)) version(spark, path) else 0L
-      commit(spark, path, asg, p, prior + 1)
+      try {
+        val prior = if (exists(spark, path)) version(spark, path) else 0L
+        commit(spark, path, asg.df, p, prior + 1)
+      } finally asg.release()
     } finally p.unpersist(blocking = false)
   }
 

@@ -446,7 +446,7 @@ object DedupOps {
     * round-robin repartitioning it would shuffle the full document text
     * just to move CPU — only genuinely under-split inputs (tiny fixture
     * files, coalesced upstreams) pay the redistribution. */
-  private def spread(df: DataFrame): DataFrame = {
+  private[graft] def spread(df: DataFrame): DataFrame = {
     val target = df.sparkSession.sparkContext.defaultParallelism
     // toRdd reuses the frame's memoized queryExecution (df.rdd would build
     // a second plan plus a discarded Row-deserializer layer)
@@ -463,24 +463,59 @@ object DedupOps {
   def minhashDedupPairs(df: DataFrame, idCol: String, textCol: String,
                         n: Int, numHashes: Int, bands: Int,
                         threshold: Double,
-                        maxBandDf: Int = Int.MaxValue): DataFrame = {
-    // band keys built by the SAME helper the persisted index uses
-    // ([[bandIndex]]) — the incremental path's equivalence to this full
-    // pipeline depends on the two constructions staying byte-identical
-    val banded = bandIndex(df, idCol, textCol, n, numHashes, bands, maxBandDf)
+                        maxBandDf: Int = Int.MaxValue): DataFrame =
+    keyedPairs(keyed(df, idCol, textCol, n, numHashes, bands), threshold,
+      maxBandDf)
+
+  /** The form every MinHash-LSH path here starts from: (`id`, `sh` = the
+    * shingle set, `keys` = its band keys) per text-bearing row, spread
+    * when under-split. [[bandIndex]], [[minhashDedupPairs]] and
+    * [[incrementalNearDupPairs]] all key docs through it — the incremental
+    * path's equivalence to the full pipeline depends on the persisted
+    * index and the batch side sharing one construction. */
+  private def keyed(df: DataFrame, idCol: String, textCol: String, n: Int,
+                    numHashes: Int, bands: Int): DataFrame =
+    spread(df.filter(col(textCol).isNotNull))
+      .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
+      .withColumn("keys",
+        graft.functions.BandKeys(col("sh"), numHashes, bands))
+
+  /** One (band_key, id) row per band of each row's `keys` array (a
+    * [[graft.functions.BandKeys]] result), keyed `band:key` so equal keys
+    * of different bands never meet: the persisted band index's rows and
+    * both sides of every band join. */
+  private[graft] def bandKeyRows(df: DataFrame, id: Column,
+                                 keys: Column): DataFrame =
+    df.select(id.as("id"), posexplode(keys))
+      .select(concat_ws(":", col("pos").cast("string"), col("col"))
+        .as("band_key"), col("id"))
+
+  /** Exact Jaccard of two shingle sets (distinct-element arrays, as
+    * [[shingleHashes]] emits them), unrounded. */
+  private def shingleJaccard(s1: Column, s2: Column): Column = {
+    val inter = size(array_intersect(s1, s2)).cast("double")
+    inter / (size(s1) + size(s2) - inter)
+  }
+
+  /** [[minhashDedupPairs]] over docs already in [[keyed]] form (`id`, `sh`,
+    * `keys`): band-bucket self-join for candidates, verified from the
+    * stored shingle sets — no text is shingled again. */
+  private[graft] def keyedPairs(docs: DataFrame, threshold: Double,
+                                maxBandDf: Int = Int.MaxValue): DataFrame = {
+    val banded = dropHotKeys(bandKeyRows(docs, col("id"), col("keys")),
+      "band_key", maxBandDf)
     val cands = banded.as("a").join(banded.as("b"),
         col("a.band_key") === col("b.band_key") &&
         col("a.id") < col("b.id"))
       .select(col("a.id").as("id1"), col("b.id").as("id2"))
       .distinct()
-    val withText = df.select(col(idCol).as("id"), col(textCol).as("__t"))
-    val verified = cands
-      .join(withText.withColumnsRenamed(Map("id" -> "id1", "__t" -> "t1")), "id1")
-      .join(withText.withColumnsRenamed(Map("id" -> "id2", "__t" -> "t2")), "id2")
-      .withColumn("j", jaccardExpr(col("t1"), col("t2"), n))
+    val sh = docs.select(col("id"), col("sh"))
+    cands
+      .join(sh.withColumnsRenamed(Map("id" -> "id1", "sh" -> "s1")), "id1")
+      .join(sh.withColumnsRenamed(Map("id" -> "id2", "sh" -> "s2")), "id2")
+      .withColumn("j", round(shingleJaccard(col("s1"), col("s2")), 4))
       .filter(col("j") >= threshold)
       .select(col("id1"), col("id2"), col("j").as("jaccard"))
-    verified
   }
 
   /**
@@ -570,13 +605,9 @@ object DedupOps {
   def bandIndex(docs: DataFrame, idCol: String, textCol: String,
                 n: Int, numHashes: Int, bands: Int,
                 maxBandDf: Int = Int.MaxValue): DataFrame = {
-    val banded = spread(docs.filter(col(textCol).isNotNull))
-      .select(col(idCol).as("id"), shingleHashes(col(textCol), n).as("sh"))
-      .select(col("id"),
-        posexplode(graft.functions.BandKeys(col("sh"), numHashes, bands)))
-      .select(concat_ws(":", col("pos").cast("string"), col("col"))
-        .as("band_key"), col("id"))
-    dropHotKeys(banded, "band_key", maxBandDf)
+    val kd = keyed(docs, idCol, textCol, n, numHashes, bands)
+    dropHotKeys(bandKeyRows(kd, col("id"), col("keys")), "band_key",
+      maxBandDf)
   }
 
   /**
@@ -616,10 +647,7 @@ object DedupOps {
         Map("id" -> "query_id", "sh" -> "sh1")), "query_id")
       .join(withText.withColumnsRenamed(
         Map("id" -> "neighbor_id", "sh" -> "sh2")), "neighbor_id")
-      .withColumn("__i",
-        size(array_intersect(col("sh1"), col("sh2"))).cast("double"))
-      .withColumn("score",
-        col("__i") / (size(col("sh1")) + size(col("sh2")) - col("__i")))
+      .withColumn("score", shingleJaccard(col("sh1"), col("sh2")))
     SimilarityOps.heapTopK(scored, k)
       .select(col("query_id"), col("neighbor_id"),
         round(col("score"), 4).as("jaccard"), col("rank"))
@@ -655,17 +683,32 @@ object DedupOps {
                               corpusIndex: DataFrame, corpusText: DataFrame,
                               n: Int, numHashes: Int, bands: Int,
                               threshold: Double,
-                              maxBandDf: Int = Int.MaxValue): DataFrame = {
-    val newBanded = bandIndex(newDocs, idCol, textCol, n, numHashes, bands,
-      maxBandDf)
+                              maxBandDf: Int = Int.MaxValue): DataFrame =
+    keyedProbePairs(keyed(newDocs, idCol, textCol, n, numHashes, bands),
+      corpusIndex, corpusText, idCol, textCol, n, threshold, maxBandDf)
+
+  /** [[incrementalNearDupPairs]] for new docs already in [[keyed]] form
+    * (`id`, `sh`, `keys`): their stored keys probe the index and their
+    * stored shingle sets verify, so only the corpus side of each candidate
+    * is shingled. */
+  private[graft] def keyedProbePairs(newDocs: DataFrame,
+                                     corpusIndex: DataFrame,
+                                     corpusText: DataFrame, idCol: String,
+                                     textCol: String, n: Int,
+                                     threshold: Double,
+                                     maxBandDf: Int = Int.MaxValue): DataFrame = {
+    val newBanded = dropHotKeys(bandKeyRows(newDocs, col("id"), col("keys")),
+      "band_key", maxBandDf)
     val cands = newBanded
       .join(corpusIndex.withColumnRenamed("id", "corpus_id"), "band_key")
       .filter(col("id") =!= col("corpus_id"))
       .select(col("id").as("new_id"), col("corpus_id")).distinct()
-    val t1 = newDocs.select(col(idCol).as("new_id"), col(textCol).as("__t1"))
+    val s1 = newDocs.select(col("id").as("new_id"), col("sh").as("__s1"))
     val t2 = corpusText.select(col(idCol).as("corpus_id"), col(textCol).as("__t2"))
-    cands.join(t1, "new_id").join(t2, "corpus_id")
-      .withColumn("jaccard", jaccardExpr(col("__t1"), col("__t2"), n))
+    // the corpus side is shingled AFTER the join: candidates only
+    cands.join(s1, "new_id").join(t2, "corpus_id")
+      .withColumn("jaccard", round(shingleJaccard(col("__s1"),
+        shingleHashes(col("__t2"), n)), 4))
       .filter(col("jaccard") >= threshold)
       .select(col("new_id"), col("corpus_id"), col("jaccard"))
   }
@@ -862,7 +905,14 @@ object DedupOps {
    * [[connectedComponents]]: eager [[Iterate]] cuts, rolling release, a
    * cut result so callers own nothing.
    */
-  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20): DataFrame = {
+  def connectedComponentsStar(pairs: DataFrame, maxRounds: Int = 20): DataFrame =
+    connectedComponentsStarCut(pairs, maxRounds).df
+
+  /** [[connectedComponentsStar]]'s labels as the [[Iterate.Cut]] that holds
+    * them, for a caller that can say when the last reader is done: with a
+    * checkpoint dir, only [[Iterate.Cut.release]] deletes its files. */
+  private[graft] def connectedComponentsStarCut(pairs: DataFrame,
+                                                maxRounds: Int = 20): Iterate.Cut = {
     val nodes = pairs.select(col("id1").as("id"))
       .unionByName(pairs.select(col("id2").as("id"))).distinct()
 
@@ -931,17 +981,13 @@ object DedupOps {
     val labels = Iterate.cut(nodes.join(childLabel, Seq("id"), "left")
       .select(col("id"), coalesce(col("lbl"), col("id")).as("cluster_id")))
     edges.release()
-    labels.df
+    labels
   }
 
   /** Exact Jaccard of two texts' shingle sets as a single expression —
     * used to verify LSH candidates without another shuffle. */
-  def jaccardExpr(t1: Column, t2: Column, n: Int): Column = {
-    val s1 = shingleHashes(t1, n)
-    val s2 = shingleHashes(t2, n)
-    val inter = size(array_intersect(s1, s2)).cast("double")
-    round(inter / (size(s1) + size(s2) - inter), 4)
-  }
+  def jaccardExpr(t1: Column, t2: Column, n: Int): Column =
+    round(shingleJaccard(shingleHashes(t1, n), shingleHashes(t2, n)), 4)
 
   /** SimHash (bitwise-majority) signature over token hashes, `bits` wide
     * (≤ 32 here; production uses 64 via two 32-bit halves). Per doc:

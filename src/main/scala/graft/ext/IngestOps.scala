@@ -2,6 +2,7 @@ package graft.ext
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 /**
  * The BATCH ingest wave — the production admission path, batch-side twin
@@ -37,8 +38,9 @@ object IngestOps {
    * `textCol`, and `vecCol` (the embedding for ANN growth).
    *
    * Admission semantics (each stage sees the previous stage's survivors):
-   *   1. `rejected_quality` — fails [[TextOps.gopherFilter]] (null text
-   *      included: no text, no admission);
+   *   1. `rejected_quality` — fails [[TextOps.gopherFilter]], whose
+   *      verdict the wave computes in place as [[TextOps.gopherKeep]]
+   *      (null text included: no text, no admission);
    *   2. `rejected_batch_dup` — has a verified near-dup (exact n-gram
    *      Jaccard ≥ `threshold` via MinHash-LSH candidates) with a
    *      SMALLER-id gated doc in the same wave. The pair-min rule is
@@ -48,7 +50,7 @@ object IngestOps {
    *      DuckDB-oracle gate) AND deterministic under batch re-partition;
    *   3. `rejected_corpus_dup` — near-dups an already-admitted corpus
    *      doc via the PERSISTED band index (the batch is banded once;
-   *      the corpus is never re-shingled);
+   *      corpus text is shingled only for verification candidates);
    *   4. `rejected_semantic_dup` — only with `semanticThreshold` set:
    *      the SemDeDup gate — 6dp cosine ≥ τ against an already-admitted
    *      embedding, candidates from the sign-LSH bucket join
@@ -75,16 +77,22 @@ object IngestOps {
    * Returns the committed report read back from its artifact:
    * (`idCol`, disposition). Every input batch row appears exactly once.
    *
-   * Scale: the wave pays O(batch) shingle/band kernels, one banded
-   * self-join (in-batch) and one band-key probe of the persisted index
-   * (batch side broadcasts under AQE); corpus text is read only for
-   * verification candidates, column-pruned. Store appends are O(admitted)
-   * — nothing here is O(corpus) except the one narrow index probe. The
-   * wave-scope cuts (batch, gated docs, in-batch pairs, in-batch
-   * survivors, corpus pairs, semantic losers when that gate is on,
-   * admitted) cost one job each and hold O(batch) rows until the wave
-   * returns; with a SparkContext checkpoint dir they are reliable
-   * checkpoints, deleted on the way out.
+   * Scale: the wave pays its O(batch) gate, shingle and band kernels once,
+   * into the admission table; one banded self-join (in-batch) and one
+   * band-key probe of the persisted index (batch side broadcasts under
+   * AQE) reuse them. Corpus text is read only for verification
+   * candidates, column-pruned, and is the only text shingled after the
+   * admission table. The corpus, band-index, ANN and lexical appends
+   * write O(admitted) rows; [[ClusterStore.append]] does not — its commit
+   * rewrites the whole assignment and evidence tables. The wave-scope
+   * cuts are the admission table (batch rows + gate verdict, shingle set
+   * and band keys), the in-batch pairs, the corpus pairs, the semantic
+   * losers when that gate is on, and the disposition table, of which the
+   * admitted rows, the band-index rows and the report are narrow
+   * projections. A cut runs one job per query stage of its plan, not one
+   * job in all; each holds O(batch) rows until the wave returns. With a
+   * SparkContext checkpoint dir they are reliable checkpoints, deleted on
+   * the way out.
    */
   private val Marker = "_STORE_SUCCESS"
 
@@ -141,63 +149,97 @@ object IngestOps {
     // read the stages many times over, and a frame that merely persisted
     // them would still carry the whole admission lineage in every later
     // plan — Spark formats that plan into each SQL execution's start event
-    // and again at every AQE re-plan, so nested persisted stages made the
-    // driver re-print it per write (up to 1 MB of text per event). A cut
-    // is computed exactly once, before the fan-out, so the parallel
-    // writers never race to fill it.
+    // and again at every AQE re-plan. A cut is computed exactly once,
+    // before the fan-out, so the parallel writers never race to fill it.
     val releases = scala.collection.mutable.ArrayBuffer.empty[() => Unit]
     def cut(df: DataFrame): DataFrame = {
       val c = graft.ops.Iterate.cut(df)
       releases += c.release
       c.df
     }
+    // the band index, the corpus and the report hold what waves wrote
+    // from batches of this schema: read them under it, with no
+    // footer-inference job
+    val idField = batch.schema(idCol)
+    val indexSchema = StructType(Seq(StructField("band_key", StringType),
+      idField.copy(name = "id")))
+    val corpusSchema = StructType(Seq(idField, batch.schema(textCol)))
+    // the admitted rows' column order: the id first, then the batch's
+    val rowCols = (idCol +: batch.columns.filterNot(_ == idCol)).toSeq
     try {
-      val b = cut(batch)
-      val gated = cut(b.join(TextOps.gopherFilter(b, idCol, textCol,
+      // the admission table: every batch doc once, with its gate verdict
+      // and — for gated docs only — its shingle set and band keys, so no
+      // later stage shingles or hashes a batch doc again
+      val docs = cut(DedupOps.spread(batch)
+        .withColumn("__gate", TextOps.gopherKeep(col(textCol),
           minTokens = minTokens, maxTokens = maxTokens,
-          minStopHits = minStopHits)
-        .filter(col("keep")).select(idCol), idCol))
+          minStopHits = minStopHits))
+        .withColumn("__sh",
+          when(col("__gate"), DedupOps.shingleHashes(col(textCol), n)))
+        .withColumn("__keys",
+          graft.functions.BandKeys(col("__sh"), numHashes, bands)))
+      val gated = docs.filter(col("__gate")).select(col(idCol).as("id"),
+        col("__sh").as("sh"), col("__keys").as("keys"))
 
-      // in-batch near-dup evidence: LSH candidates, exact-Jaccard verified
-      val batchPairs = cut(DedupOps.minhashDedupPairs(gated,
-        idCol, textCol, n, numHashes, bands, threshold))
+      // in-batch near-dup evidence: band self-join, verified from the
+      // stored shingle sets
+      val batchPairs = cut(DedupOps.keyedPairs(gated, threshold))
       // pair-min admission: id2 of any verified pair (id1 < id2) rejects
-      val batchLosers = batchPairs.select(col("id2").as(idCol)).distinct()
-      val batchKept = cut(gated.join(batchLosers, Seq(idCol), "left_anti"))
+      val batchKept = gated.join(batchPairs.select(col("id2").as("id")),
+        Seq("id"), "left_anti")
 
-      // incremental near-dup vs the persisted corpus: band-probe + verify.
+      // incremental near-dup vs the persisted corpus: the survivors'
+      // stored keys probe the band index; only corpus text is shingled.
       // The CURRENT wave's partition is excluded (partition-pruned, so a
       // replay never reads the files it is about to overwrite): a
       // replayed doc must not be rejected as a near-dup of its own prior
       // admission — that would turn at-least-once redelivery into data
       // loss instead of idempotence
-      val corpusIndex = spark.read.parquet(stores.bandIndexPath)
+      val corpusIndex = spark.read.schema(indexSchema)
+        .parquet(stores.bandIndexPath)
         .filter(col("wave") =!= waveId)
         .select("band_key", "id")
-      val corpusText = spark.read.parquet(stores.corpusPath)
+      val corpusText = spark.read.schema(corpusSchema)
+        .parquet(stores.corpusPath)
         .filter(col("wave") =!= waveId)
         .select(col(idCol), col(textCol))
-      val crossPairs = cut(DedupOps.incrementalNearDupPairs(
-        batchKept, idCol, textCol, corpusIndex, corpusText,
-        n, numHashes, bands, threshold))
-      val corpusLosers = crossPairs.select(col("new_id").as(idCol)).distinct()
-      val batchKept2 = batchKept.join(corpusLosers, Seq(idCol), "left_anti")
+      val crossPairs = cut(DedupOps.keyedProbePairs(batchKept, corpusIndex,
+        corpusText, idCol, textCol, n, threshold))
 
       // optional SemDeDup gate: bucket-join the survivors' embeddings
       // against the already-admitted ANN rows, exact cosine ≥ τ rejects
-      val semanticLosers = semanticThreshold match {
-        case Some(tau) =>
-          val corpusVecs = spark.read.parquet(s"${stores.annPath}/cells")
-            .filter(col("b") =!= waveId)
-            .select(col(idCol), col(vecCol))
-          cut(SimilarityOps.cosineNearDupPairsIncremental(
-              batchKept2.filter(col(vecCol).isNotNull), corpusVecs,
-              idCol, vecCol, tau, nBits, stride)
-            .select(col("new_id").as(idCol)).distinct())
-        case None => batchKept2.select(idCol).limit(0)
+      val semanticLosers = semanticThreshold.map { tau =>
+        val survivors = batchKept.join(
+          crossPairs.select(col("new_id").as("id")), Seq("id"), "left_anti")
+        val corpusVecs = spark.read.parquet(s"${stores.annPath}/cells")
+          .filter(col("b") =!= waveId)
+          .select(col(idCol), col(vecCol))
+        cut(SimilarityOps.cosineNearDupPairsIncremental(
+            docs.select(col(idCol), col(vecCol))
+              .join(survivors.select(col("id").as(idCol)), Seq(idCol),
+                "left_semi")
+              .filter(col(vecCol).isNotNull),
+            corpusVecs, idCol, vecCol, tau, nBits, stride)
+          .select(col("new_id").as("id")).distinct())
       }
-      val admitted = cut(
-        batchKept2.join(semanticLosers, Seq(idCol), "left_anti"))
+
+      // each doc's disposition: the first stage that rejects it. Each
+      // stage only sees the previous stages' survivors, so a doc is in
+      // at most one loser set
+      val losers = (Seq(
+          batchPairs.select(col("id2").as("id"),
+            lit("rejected_batch_dup").as("__d")),
+          crossPairs.select(col("new_id").as("id"),
+            lit("rejected_corpus_dup").as("__d"))) ++
+        semanticLosers.map(_.withColumn("__d", lit("rejected_semantic_dup"))))
+        .reduce(_ unionByName _).distinct()
+        .withColumnRenamed("id", idCol)
+      val disposition = cut(docs.join(losers, Seq(idCol), "left")
+        .select(rowCols.map(col) :+ col("__keys") :+
+          when(!col("__gate"), "rejected_quality")
+            .otherwise(coalesce(col("__d"), lit("admitted")))
+            .as("__disp"): _*))
+      val admitted = disposition.filter(col("__disp") === "admitted")
 
       // ---- artifacts advance in lockstep, all wave-scoped ----
       // The six writes are pairwise independent (disjoint store dirs)
@@ -216,37 +258,29 @@ object IngestOps {
           least(col("new_id"), col("corpus_id")).as("id1"),
           greatest(col("new_id"), col("corpus_id")).as("id2"),
           col("jaccard")))
-      // ---- per-doc admission report, the wave's audit artifact ----
-      val report = b.select(col(idCol))
-        .join(gated.select(col(idCol), lit(1).as("__g")), Seq(idCol), "left")
-        .join(batchLosers.withColumn("__b", lit(1)), Seq(idCol), "left")
-        .join(corpusLosers.withColumn("__c", lit(1)), Seq(idCol), "left")
-        .join(semanticLosers.withColumn("__s", lit(1)), Seq(idCol), "left")
-        .select(col(idCol),
-          when(col("__g").isNull, "rejected_quality")
-            .when(col("__b").isNotNull, "rejected_batch_dup")
-            .when(col("__c").isNotNull, "rejected_corpus_dup")
-            .when(col("__s").isNotNull, "rejected_semantic_dup")
-            .otherwise("admitted").as("disposition"))
+      val admittedRows = admitted.select(rowCols.map(col): _*)
       val actions: Seq[() => Unit] = Seq(
-        () => admitted.drop(vecCol).write.mode("overwrite")
+        () => admittedRows.drop(vecCol).write.mode("overwrite")
           .parquet(s"${stores.corpusPath}/wave=$waveId"),
-        () => DedupOps.bandIndex(admitted, idCol, textCol, n, numHashes,
-            bands)
+        () => DedupOps.bandKeyRows(admitted, col(idCol), col("__keys"))
           .write.mode("overwrite")
           .parquet(s"${stores.bandIndexPath}/wave=$waveId"),
         () => ClusterStore.append(stores.clusterPath, waveEvidence),
         // a doc without an embedding is admitted but not ANN-searchable
         // (the lexical index still carries it) — never NPE the assign
         () => AnnIndexStore.append(stores.annPath,
-          admitted.filter(col(vecCol).isNotNull), idCol, vecCol,
+          admittedRows.filter(col(vecCol).isNotNull), idCol, vecCol,
           batchId = waveId),
-        () => LexIndexStore.append(stores.lexPath, admitted, idCol,
+        () => LexIndexStore.append(stores.lexPath, admittedRows, idCol,
           textCol, batchId = waveId),
-        () => report.write.mode("overwrite")
+        // the per-doc admission report, the wave's audit artifact
+        () => disposition.select(col(idCol), col("__disp").as("disposition"))
+          .write.mode("overwrite")
           .parquet(s"${stores.reportPath}/wave=$waveId"))
       runAll(actions)
-      spark.read.parquet(s"${stores.reportPath}/wave=$waveId")
+      spark.read.schema(StructType(Seq(idField,
+          StructField("disposition", StringType))))
+        .parquet(s"${stores.reportPath}/wave=$waveId")
     } finally releases.foreach(_())
   }
 

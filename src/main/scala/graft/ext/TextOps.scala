@@ -566,31 +566,62 @@ object TextOps {
                    minAlphaRatio: Double = 0.8,
                    stopwords: Seq[String] = Seq("the", "a", "and", "of"),
                    minStopHits: Int = 2): DataFrame = {
-    val t = col(textCol)
+    val measured = df.filter(col(textCol).isNotNull).select(
+      col(idCol) +: gopherFeatures(col(textCol), stopwords)
+        .map { case (k, c) => c.as(k) }: _*)
+    val rules = gopherRules(col(_), minTokens, maxTokens, minAvgLen,
+      maxAvgLen, maxSymbolRatio, minAlphaRatio, minStopHits)
+    (rules :+ ("keep" -> rules.map(r => col(r._1)).reduce(_ && _)))
+      .foldLeft(measured) { case (d, (k, c)) => d.withColumn(k, c) }
+  }
+
+  /** [[gopherFilter]]'s `keep` verdict as one row-wise column over `text`,
+    * from the same features and rules (same defaults); null text is never
+    * kept. For callers that gate rows in place instead of joining the
+    * filter's output back. */
+  def gopherKeep(text: Column,
+                 minTokens: Int = 50, maxTokens: Int = 100000,
+                 minAvgLen: Double = 3.0, maxAvgLen: Double = 10.0,
+                 maxSymbolRatio: Double = 0.1,
+                 minAlphaRatio: Double = 0.8,
+                 stopwords: Seq[String] = Seq("the", "a", "and", "of"),
+                 minStopHits: Int = 2): Column = {
+    val rules = gopherRules(gopherFeatures(text, stopwords).toMap, minTokens,
+      maxTokens, minAvgLen, maxAvgLen, maxSymbolRatio, minAlphaRatio,
+      minStopHits)
+    when(text.isNotNull, rules.map(_._2).reduce(_ && _)).otherwise(false)
+  }
+
+  /** The Gopher features of `t`, named and ordered as [[gopherFilter]]
+    * emits them. */
+  private def gopherFeatures(t: Column,
+                             stopwords: Seq[String]): Seq[(String, Column)] = {
     val toks = tokens(t)
     val n = size(toks)
-    val out = df.filter(t.isNotNull).select(
-      col(idCol),
-      n.cast("long").as("n_tokens"),
-      round((length(t) - (n - lit(1))).cast("double") / n, 4)
-        .as("avg_token_len"),
-      round(size(filter(toks, w => w === "#" || w.contains("...")))
-        .cast("double") / n, 4).as("symbol_ratio"),
-      round(size(filter(toks, w => w.rlike("[A-Za-z]")))
-        .cast("double") / n, 4).as("alpha_ratio"),
-      size(filter(toks, w => w.isin(stopwords.map(lit): _*)))
-        .cast("long").as("n_stop_hits"))
-    out
-      .withColumn("rule_len", col("n_tokens").between(minTokens, maxTokens))
-      .withColumn("rule_avg_len",
-        col("avg_token_len") >= minAvgLen && col("avg_token_len") <= maxAvgLen)
-      .withColumn("rule_symbols", col("symbol_ratio") <= maxSymbolRatio)
-      .withColumn("rule_alpha", col("alpha_ratio") >= minAlphaRatio)
-      .withColumn("rule_stop", col("n_stop_hits") >= minStopHits)
-      .withColumn("keep",
-        col("rule_len") && col("rule_avg_len") && col("rule_symbols") &&
-          col("rule_alpha") && col("rule_stop"))
+    Seq(
+      "n_tokens" -> n.cast("long"),
+      "avg_token_len" ->
+        round((length(t) - (n - lit(1))).cast("double") / n, 4),
+      "symbol_ratio" -> round(size(filter(toks,
+        w => w === "#" || w.contains("..."))).cast("double") / n, 4),
+      "alpha_ratio" -> round(size(filter(toks, w => w.rlike("[A-Za-z]")))
+        .cast("double") / n, 4),
+      "n_stop_hits" -> size(filter(toks, w => w.isin(stopwords.map(lit): _*)))
+        .cast("long"))
   }
+
+  /** The Gopher rules over the features `f` reads by name, named and
+    * ordered as [[gopherFilter]] emits them. */
+  private def gopherRules(f: String => Column, minTokens: Int, maxTokens: Int,
+                          minAvgLen: Double, maxAvgLen: Double,
+                          maxSymbolRatio: Double, minAlphaRatio: Double,
+                          minStopHits: Int): Seq[(String, Column)] = Seq(
+    "rule_len" -> f("n_tokens").between(minTokens, maxTokens),
+    "rule_avg_len" ->
+      (f("avg_token_len") >= minAvgLen && f("avg_token_len") <= maxAvgLen),
+    "rule_symbols" -> (f("symbol_ratio") <= maxSymbolRatio),
+    "rule_alpha" -> (f("alpha_ratio") >= minAlphaRatio),
+    "rule_stop" -> (f("n_stop_hits") >= minStopHits))
 
   /** Canonical text normalization (NFC → lowercase → collapse whitespace →
     * trim) as a native codegen expression — run this BEFORE any dedup

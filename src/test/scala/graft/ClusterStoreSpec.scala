@@ -51,6 +51,23 @@ class ClusterStoreSpec extends SparkSpec {
         (20L, 21L), (21L, 22L), (20L, 22L), (30L, 31L)).sorted
   }
 
+  test("build with a checkpoint dir leaves no checkpoint files behind") {
+    val sc = spark.sparkContext
+    val pairs = pairsDf((1L, 2L), (2L, 3L), (10L, 11L))
+    val dir = java.nio.file.Files.createTempDirectory("cstore_spec_ckpt_")
+    dirs += dir.toFile
+    sc.setCheckpointDir(dir.toString)
+    try {
+      val path = tmp()
+      ClusterStore.build(path, pairs)
+      sortedRows(ClusterStore.assignment(spark, path)) shouldBe
+        Seq((1L, 1L), (2L, 1L), (3L, 1L), (10L, 10L), (11L, 10L))
+      // every star round's cut, the labels' included, was deleted
+      val root = new java.io.File(new java.net.URI(sc.getCheckpointDir.get))
+      root.list().filter(_.startsWith("rdd-")) shouldBe empty
+    } finally org.apache.spark.CheckpointDirAccess.clear(sc)
+  }
+
   test("append: store path equals full rebuild over unioned pairs") {
     val path = tmp()
     val base = pairsDf((1L, 2L), (3L, 4L), (10L, 11L))

@@ -20,50 +20,17 @@ import org.apache.spark.sql.functions._
 class IngestWaveSpec extends SparkSpec {
   import spark.implicits._
 
-  // The first spec's shape: a two-doc base with one near-dup pair (so the
-  // base cluster store is non-trivial) and a six-doc wave with one doc
-  // per disposition plus a second admit.
-  private val cents = Seq((0L, Seq(1f, 0f, 0f, 0f)), (1L, Seq(0f, 1f, 0f, 0f)))
-  private val baseTxt = "the quick brown fox jumps over the lazy dog today"
-  private lazy val shapeBase = Seq(
-    (10L, baseTxt, Seq(0.9f, 0.1f, 0f, 0f)),
-    (11L, baseTxt, Seq(0.8f, 0.2f, 0f, 0f)))
-    .toDF("doc_id", "text", "embedding")
-  private lazy val shapeWave = {
-    val txt102 = "alpha beta gamma delta epsilon the zeta omega kappa iota"
-    Seq(
-      (101L, "xx", Seq(0.5f, 0.5f, 0f, 0f)),       // fails the gate
-      (102L, txt102, Seq(0.1f, 0.9f, 0f, 0f)),      // admitted
-      (103L, txt102, Seq(0.2f, 0.8f, 0f, 0f)),      // in-batch dup of 102
-      (104L, baseTxt, Seq(0.7f, 0.3f, 0f, 0f)),     // dup of the corpus
-      (105L, "one mango two melon three apple four grape the banana",
-        Seq(0.6f, 0.6f, 0f, 0f)),                   // admitted
-      (106L, null.asInstanceOf[String],
-        Seq(0.4f, 0.6f, 0f, 0f)))                   // null text: no admission
-      .toDF("doc_id", "text", "embedding")
-  }
+  // The first spec's shape ([[WaveShape]]).
+  private val cents = WaveShape.cents
+  private lazy val shapeBase = WaveShape.base(spark)
+  private lazy val shapeWave = WaveShape.wave(spark)
 
   /** Fresh stores under `work` holding `shapeBase` as the admitted base. */
-  private def seedShape(work: String): IngestOps.WaveStores = {
-    val st = IngestOps.WaveStores(s"$work/corpus", s"$work/bandidx",
-      s"$work/clusters", s"$work/ann", s"$work/lex", s"$work/report")
-    shapeBase.drop("embedding").write.parquet(s"${st.corpusPath}/wave=0")
-    DedupOps.bandIndex(shapeBase, "doc_id", "text", n = 3, numHashes = 16,
-        bands = 4)
-      .write.parquet(s"${st.bandIndexPath}/wave=0")
-    ClusterStore.build(st.clusterPath,
-      DedupOps.minhashDedupPairs(shapeBase, "doc_id", "text",
-        n = 3, numHashes = 16, bands = 4, threshold = 0.9))
-    AnnIndexStore.save(st.annPath, shapeBase, "doc_id", "embedding", cents)
-    LexIndexStore.build(st.lexPath, shapeBase, "doc_id", "text", nBuckets = 8)
-    st
-  }
+  private def seedShape(work: String): IngestOps.WaveStores =
+    WaveShape.seed(spark, work)
 
   private def runShape(st: IngestOps.WaveStores): DataFrame =
-    IngestOps.ingestWave(spark, shapeWave, "doc_id", "text",
-      "embedding", st, waveId = 1,
-      n = 3, numHashes = 16, bands = 4, threshold = 0.9,
-      minTokens = 5, maxTokens = 80, minStopHits = 1)
+    WaveShape.run(spark, st, shapeWave, waveId = 1)
 
   test("ingestWave: report exact; clusters/ANN/lex equal batch rebuilds over base ∪ admitted") {
     val work = Files.createTempDirectory("graft_wave_").toString
@@ -128,6 +95,69 @@ class IngestWaveSpec extends SparkSpec {
       TextOps.bm25BatchTopK(allText, "doc_id", "text", qt, k = 3)
         .orderBy("qid", "rnk").collect()
     lexGot.select("doc_id").as[Long].collect() should not contain 104L
+  }
+
+  test("ingestWave gate edge cases and artifact schemas: one failed rule each, null text; columns and types pinned") {
+    val st = seedShape(Files.createTempDirectory("graft_wave_gate_").toString)
+    val v = Seq(0.3f, 0.7f, 0f, 0f)
+    // columns NOT in id-first order: the corpus puts the id first
+    val wave = Seq(
+      ("a b c d e f the", 301L, "en", v),                       // avg length
+      ("one two three four five six seven", 302L, "en", v),     // no stopword
+      ("wait... the apple pear plum figs dates grape", 303L, "en", v), // symbols
+      ("the apple pear plum figs 1234 5678 dates", 304L, "en", v), // alpha
+      (null.asInstanceOf[String], 305L, "en", v),               // no text
+      ("the apple pear", 306L, "en", v),                        // too short
+      ("one mango two melon three apple four grape the banana", 307L, "de", v),
+      ("this third unique sentence has the right shape to pass", 308L, "fr", v))
+      .toDF("text", "doc_id", "lang", "embedding")
+    val report = IngestOps.ingestWave(spark, wave, "doc_id", "text",
+      "embedding", st, waveId = 1, n = 3, numHashes = 16, bands = 4,
+      threshold = 0.9, minTokens = 5, maxTokens = 80, minStopHits = 1)
+    report.orderBy("doc_id").as[(Long, String)].collect() shouldBe
+      ((301L to 306L).map(_ -> "rejected_quality") ++
+        Seq(307L -> "admitted", 308L -> "admitted")).toArray
+    // the gate the wave applies is gopherFilter's, rule for rule: each
+    // rejected text fails exactly one rule
+    val gate = TextOps.gopherFilter(wave, "doc_id", "text", minTokens = 5,
+      maxTokens = 80, minStopHits = 1)
+    gate.filter(col("keep")).select("doc_id").as[Long].collect().sorted shouldBe
+      Array(307L, 308L)
+    val rules = Seq("rule_len", "rule_avg_len", "rule_symbols", "rule_alpha",
+      "rule_stop")
+    gate.filter(!col("keep"))
+      .select(rules.map(r => when(col(r), 0).otherwise(1)).reduce(_ + _))
+      .as[Int].collect().toSeq shouldBe Seq.fill(5)(1)
+    // gopherKeep (defaults included) is gopherFilter's keep; null is false
+    val byFilter = gate.select(col("doc_id"), col("keep")).as[(Long, Boolean)]
+      .collect().toMap
+    wave.select(col("doc_id"), TextOps.gopherKeep(col("text"), minTokens = 5,
+        maxTokens = 80, minStopHits = 1))
+      .as[(Long, Boolean)].collect().toMap shouldBe
+      byFilter + (305L -> false)
+    val byDefaults = TextOps.gopherFilter(wave, "doc_id", "text")
+      .select(col("doc_id"), col("keep")).as[(Long, Boolean)].collect().toMap
+    wave.select(col("doc_id"), TextOps.gopherKeep(col("text")))
+      .as[(Long, Boolean)].collect().toMap shouldBe byDefaults + (305L -> false)
+
+    // the wave's artifacts: names, types and column order
+    def schema(path: String) = spark.read.parquet(path).schema
+      .map(f => f.name -> f.dataType.simpleString)
+    schema(s"${st.corpusPath}/wave=1") shouldBe
+      Seq("doc_id" -> "bigint", "text" -> "string", "lang" -> "string")
+    schema(s"${st.bandIndexPath}/wave=1") shouldBe
+      Seq("band_key" -> "string", "id" -> "bigint")
+    schema(s"${st.reportPath}/wave=1") shouldBe
+      Seq("doc_id" -> "bigint", "disposition" -> "string")
+    report.schema.map(f => f.name -> f.dataType.simpleString) shouldBe
+      Seq("doc_id" -> "bigint", "disposition" -> "string")
+    spark.read.parquet(s"${st.corpusPath}/wave=1").select("doc_id", "lang")
+      .as[(Long, String)].collect().sorted shouldBe Array(307L -> "de", 308L -> "fr")
+    // the band-index rows are the admitted docs' keys, as bandIndex builds them
+    spark.read.parquet(s"${st.bandIndexPath}/wave=1").as[(String, Long)]
+      .collect().sorted shouldBe
+      DedupOps.bandIndex(wave.filter(col("doc_id") >= 307L), "doc_id", "text",
+        n = 3, numHashes = 16, bands = 4).as[(String, Long)].collect().sorted
   }
 
   test("ingestWave sequencing: wave 2 dedups against wave 1's admissions and artifacts accrete") {
@@ -404,8 +434,8 @@ class IngestWaveSpec extends SparkSpec {
 
     val plain = wave(seedShape(
       Files.createTempDirectory("graft_wave_local_").toString))
-    // seeded before the checkpoint dir is set: the base build's cluster
-    // store returns its last connected-components cut unreleased
+    // seeded before the checkpoint dir is set, so any checkpoint file
+    // found below is the wave's
     val reliable = seedShape(
       Files.createTempDirectory("graft_wave_reliable_").toString)
     val dir = Files.createTempDirectory("graft-wave-checkpoint")

@@ -9,8 +9,8 @@ import java.nio.file.Files
 
 /** Spark-job budgets of the paths whose cost is their job count, not their
   * compute: one steady-state pipeline window, a ClusterStore commit, a
-  * LexIndexStore append, and a driver-side finisher's guarded grid
-  * collect. */
+  * LexIndexStore append, one steady-state ingest wave, and a driver-side
+  * finisher's guarded grid collect. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
   private lazy val sc = spark.sparkContext
@@ -73,6 +73,25 @@ class JobBudgetSpec extends SparkSpec {
       jobs should not be empty
       // `meta` is read under its fixed schema: no footer-inference job
       jobs.filterNot(_.inSql) shouldBe empty
+    }
+  }
+
+  test("a steady-state ingest wave runs at most 43 Spark jobs") {
+    val st = WaveShape.seed(spark,
+      Files.createTempDirectory("graft_jobs_wave_").toString)
+    WaveShape.run(spark, st, WaveShape.wave(spark), waveId = 1)
+    val (report, Profile(jobs, _, _)) = profiled(sc)(
+      WaveShape.run(spark, st, WaveShape.nextWave(spark), waveId = 2))
+    report.orderBy("doc_id").as[(Long, String)].collect() shouldBe Array(
+      201L -> "rejected_quality", 202L -> "admitted",
+      203L -> "rejected_batch_dup", 204L -> "rejected_corpus_dup",
+      205L -> "admitted", 206L -> "rejected_quality")
+    withClue(jobs.map(_.site).mkString(s"${jobs.size} jobs: ", "; ", "\n")) {
+      // the band index, the corpus and the report read-back are read
+      // under the batch's schema: no footer inference at IngestOps
+      all(jobs.filterNot(_.inSql).map(_.site)) should
+        not startWith "parquet at IngestOps"
+      jobs.size should be <= 43
     }
   }
 
