@@ -17,8 +17,9 @@ import org.apache.spark.sql.functions._
  * subsequent query batch.
  *
  * Layout: `path/centroids/` (cid, vec) parquet; `path/cells/cell=N/`
- * corpus rows. Rebuild = overwrite both; the swap discipline of
- * [[graft.sources.Stores]] marts applies if readers are live.
+ * corpus rows. [[retrain]] and [[compact]] publish a whole new tree
+ * through [[graft.sources.TreeSwap]]; every reader and writer runs
+ * [[recover]] first, so a crashed swap heals on the next access.
  */
 object AnnIndexStore {
 
@@ -76,14 +77,15 @@ object AnnIndexStore {
              vecCol: String, batchId: Long = 1L): Unit = {
     require(batchId > 0, "batchId 0 is the base build")
     val spark = newRows.sparkSession
+    recover(spark, path)
     writeBatch(path, newRows, idCol, vecCol, loadCentroids(spark, path),
       loadCodebooks(spark, path), batchId)
   }
 
   /** The persisted PQ codebook artifact in [[SimilarityOps.pqEncode]]'s
     * nested shape (m × codes × subdim — a model, not data); empty for a
-    * coarse-only index. */
-  def loadCodebooks(spark: SparkSession,
+    * coarse-only index. Reads a recovered root: the callers' business. */
+  private[graft] def loadCodebooks(spark: SparkSession,
                     path: String): Seq[Seq[Seq[Float]]] = {
     val fs = hp(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(hp(s"$path/codebooks"))) Nil
@@ -98,32 +100,24 @@ object AnnIndexStore {
 
   private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
 
-  /** Root-level commit marker for the whole index TREE: the parquet
-    * `_SUCCESS` files only mark individual sub-writes, so the swap needs
-    * its own "every sub-artifact committed" witness. */
-  private val Marker = "_INDEX_SUCCESS"
-
   /**
    * RE-TRAIN + crash-safe swap — the drift path [[append]] explicitly
    * defers to: when frozen centroids stop partitioning new data well
    * (see `cellSizes` / `q_ann_cell_balance`), rebuild the whole index
    * under NEW centroids beside the live one and swap it in by the
-   * rename-aside discipline of [[graft.sources.Stores]] marts (write
-   * `.retrain` → live→`.preretrain` → `.retrain`→live → drop backup) —
+   * marker-gated rename-aside ([[graft.sources.TreeSwap.IndexRetrain]]) —
    * at every instant a complete index exists at the path or a recoverable
    * neighbor, never a half-rebuilt mix of old and new cells.
-   * [[recoverRetrain]] repairs any crash point on next access; a
-   * replayed retrain is idempotent (it rebuilds from the same inputs).
+   * [[recover]] repairs any crash point on next access; a replayed
+   * retrain is idempotent (it rebuilds from the same inputs).
    */
   def retrain(path: String, corpus: DataFrame, idCol: String,
               vecCol: String, centroids: Seq[(Long, Seq[Float])],
               codebooks: Seq[Seq[Seq[Float]]] = Nil): Unit = {
     val spark = corpus.sparkSession
-    // recover the sibling compact swap too — see [[compact]]
-    recoverCompact(spark, path)
-    recoverRetrain(spark, path)
-    graft.sources.TreeSwap.swap(spark, path, ".retrain", ".preretrain",
-        Marker) { tmp =>
+    recover(spark, path)
+    graft.sources.TreeSwap.swap(spark, path,
+        graft.sources.TreeSwap.IndexRetrain) { tmp =>
       save(tmp, corpus, idCol, vecCol, centroids, codebooks)
     }
   }
@@ -136,21 +130,17 @@ object AnnIndexStore {
    * the scan-planning cost. Rewrites the union of all batches into a
    * single fresh `b=0` beside the live tree and swaps it in with the
    * marker-gated rename-aside (never delete-then-rename; any crash
-   * point leaves a complete index live or recoverable via
-   * [[recoverCompact]]). Results are unchanged by construction: index
-   * rows are per-id facts independent of which batch carried them, and
+   * point leaves a complete index live or recoverable via [[recover]]).
+   * Results are unchanged by construction: index rows are per-id facts
+   * independent of which batch carried them, and
    * the centroid/codebook artifacts are copied verbatim. Appends resume
    * after with fresh batch ids > 0.
    */
   def compact(path: String, spark: SparkSession): Unit = {
     val fs = hp(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // both swap mechanisms share the live path — recover BOTH before
-    // touching it (a marked .retrain from a crashed swap must promote
-    // before compaction reads the live tree)
-    recoverRetrain(spark, path)
-    recoverCompact(spark, path)
-    graft.sources.TreeSwap.swap(spark, path, ".compact", ".precompact",
-        Marker) { tmp =>
+    recover(spark, path)
+    graft.sources.TreeSwap.swap(spark, path,
+        graft.sources.TreeSwap.IndexCompact) { tmp =>
       spark.read.parquet(s"$path/cells").drop("b")
         .write.mode("overwrite").partitionBy("cell")
         .parquet(s"$tmp/cells/b=0")
@@ -162,21 +152,18 @@ object AnnIndexStore {
     }
   }
 
-  /** Recover the [[compact]] swap after a crash —
-    * [[graft.sources.TreeSwap.recover]]'s invariants over the
-    * `.compact`/`.precompact` neighbors. */
-  def recoverCompact(spark: SparkSession, path: String): Unit =
-    graft.sources.TreeSwap.recover(spark, path, ".compact", ".precompact",
-      Marker)
-
-  /** Recover the [[retrain]] swap after a crash — same invariants as the
-    * mart swap: live present → drop the superseded backup; live missing
-    * with a MARKED tmp → the rebuild committed, promote it; live missing
-    * with only a backup → restore it. An UNMARKED tmp is an interrupted
-    * rebuild: never promoted (dropped on the next retrain). */
-  def recoverRetrain(spark: SparkSession, path: String): Unit =
-    graft.sources.TreeSwap.recover(spark, path, ".retrain", ".preretrain",
-      Marker)
+  /** Recover the index root after a crashed [[retrain]] or [[compact]]
+    * swap — [[graft.sources.TreeSwap.recover]]'s invariants for both
+    * kinds: live present → drop the stale neighbors; live missing with a
+    * MARKED tmp → the rebuild committed, promote it; live missing with
+    * only a backup → restore it. Both swaps share the live path, so a
+    * marked retrain promotes before anything reads the live tree. */
+  def recover(spark: SparkSession, path: String): Unit = {
+    graft.sources.TreeSwap.recover(spark, path,
+      graft.sources.TreeSwap.IndexRetrain)
+    graft.sources.TreeSwap.recover(spark, path,
+      graft.sources.TreeSwap.IndexCompact)
+  }
 
   /**
    * Index-health audit: member count and share per cell. A balanced index
@@ -187,6 +174,7 @@ object AnnIndexStore {
    * names + row counts, not vectors).
    */
   def cellSizes(spark: SparkSession, path: String): DataFrame = {
+    recover(spark, path)
     val cells = spark.read.parquet(s"$path/cells")
     val total = cells.count()
     cells.groupBy(col("cell").cast("long").as("cell"))
@@ -196,24 +184,18 @@ object AnnIndexStore {
   }
 
   /** The persisted centroid artifact, in [[SimilarityOps.ivfAssign]]'s
-    * in-memory shape (bounded by c — a model, not data). */
-  def loadCentroids(spark: SparkSession, path: String): Seq[(Long, Seq[Float])] =
-    spark.read.parquet(s"$path/centroids")
-      .select("cid", "vec")
+    * in-memory shape (bounded by c — a model, not data). It is always
+    * written as (cid long, vec array<float>), so it is read under that
+    * schema: no footer-inference job. Reads a recovered root: the
+    * callers' business. */
+  private[graft] def loadCentroids(spark: SparkSession,
+                                   path: String): Seq[(Long, Seq[Float])] =
+    spark.read.schema("cid long, vec array<float>")
+      .parquet(s"$path/centroids")
       .collect()
       .map(r => (r.getLong(0), r.getSeq[Float](1).toSeq))
       .sortBy(_._1)
 
-  /**
-   * Top-k neighbors for a query batch against the PERSISTED index.
-   * Probed cell ids are collected first (≤ |Q|·nprobe longs — a bounded
-   * artifact) and pushed as a LITERAL `isin` filter, so Catalyst prunes
-   * unprobed `cell=` directories statically — the executed plan's scan
-   * carries the partition filter, no full-index listing or read. Scoring
-   * and the bounded-heap top-k are identical to
-   * [[SimilarityOps.ivfTopK]], so results match the in-memory operator
-   * bit-for-bit at equal parameters.
-   */
   /**
    * Fused IVF+PQ (IVFADC) top-k against the PERSISTED index — requires a
    * [[save]] with codebooks. Coarse phase: score cosine(query,
@@ -233,6 +215,7 @@ object AnnIndexStore {
              nprobe: Int, candidates: Int): DataFrame = {
     require(candidates >= k, s"candidates=$candidates must be ≥ k=$k")
     GraftFunctions.register(spark)
+    recover(spark, path)
     val centroids = loadCentroids(spark, path)
     val codebooks = loadCodebooks(spark, path)
     require(codebooks.nonEmpty,
@@ -262,10 +245,21 @@ object AnnIndexStore {
     SimilarityOps.heapTopK(exact, k)
   }
 
+  /**
+   * Top-k neighbors for a query batch against the PERSISTED index.
+   * Probed cell ids are collected first (≤ |Q|·nprobe longs — a bounded
+   * artifact) and pushed as a LITERAL `isin` filter, so Catalyst prunes
+   * unprobed `cell=` directories statically — the executed plan's scan
+   * carries the partition filter, no full-index listing or read. Scoring
+   * and the bounded-heap top-k are identical to
+   * [[SimilarityOps.ivfTopK]], so results match the in-memory operator
+   * bit-for-bit at equal parameters.
+   */
   def topK(spark: SparkSession, path: String, queries: DataFrame,
            idCol: String, vecCol: String, k: Int,
            nprobe: Int = 1): DataFrame = {
     GraftFunctions.register(spark)
+    recover(spark, path)
     val centroids = loadCentroids(spark, path)
     val q = SimilarityOps.ivfProbeCells(queries, centroids, vecCol, nprobe)
       .select(col(idCol).as("query_id"), col(vecCol).as("qv"), col("cell"))

@@ -108,7 +108,6 @@ object ClusterStore {
     } finally np.unpersist(blocking = false)
   }
 
-  private val Marker = "_STORE_SUCCESS"
   private def hp(s: String) = new org.apache.hadoop.fs.Path(s)
 
   /** Commit discipline: the THREE tables publish as ONE atomic root swap
@@ -122,8 +121,8 @@ object ClusterStore {
     // inside the swap's build, before any rename touches those dirs. The
     // meta counts ride the two writes as Observations — no extra jobs.
     val nodesObs, pairsObs = new org.apache.spark.sql.Observation()
-    graft.sources.TreeSwap.swap(spark, path, ".next", ".prev",
-        Marker) { tmp =>
+    graft.sources.TreeSwap.swap(spark, path,
+        graft.sources.TreeSwap.ClusterCommit) { tmp =>
       asg.select(col("id").cast("long"), col("cluster_id").cast("long"))
         .observe(nodesObs, count(lit(1)).as("n"))
         .write.parquet(s"$tmp/assignment")
@@ -144,21 +143,29 @@ object ClusterStore {
 
   /** Recover the root swap after a crash —
     * [[graft.sources.TreeSwap.recover]]'s invariants over the
-    * `.next`/`.prev` neighbors. */
+    * [[graft.sources.TreeSwap.ClusterCommit]] neighbors. Every reader and
+    * writer below runs it first. */
   def recover(spark: SparkSession, path: String): Unit =
-    graft.sources.TreeSwap.recover(spark, path, ".next", ".prev", Marker)
+    graft.sources.TreeSwap.recover(spark, path,
+      graft.sources.TreeSwap.ClusterCommit)
 
   /** The committed (id, cluster_id) table; cluster_id = component min. */
-  def assignment(spark: SparkSession, path: String): DataFrame =
+  def assignment(spark: SparkSession, path: String): DataFrame = {
+    recover(spark, path)
     spark.read.schema("id long, cluster_id long").parquet(asgPath(path))
+  }
 
   /** The committed evidence edge set this assignment was clustered from. */
-  def pairs(spark: SparkSession, path: String): DataFrame =
+  def pairs(spark: SparkSession, path: String): DataFrame = {
+    recover(spark, path)
     spark.read.parquet(pairsPath(path))
+  }
 
-  def version(spark: SparkSession, path: String): Long =
+  def version(spark: SparkSession, path: String): Long = {
+    recover(spark, path)
     spark.read.schema("version long, n_pairs long, n_nodes long")
       .parquet(metaPath(path)).select("version").head().getLong(0)
+  }
 
   /** Cluster sizes from the persisted assignment — the histogram /
     * keep-one bookkeeping read, one narrow aggregate over the artifact. */

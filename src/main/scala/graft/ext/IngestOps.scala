@@ -33,6 +33,36 @@ object IngestOps {
                         lexPath: String, reportPath: String)
 
   /**
+   * COMPACT a wave-partitioned artifact root (`corpusPath` /
+   * `bandIndexPath` / `reportPath`): a long-running ingest accretes one
+   * `wave=` directory per wave, and at 100 TB the FILE COUNT — not the
+   * data — becomes the cost (every wave's probe lists every prior wave's
+   * files). Rewrites the union of all waves into a single fresh `wave=0`
+   * and swaps it in with the shared [[graft.sources.TreeSwap]] rename-
+   * aside discipline (crash at any instant leaves a complete root live
+   * or recoverable — [[ingestWave]] recovers on entry). Contents are
+   * unchanged by construction: rows are per-doc facts independent of
+   * which wave carried them.
+   *
+   * CONTRACT: compaction retires the folded waves' replay scope — a wave
+   * id folded into `wave=0` no longer overwrites its original directory
+   * on redelivery (the [[graft.ext.LexIndexStore.compact]] rule). Compact
+   * only after the folded waves' delivery is settled, and issue fresh
+   * wave ids afterwards.
+   */
+  def compactWaves(spark: SparkSession, path: String,
+                   targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    graft.sources.Stores.compactRoot(spark, path,
+      graft.sources.TreeSwap.WaveCompact, Some("wave"), targetFileBytes)
+
+  /** Recover a wave root ([[WaveStores]] `corpusPath` / `bandIndexPath` /
+    * `reportPath`) after a crashed [[compactWaves]] swap —
+    * [[graft.sources.TreeSwap.recover]]'s invariants. */
+  def recoverWaves(spark: SparkSession, path: String): Unit =
+    graft.sources.TreeSwap.recover(spark, path,
+      graft.sources.TreeSwap.WaveCompact)
+
+  /**
    * Run one ingest wave. `batch` must carry `idCol` (globally unique vs
    * the corpus — the [[DedupOps.incrementalNearDupPairs]] contract),
    * `textCol`, and `vecCol` (the embedding for ANN growth).
@@ -73,6 +103,10 @@ object IngestOps {
    *     waveId, against the store's frozen centroids);
    *   - admitted text → [[LexIndexStore.append]] (batchId = waveId);
    *   - the per-doc report → `reportPath/wave=waveId`.
+   * Every root is recovered before it is read or written: the three
+   * wave roots ([[recoverWaves]]) on entry, the ANN root before the
+   * semantic gate reads it, and each store's own append recovers its
+   * root, so a crashed compaction or commit heals on the next wave.
    *
    * Returns the committed report read back from its artifact:
    * (`idCol`, disposition). Every input batch row appears exactly once.
@@ -94,42 +128,6 @@ object IngestOps {
    * SparkContext checkpoint dir they are reliable checkpoints, deleted on
    * the way out.
    */
-  private val Marker = "_STORE_SUCCESS"
-
-  /**
-   * COMPACT a wave-partitioned artifact root (`corpusPath` /
-   * `bandIndexPath` / `reportPath`): a long-running ingest accretes one
-   * `wave=` directory per wave, and at 100 TB the FILE COUNT — not the
-   * data — becomes the cost (every wave's probe lists every prior wave's
-   * files). Rewrites the union of all waves into a single fresh `wave=0`
-   * and swaps it in with the shared [[graft.sources.TreeSwap]] rename-
-   * aside discipline (crash at any instant leaves a complete root live
-   * or recoverable — [[ingestWave]] recovers on entry). Contents are
-   * unchanged by construction: rows are per-doc facts independent of
-   * which wave carried them.
-   *
-   * CONTRACT: compaction retires the folded waves' replay scope — a wave
-   * id folded into `wave=0` no longer overwrites its original directory
-   * on redelivery (the [[graft.ext.LexIndexStore.compact]] rule). Compact
-   * only after the folded waves' delivery is settled, and issue fresh
-   * wave ids afterwards.
-   */
-  def compactWaves(spark: SparkSession, path: String,
-                   targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    graft.sources.TreeSwap.recover(spark, path, ".compact", ".precompact",
-      Marker)
-    val hp = new org.apache.hadoop.fs.Path(path)
-    val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(hp).getLength
-    val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
-    // mergeSchema: wave batches may have evolved additively; a sampled
-    // footer would permanently drop evolved columns in the rewrite
-    val df = spark.read.option("mergeSchema", "true").parquet(path)
-      .drop("wave").coalesce(nFiles)
-    graft.sources.TreeSwap.swap(spark, path, ".compact", ".precompact",
-      Marker) { tmp => df.write.parquet(s"$tmp/wave=0") }
-  }
-
   def ingestWave(spark: SparkSession, batch: DataFrame, idCol: String,
                  textCol: String, vecCol: String, stores: WaveStores,
                  waveId: Long,
@@ -141,9 +139,8 @@ object IngestOps {
                  nBits: Int = 4, stride: Int = 8): DataFrame = {
     require(waveId > 0, "waveId 0 is the base build")
     // repair any crashed compaction before reading the roots it swaps
-    Seq(stores.corpusPath, stores.bandIndexPath, stores.reportPath).foreach(
-      graft.sources.TreeSwap.recover(spark, _, ".compact", ".precompact",
-        Marker))
+    Seq(stores.corpusPath, stores.bandIndexPath, stores.reportPath)
+      .foreach(recoverWaves(spark, _))
     // every wave-scope stage is CUT (materialized once, rebased on a
     // `LogicalRDD` leaf; [[graft.ops.Iterate.cut]]): the six writes below
     // read the stages many times over, and a frame that merely persisted
@@ -211,6 +208,7 @@ object IngestOps {
       val semanticLosers = semanticThreshold.map { tau =>
         val survivors = batchKept.join(
           crossPairs.select(col("new_id").as("id")), Seq("id"), "left_anti")
+        AnnIndexStore.recover(spark, stores.annPath)
         val corpusVecs = spark.read.parquet(s"${stores.annPath}/cells")
           .filter(col("b") =!= waveId)
           .select(col(idCol), col(vecCol))

@@ -23,7 +23,9 @@ import org.apache.spark.sql.functions._
  * exactly-once discipline of [[AnnIndexStore.append]]); corpus stats
  * (df per term, N, avgdl) are derived at query time by summing across
  * batches — all term postings share a bucket regardless of batch, so
- * pruning is batch-transparent.
+ * pruning is batch-transparent. [[compact]] publishes through
+ * [[graft.sources.TreeSwap]]; every reader and writer runs [[recover]]
+ * first, so a crashed compaction heals on the next access.
  *
  * Query results are BIT-IDENTICAL to [[TextOps.bm25BatchTopK]] over the
  * same corpus (spec-proven, incl. after appends): tf/df/dl/N are integers
@@ -56,6 +58,7 @@ object LexIndexStore {
   def append(path: String, newDocs: DataFrame, idCol: String,
              textCol: String, batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the base build")
+    recover(newDocs.sparkSession, path)
     writeBatch(path, newDocs, idCol, textCol,
       nBucketsOf(newDocs.sparkSession, path), batchId)
   }
@@ -71,21 +74,21 @@ object LexIndexStore {
    * the data — becomes the scan-planning cost (every query lists every
    * batch's files in its pruned buckets). Compaction rewrites the union
    * of all batches into a single fresh `b=0` under a sibling directory
-   * and swaps it in with the rename-aside discipline of
-   * [[graft.sources.Stores.compact]] (never delete-then-rename — a crash
-   * at any instant leaves a complete postings tree live or recoverable
-   * via [[recoverCompact]]). Query results are unchanged by construction:
+   * and swaps it in with the marker-gated rename-aside of
+   * [[graft.sources.TreeSwap]] (never delete-then-rename — a crash at
+   * any instant leaves a complete postings tree live or recoverable via
+   * [[recover]]). Query results are unchanged by construction:
    * postings rows are per-(doc, term) facts independent of which batch
    * carried them, and df/N/avgdl re-derive from the same union
    * (spec-proven identical). Appends resume after compaction with fresh
    * batch ids > 0.
    */
   def compact(path: String, spark: SparkSession): Unit = {
-    recoverCompact(spark, path)
+    recover(spark, path)
     val nBuckets = nBucketsOf(spark, path)
     import spark.implicits._
-    graft.sources.TreeSwap.swap(spark, path, ".compact", ".precompact",
-        Marker) { tmp =>
+    graft.sources.TreeSwap.swap(spark, path,
+        graft.sources.TreeSwap.IndexCompact) { tmp =>
       Seq(nBuckets).toDF("n_buckets")
         .write.mode("overwrite").parquet(s"$tmp/meta")
       spark.read.parquet(s"$path/postings")
@@ -98,18 +101,13 @@ object LexIndexStore {
     }
   }
 
-  /** Root commit marker for the compacted tree (the swap needs an
-    * all-sub-writes-committed witness; parquet `_SUCCESS` files only mark
-    * individual sub-writes). */
-  private val Marker = "_INDEX_SUCCESS"
-
-  /** Recover the [[compact]] swap after a crash — the
-    * [[graft.ext.AnnIndexStore.recoverRetrain]] invariants: live present
-    * → drop the superseded backup; live missing with a MARKED tmp →
-    * promote; live missing with only a backup → restore. */
-  def recoverCompact(spark: SparkSession, path: String): Unit =
-    graft.sources.TreeSwap.recover(spark, path, ".compact", ".precompact",
-      Marker)
+  /** Recover the index root after a crashed [[compact]] swap —
+    * [[graft.sources.TreeSwap.recover]]'s invariants: live present → drop
+    * the stale neighbors; live missing with a MARKED tmp → promote; live
+    * missing with only a backup → restore. */
+  def recover(spark: SparkSession, path: String): Unit =
+    graft.sources.TreeSwap.recover(spark, path,
+      graft.sources.TreeSwap.IndexCompact)
 
   private def writeBatch(path: String, docs: DataFrame, idCol: String,
                          textCol: String, nBuckets: Int,
@@ -150,6 +148,7 @@ object LexIndexStore {
            k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k > 0, s"k must be positive, got $k")
     GraftFunctions.register(spark)
+    recover(spark, path)
     val dec = org.apache.spark.sql.types.DecimalType(18, 6)
     val nBuckets = nBucketsOf(spark, path)
     val qt = queryTerms

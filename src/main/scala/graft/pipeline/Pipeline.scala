@@ -112,7 +112,7 @@ object Pipeline {
    * under an overall wall-clock cap that is checked before every attempt.
    * Safe to retry because a run is idempotent end-to-end: staging is
    * run_id-scoped, the mart merge is keyed, and the swap is crash-safe
-   * (Stores.recoverMart* reconcile any partial write on the next attempt).
+   * (Stores.recoverMart reconciles any partial write on the next attempt).
    * `sleep`/`clock` are injectable for tests.
    */
   def withRetry[T](maxRetries: Int = 2,

@@ -126,34 +126,17 @@ object Stores {
 
   private def hpath(s: String) = new org.apache.hadoop.fs.Path(s)
 
-  /** Hadoop FileSystem reports rename/delete failure by RETURNING FALSE,
-    * not throwing — in a swap sequence, ignoring that and proceeding to the
-    * cleanup deletes would destroy the only surviving copy of the data
-    * while reconciliation still reports success. Every swap step goes
-    * through these throwing wrappers so a refused rename aborts the swap
-    * with both versions intact (recover* then restores on next access). */
-  private def renameOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            src: org.apache.hadoop.fs.Path,
-                            dst: org.apache.hadoop.fs.Path): Unit =
-    if (!fs.rename(src, dst))
-      throw new java.io.IOException(s"rename failed: $src -> $dst")
-
-  private def deleteOrThrow(fs: org.apache.hadoop.fs.FileSystem,
-                            p: org.apache.hadoop.fs.Path): Unit =
-    if (fs.exists(p) && !fs.delete(p, true))
-      throw new java.io.IOException(s"delete failed: $p")
-
   /** Mart overwrite (the materialization step after the merge, DAG:279-316).
     * Parquet is immutable, so "upsert into mart" = compute merged frame,
     * write new version. The merged plan READS the current mart, so writing
     * goes to a temp dir first and swaps in — the same write-new-version-then-
     * flip-pointer discipline every table format (Delta/Iceberg) uses.
     *
-    * The swap is crash-safe: the live dir is RENAMED to `.bak` (never
-    * deleted) before the new version renames in, so at every instant either
-    * the live dir or a complete predecessor (.bak) or successor (.tmp)
-    * exists; [[recoverMart]] promotes whichever survives a crash. A
-    * delete-then-rename swap here would be data loss under foreachBatch
+    * The swap is [[TreeSwap]]'s [[TreeSwap.Mart]] kind: the live dir is
+    * RENAMED aside (never deleted) before the new version renames in, so at
+    * every instant either the live dir or a complete predecessor or
+    * successor exists; [[recoverMart]] promotes whichever survives a crash.
+    * A delete-then-rename swap here would be data loss under foreachBatch
     * replay: on restart martExists()=false and the replayed micro-batch
     * would seed a mart containing only itself.
     *
@@ -161,53 +144,33 @@ object Stores {
     * [[martMergePartitioned]] instead — this whole-table form is for
     * bounded marts and first materialization. */
   def martOverwrite(df: DataFrame, martPath: String): Unit = {
-    val spark = df.sparkSession
-    val fs = hpath(martPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = hpath(martPath + ".tmp")
-    val bak = hpath(martPath + ".bak")
-    val dst = hpath(martPath)
-    recoverMart(spark, martPath)
-    df.write.mode("overwrite").option("compression", ParquetCodec)
-      .parquet(tmp.toString)
-    deleteOrThrow(fs, bak)
-    if (fs.exists(dst)) renameOrThrow(fs, dst, bak)
-    renameOrThrow(fs, tmp, dst)
-    deleteOrThrow(fs, bak)
-  }
-
-  /** Crash recovery for a rename-swap (write tmp → live→bak → tmp→live →
-    * drop bak). Invariants:
-    *   - live exists        → any leftover bak is superseded; drop it.
-    *   - live missing, tmp complete (_SUCCESS) → crash fell between
-    *     live→bak and tmp→live; tmp holds the NEWER full version — promote.
-    *   - live missing, only bak → crash fell before tmp finished; bak holds
-    *     the last complete version — restore it.
-    * Leftover tmp alongside a live dir is NOT promoted: the write that
-    * produced it never committed (its batch/run will replay). */
-  private def recoverSwap(spark: SparkSession, path: String,
-                          tmpSuffix: String, bakSuffix: String): Unit = {
-    val fs = hpath(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tmp = hpath(path + tmpSuffix)
-    val bak = hpath(path + bakSuffix)
-    val dst = hpath(path)
-    if (fs.exists(dst)) {
-      deleteOrThrow(fs, bak)
-    } else if (fs.exists(tmp) && fs.exists(hpath(path + tmpSuffix + "/_SUCCESS"))) {
-      renameOrThrow(fs, tmp, dst)
-      deleteOrThrow(fs, bak)
-    } else if (fs.exists(bak)) {
-      renameOrThrow(fs, bak, dst)
-      deleteOrThrow(fs, tmp)
+    recoverMart(df.sparkSession, martPath)
+    TreeSwap.swap(df.sparkSession, martPath, TreeSwap.Mart) { tmp =>
+      df.write.mode("overwrite").option("compression", ParquetCodec)
+        .parquet(tmp)
     }
   }
 
-  /** Recover the [[martOverwrite]] swap after a crash. */
-  def recoverMart(spark: SparkSession, martPath: String): Unit =
-    recoverSwap(spark, martPath, ".tmp", ".bak")
+  /** Recover a mart root after a crash: the [[martOverwrite]] whole-tree
+    * swap, then the [[martMergePartitioned]] per-partition swap — an aside
+    * dir whose live twin exists is superseded (drop it); one whose live
+    * twin is missing holds the last complete version (restore it). */
+  def recoverMart(spark: SparkSession, martPath: String): Unit = {
+    TreeSwap.recover(spark, martPath, TreeSwap.Mart)
+    val fs = hpath(martPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val asideRoot = hpath(martPath + ".aside")
+    if (!fs.exists(asideRoot)) return
+    fs.listStatus(asideRoot).foreach { part =>
+      val live = new org.apache.hadoop.fs.Path(martPath, part.getPath.getName)
+      if (fs.exists(live)) TreeSwap.deleteOrThrow(fs, part.getPath)
+      else TreeSwap.renameOrThrow(fs, part.getPath, live)
+    }
+    fs.delete(asideRoot, true)
+  }
 
   /** Recover the [[compact]] swap after a crash. */
   def recoverCompacted(spark: SparkSession, path: String): Unit =
-    recoverSwap(spark, path, ".compact", ".precompact")
+    TreeSwap.recover(spark, path, TreeSwap.Compact)
 
   /** Mart read with `mergeSchema`: after an additive schema evolution
     * ([[martMergePartitioned]]) only the partitions touched since carry the
@@ -318,7 +281,7 @@ object Stores {
     // (outside the mart root, so partition discovery never sees it), new dir
     // renames in, then the aside copy drops. A crash mid-loop leaves each
     // partition either fully old, fully new, or old-under-aside — never
-    // absent; [[recoverMartPartitions]] restores aside dirs on next access
+    // absent; [[recoverMart]] restores aside dirs on next access
     // and the keyed upsert makes the replayed run idempotent.
     // Guard against non-canonical partition directory names: discovery
     // casts e.g. "day=2024-1-1" to the same VALUE as the canonical
@@ -354,34 +317,18 @@ object Stores {
       .foreach { part =>
         val dst = new org.apache.hadoop.fs.Path(martPath, part.getPath.getName)
         val aside = new org.apache.hadoop.fs.Path(asideRoot, part.getPath.getName)
-        deleteOrThrow(fs, aside)
-        if (fs.exists(dst)) renameOrThrow(fs, dst, aside)
-        renameOrThrow(fs, part.getPath, dst)
-        deleteOrThrow(fs, aside)
+        TreeSwap.deleteOrThrow(fs, aside)
+        if (fs.exists(dst)) TreeSwap.renameOrThrow(fs, dst, aside)
+        TreeSwap.renameOrThrow(fs, part.getPath, dst)
+        TreeSwap.deleteOrThrow(fs, aside)
       }
     fs.delete(tmp, true)
     fs.delete(asideRoot, true)
     merged.schema
   }
 
-  /** Crash recovery for the [[martMergePartitioned]] per-partition swap:
-    * an aside dir whose live twin exists is superseded (drop it); one whose
-    * live twin is missing holds the last complete version (restore it). */
-  def recoverMartPartitions(spark: SparkSession, martPath: String): Unit = {
-    val fs = hpath(martPath).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val asideRoot = hpath(martPath + ".aside")
-    if (!fs.exists(asideRoot)) return
-    fs.listStatus(asideRoot).foreach { part =>
-      val live = new org.apache.hadoop.fs.Path(martPath, part.getPath.getName)
-      if (fs.exists(live)) deleteOrThrow(fs, part.getPath)
-      else renameOrThrow(fs, part.getPath, live)
-    }
-    fs.delete(asideRoot, true)
-  }
-
   def martExists(spark: SparkSession, martPath: String): Boolean = {
     recoverMart(spark, martPath)
-    recoverMartPartitions(spark, martPath)
     val p = new org.apache.hadoop.fs.Path(martPath)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.exists(p) && fs.listStatus(p).nonEmpty
@@ -396,28 +343,30 @@ object Stores {
    * `fileCount / idealCount` exceeds ~10×.
    */
   def compact(spark: SparkSession, path: String,
-              targetFileBytes: Long = 128L * 1024 * 1024): Unit = {
-    recoverCompacted(spark, path)
-    val p = new org.apache.hadoop.fs.Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val bytes = fs.getContentSummary(p).getLength
+              targetFileBytes: Long = 128L * 1024 * 1024): Unit =
+    compactRoot(spark, path, TreeSwap.Compact, None, targetFileBytes)
+
+  /** The one compaction body: recover `kind`'s swap, size the rewrite from
+    * the root's bytes, and swap the coalesced union in as `kind`. With a
+    * `level` partition column, its directories fold into one `level=0`. */
+  private[graft] def compactRoot(spark: SparkSession, path: String,
+                                 kind: TreeSwap.Kind, level: Option[String],
+                                 targetFileBytes: Long): Unit = {
+    TreeSwap.recover(spark, path, kind)
+    val p = hpath(path)
+    val bytes = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .getContentSummary(p).getLength
     val nFiles = math.max(1, math.ceil(bytes.toDouble / targetFileBytes).toInt)
     // mergeSchema: after an additive schema evolution the directory holds
     // files of different widths — reading a single sampled footer here
     // would silently and PERMANENTLY drop the evolved columns in the
     // rewrite (compaction is the one op that replaces every file)
-    val df = spark.read.option("mergeSchema", "true").parquet(path)
-      .coalesce(nFiles)
-    val tmp = new org.apache.hadoop.fs.Path(path + ".compact")
-    val bak = new org.apache.hadoop.fs.Path(path + ".precompact")
-    // Rename-swap, never delete-then-rename: a crash between the two steps
-    // must leave a complete version under either the live path or .precompact.
-    df.write.mode("overwrite").option("compression", ParquetCodec)
-      .parquet(tmp.toString)
-    deleteOrThrow(fs, bak)
-    renameOrThrow(fs, p, bak)
-    renameOrThrow(fs, tmp, p)
-    deleteOrThrow(fs, bak)
+    val all = spark.read.option("mergeSchema", "true").parquet(path)
+    val df = level.fold(all)(all.drop).coalesce(nFiles)
+    TreeSwap.swap(spark, path, kind) { tmp =>
+      df.write.mode("overwrite").option("compression", ParquetCodec)
+        .parquet(level.fold(tmp)(l => s"$tmp/$l=0"))
+    }
   }
 
   // -------------------------------------------------------------------------

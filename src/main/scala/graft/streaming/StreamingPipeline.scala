@@ -165,8 +165,7 @@ object StreamingPipeline {
     import graft.ops.QualityCheck
     // stable per-run tag: same checkpoint → same tag (replay overwrites);
     // new checkpoint → new run directory (no stale-batch collisions)
-    val runTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_)).mkString
+    val runTag = runTagOf(checkpoint)
     events
       .withWatermark("ts", watermark)
       .dropDuplicatesWithinWatermark("event_id")
@@ -197,6 +196,14 @@ object StreamingPipeline {
       }
       .start()
   }
+
+  /** A stable per-run tag: 4 bytes of MD5 over the checkpoint path, as
+    * hex. Same checkpoint → same tag, so a replay overwrites its own
+    * directories; a new checkpoint → a new run scope. */
+  private def runTagOf(checkpoint: String): String =
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_))
+      .mkString
 
   /**
    * Streaming incremental ROLLUP maintenance — the streaming face of
@@ -900,9 +907,7 @@ object StreamingPipeline {
     // batch ids restart at 0 under a fresh checkpoint — scope every write
     // by a checkpoint-derived run tag so a NEW ingest run appends alongside
     // prior runs while a REPLAYED batch still overwrites its own directory
-    val runTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
+    val runTag = runTagOf(checkpoint)
     docs.writeStream
       .queryName("graft_dedup_ingest")
       .option("checkpointLocation", checkpoint)
@@ -922,16 +927,6 @@ object StreamingPipeline {
       .start()
   }
 
-  /** The per-batch admission core of [[dedupIngest]]: collapse in-batch
-    * duplicate clusters to their min-id member, reject near-dups of the
-    * already-admitted corpus via the persisted band index, then write
-    * rejects, the admitted corpus rows, and the band-index contribution —
-    * each into its `run=/batch_id=` directory (replay overwrites itself).
-    * Returns (admitted rows STILL PERSISTED — so a caller can feed
-    * further exactly-once sinks in the same micro-batch; the caller owns
-    * the unpersist) and (the batch's verified dup EVIDENCE — in-batch
-    * pairs plus batch×corpus pairs in canonical (min, max) order — for
-    * callers growing a [[graft.ext.ClusterStore]] in the same lockstep). */
   /** True iff `path` exists and holds at least one COMMITTED data file —
     * i.e. a visible file not under a `_temporary` attempt directory and not
     * a `_`/`.`-prefixed marker. A directory failing this is treated as an
@@ -955,6 +950,16 @@ object StreamingPipeline {
       found
     }
 
+  /** The per-batch admission core of [[dedupIngest]]: collapse in-batch
+    * duplicate clusters to their min-id member, reject near-dups of the
+    * already-admitted corpus via the persisted band index, then write
+    * rejects, the admitted corpus rows, and the band-index contribution —
+    * each into its `run=/batch_id=` directory (replay overwrites itself).
+    * Returns (admitted rows STILL PERSISTED — so a caller can feed
+    * further exactly-once sinks in the same micro-batch; the caller owns
+    * the unpersist) and (the batch's verified dup EVIDENCE — in-batch
+    * pairs plus batch×corpus pairs in canonical (min, max) order — for
+    * callers growing a [[graft.ext.ClusterStore]] in the same lockstep). */
   private def admitDedupBatch(spark: SparkSession, b: DataFrame,
                               batchId: Long, runTag: String, idCol: String,
                               textCol: String, corpusPath: String,
@@ -1045,9 +1050,7 @@ object StreamingPipeline {
                        indexPath: String, checkpoint: String)
       : StreamingQuery = {
     import graft.ext.DedupOps
-    val runTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
+    val runTag = runTagOf(checkpoint)
     docs.writeStream
       .queryName("graft_exact_dedup_ingest")
       .option("checkpointLocation", checkpoint)
@@ -1135,9 +1138,7 @@ object StreamingPipeline {
                      threshold: Double = 0.8,
                      lexIndexPath: Option[String] = None,
                      clusterPath: Option[String] = None): StreamingQuery = {
-    val runTag = java.security.MessageDigest.getInstance("MD5")
-      .digest(checkpoint.getBytes("UTF-8")).take(4).map("%02x".format(_))
-      .mkString
+    val runTag = runTagOf(checkpoint)
     // the ANN index partitions on a LONG batch id (no run= level), so the
     // run scope is folded into the id's high bits: a replayed batch under
     // the same checkpoint lands on its own partition (exactly-once), a

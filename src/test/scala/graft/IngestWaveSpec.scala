@@ -32,6 +32,17 @@ class IngestWaveSpec extends SparkSpec {
   private def runShape(st: IngestOps.WaveStores): DataFrame =
     WaveShape.run(spark, st, shapeWave, waveId = 1)
 
+  /** Every artifact a wave advances, as sorted row strings. */
+  private def artifacts(st: IngestOps.WaveStores): Seq[Seq[String]] = {
+    def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
+    Seq(st.corpusPath, st.bandIndexPath, st.reportPath,
+        s"${st.annPath}/cells", s"${st.lexPath}/postings",
+        s"${st.lexPath}/stats")
+      .map(p => rows(spark.read.parquet(p))) ++
+      Seq(rows(ClusterStore.assignment(spark, st.clusterPath)),
+        rows(ClusterStore.pairs(spark, st.clusterPath)))
+  }
+
   test("ingestWave: report exact; clusters/ANN/lex equal batch rebuilds over base ∪ admitted") {
     val work = Files.createTempDirectory("graft_wave_").toString
     val st = seedShape(work)
@@ -257,6 +268,30 @@ class IngestWaveSpec extends SparkSpec {
       .as[Long].collect().sorted shouldBe Array(10L, 201L, 302L)
   }
 
+  test("ingestWave heals a Lex and an ANN store left mid-compaction: report and artifacts equal an uncrashed run's") {
+    def compacted(): IngestOps.WaveStores = {
+      val st = seedShape(Files.createTempDirectory("graft_wave_crash_").toString)
+      LexIndexStore.compact(st.lexPath, spark)
+      AnnIndexStore.compact(st.annPath, spark)
+      st
+    }
+    val (clean, crashed) = (compacted(), compacted())
+    // crash between live→.precompact and .compact→live: each index root
+    // sits renamed to its MARKED .compact, and nothing is live
+    val fs = new org.apache.hadoop.fs.Path(crashed.lexPath)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    def hp(s: String) = new org.apache.hadoop.fs.Path(s)
+    for (p <- Seq(crashed.lexPath, crashed.annPath)) {
+      fs.rename(hp(p), hp(s"$p.compact")) shouldBe true
+      fs.exists(hp(s"$p.compact/_INDEX_SUCCESS")) shouldBe true
+    }
+    def outcome(st: IngestOps.WaveStores) =
+      (runShape(st).collect().map(_.toString).toSeq.sorted, artifacts(st))
+    outcome(crashed) shouldBe outcome(clean)
+    for (p <- Seq(crashed.lexPath, crashed.annPath))
+      fs.exists(hp(s"$p.compact")) shouldBe false
+  }
+
   test("ingestWave semantic gate: a cosine near-dup of an admitted embedding is rejected; no-vector docs skip the gate") {
     import graft.ext.SimilarityOps
     val work = Files.createTempDirectory("graft_wave_sem_").toString
@@ -415,15 +450,6 @@ class IngestWaveSpec extends SparkSpec {
       .sharedState.cacheManager
     // earlier specs' memoized query artifacts are not this wave's
     spark.catalog.clearCache()
-    def artifacts(st: IngestOps.WaveStores): Seq[Seq[String]] = {
-      def rows(df: DataFrame) = df.collect().map(_.toString).toSeq.sorted
-      Seq(st.corpusPath, st.bandIndexPath, st.reportPath,
-          s"${st.annPath}/cells", s"${st.lexPath}/postings",
-          s"${st.lexPath}/stats")
-        .map(p => rows(spark.read.parquet(p))) ++
-        Seq(rows(ClusterStore.assignment(spark, st.clusterPath)),
-          rows(ClusterStore.pairs(spark, st.clusterPath)))
-    }
     def wave(st: IngestOps.WaveStores): (Seq[String], Seq[Seq[String]]) = {
       val before = sc.getPersistentRDDs.keySet
       val report = runShape(st).collect().map(_.toString).toSeq.sorted

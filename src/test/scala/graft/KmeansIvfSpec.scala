@@ -316,7 +316,7 @@ class KmeansIvfSpec extends SparkSpec {
 
     val fs = new org.apache.hadoop.fs.Path(idx)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    def crash(prep: () => Unit): Unit = { prep(); AnnIndexStore.recoverRetrain(spark, idx) }
+    def crash(prep: () => Unit): Unit = { prep(); AnnIndexStore.recover(spark, idx) }
     // crash between live→bak and tmp→live: MARKED tmp promotes
     crash { () =>
       fs.rename(new org.apache.hadoop.fs.Path(idx),
@@ -452,7 +452,7 @@ class KmeansIvfSpec extends SparkSpec {
       new org.apache.hadoop.fs.Path(s"$idx.compact")) shouldBe true
     fs.exists(new org.apache.hadoop.fs.Path(
       s"$idx.compact/_INDEX_SUCCESS")) shouldBe true
-    AnnIndexStore.recoverCompact(spark, idx)
+    AnnIndexStore.recover(spark, idx)
     res() shouldBe full
     // crash BEFORE the swap leaves a marked tmp beside a live tree that
     // then takes appends — recovery must DELETE the now-stale snapshot,
@@ -460,7 +460,7 @@ class KmeansIvfSpec extends SparkSpec {
     fs.mkdirs(new org.apache.hadoop.fs.Path(s"$idx.compact/cells"))
     fs.create(new org.apache.hadoop.fs.Path(
       s"$idx.compact/_INDEX_SUCCESS")).close()
-    AnnIndexStore.recoverCompact(spark, idx)
+    AnnIndexStore.recover(spark, idx)
     new java.io.File(s"$idx.compact").exists() shouldBe false
     res() shouldBe full
   }

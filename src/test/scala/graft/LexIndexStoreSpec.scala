@@ -65,7 +65,7 @@ class LexIndexStoreSpec extends SparkSpec {
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     fs.rename(new org.apache.hadoop.fs.Path(idx),
       new org.apache.hadoop.fs.Path(s"$idx.compact"))
-    LexIndexStore.recoverCompact(spark, idx)
+    LexIndexStore.recover(spark, idx)
     LexIndexStore.topK(spark, idx, qt, k = 4)
       .orderBy("qid", "rnk").collect() shouldBe exp
 

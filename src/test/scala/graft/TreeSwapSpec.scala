@@ -8,12 +8,17 @@ import graft.sources.TreeSwap
  * ANY step of the swap state machine, and a reader that runs [[TreeSwap
  * .recover]] first (as every store's read path does) must then observe a
  * COMPLETE, single-generation tree — the old one or the new one, never a
- * mix, never nothing. This is the one claim all three persisted stores
- * (ClusterStore / AnnIndexStore / LexIndexStore) lean on.
+ * mix, never nothing. This is the one claim every persisted root leans
+ * on (marts, compacted directories, wave roots, ClusterStore /
+ * AnnIndexStore / LexIndexStore), so the walk runs over every declared
+ * swap kind.
  */
 class TreeSwapSpec extends SparkSpec {
 
-  private val Marker = "_STORE_SUCCESS"
+  private val Kinds = Seq(TreeSwap.Mart, TreeSwap.Compact,
+    TreeSwap.WaveCompact, TreeSwap.IndexCompact, TreeSwap.IndexRetrain,
+    TreeSwap.ClusterCommit)
+  private val Cluster = TreeSwap.ClusterCommit
 
   private def fs = new org.apache.hadoop.fs.Path("/tmp")
     .getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -31,8 +36,9 @@ class TreeSwapSpec extends SparkSpec {
 
   /** Read the live tree the way a consumer would: recover first, then
     * demand a complete single-generation root. Returns the generation. */
-  private def readLive(path: String): Int = {
-    TreeSwap.recover(spark, path, ".next", ".prev", Marker)
+  private def readLive(path: String,
+                       kind: TreeSwap.Kind = Cluster): Int = {
+    TreeSwap.recover(spark, path, kind)
     val a = java.nio.file.Paths.get(s"$path/a.txt")
     val b = java.nio.file.Paths.get(s"$path/b.txt")
     assert(Files.exists(a) && Files.exists(b),
@@ -45,23 +51,23 @@ class TreeSwapSpec extends SparkSpec {
   test("recover yields a complete single generation after a crash at EVERY swap step") {
     // the writer's op sequence for swapping gen2 over a live gen1 —
     // replayed as prefixes: crash-after-step-k for every k
-    for (crashAfter <- 0 to 7) {
+    for (kind <- Kinds; crashAfter <- 0 to 7) {
       val root = Files.createTempDirectory(s"graft_swap_$crashAfter").toString
       val path = s"$root/store"
-      val (tmp, bak) = (path + ".next", path + ".prev")
+      val (tmp, bak) = (path + kind.tmp, path + kind.bak)
       writeTree(path, gen = 1)
       val ops: Seq[() => Unit] = Seq(
         () => fs.delete(hp(tmp), true),                    // 1 clear tmp
         () => writeTree(tmp, gen = 2, partial = true),     // 2 mid-build
         () => writeTree(tmp, gen = 2),                     // 3 build done
-        () => fs.create(hp(s"$tmp/$Marker")).close(),      // 4 marked
+        () => fs.create(hp(s"$tmp/${kind.marker}")).close(), // 4 marked
         () => fs.delete(hp(bak), true),                    // 5 clear bak
         () => { fs.rename(hp(path), hp(bak)); () },        // 6 live→bak
         () => { fs.rename(hp(tmp), hp(path)); () },        // 7 tmp→live
         () => fs.delete(hp(bak), true))                    // 8 drop bak
       ops.take(crashAfter).foreach(_.apply())
-      val gen = readLive(path)
-      withClue(s"crash after step $crashAfter: ") {
+      val gen = readLive(path, kind)
+      withClue(s"$kind, crash after step $crashAfter: ") {
         // before the marker lands (steps 0–3) the commit never happened:
         // gen1 must survive. From the marked-and-unswapped states the
         // OUTCOME may be either generation, but it must be complete and
@@ -70,7 +76,7 @@ class TreeSwapSpec extends SparkSpec {
         else if (crashAfter >= 7) gen shouldBe 2
         else gen should (be(1) or be(2))
         // recover is idempotent: a second reader sees the same world
-        readLive(path) shouldBe gen
+        readLive(path, kind) shouldBe gen
         // and no stale neighbor survives a completed recovery
         Files.exists(java.nio.file.Paths.get(tmp)) shouldBe false
         Files.exists(java.nio.file.Paths.get(bak)) shouldBe false
@@ -86,7 +92,7 @@ class TreeSwapSpec extends SparkSpec {
     val path = s"$root/store"
     writeTree(path, gen = 3)
     writeTree(path + ".next", gen = 2)
-    fs.create(hp(s"$path.next/$Marker")).close()
+    fs.create(hp(s"$path.next/${Cluster.marker}")).close()
     readLive(path) shouldBe 3
     Files.exists(java.nio.file.Paths.get(path + ".next")) shouldBe false
   }
@@ -105,14 +111,48 @@ class TreeSwapSpec extends SparkSpec {
     writeTree(path, gen = 1)
     // debris from a prior crash: stale marked tmp + stale bak
     writeTree(path + ".next", gen = 0)
-    fs.create(hp(s"$path.next/$Marker")).close()
+    fs.create(hp(s"$path.next/${Cluster.marker}")).close()
     writeTree(path + ".prev", gen = 0)
     for (gen <- 2 to 4) {
-      TreeSwap.recover(spark, path, ".next", ".prev", Marker)
-      TreeSwap.swap(spark, path, ".next", ".prev", Marker) { tmpDir =>
+      TreeSwap.recover(spark, path, Cluster)
+      TreeSwap.swap(spark, path, Cluster) { tmpDir =>
         writeTree(tmpDir, gen)
       }
       readLive(path) shouldBe gen
     }
   }
+
+  test("a delete or rename the file system refuses aborts the swap; the live tree survives") {
+    val conf = spark.sparkContext.hadoopConfiguration
+    conf.set("fs.refuse.impl", classOf[RefusingFs].getName)
+    val root = Files.createTempDirectory("graft_swap_refused").toString
+    val (local, path) = (s"$root/store", s"refuse://$root/store")
+    writeTree(local, gen = 1)
+    // first a refused delete of stale debris (building over it would mix
+    // generations), then a refused live→bak rename
+    for (debris <- Seq(true, false)) {
+      if (debris) writeTree(local + Cluster.tmp, gen = 0, partial = true)
+      RefusingFs.refuse = true
+      try intercept[java.io.IOException] {
+        TreeSwap.swap(spark, path, Cluster)(_ =>
+          writeTree(local + Cluster.tmp, gen = 2))
+      } finally RefusingFs.refuse = false
+      withClue(s"debris=$debris: ") { readLive(local) shouldBe 1 }
+    }
+  }
 }
+
+/** The local file system under a `refuse:` scheme, whose renames and
+  * deletes return false — Hadoop's way of reporting a refused step —
+  * while [[RefusingFs.refuse]] is set. */
+class RefusingFs extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("refuse:///")
+  override def getScheme: String = "refuse"
+  override def rename(src: org.apache.hadoop.fs.Path,
+                      dst: org.apache.hadoop.fs.Path): Boolean =
+    !RefusingFs.refuse && super.rename(src, dst)
+  override def delete(p: org.apache.hadoop.fs.Path, recursive: Boolean): Boolean =
+    !RefusingFs.refuse && super.delete(p, recursive)
+}
+
+object RefusingFs { @volatile var refuse = false }
