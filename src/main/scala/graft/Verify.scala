@@ -1,7 +1,8 @@
 package graft
 import java.nio.file.{Files, Paths}
-/** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. */
+/** Driver-run correctness dump: one pass over SparkEntry.registry writes
+  * each query's result → parquet, its plan violations and its
+  * oracle_sql.json entry, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     // args: <sfDir> <outDir> [queryName...] — trailing names restrict the
@@ -16,22 +17,27 @@ object Verify {
     // violations beside the results makes the per-round artifact carry
     // plan health too, not just answers.
     val planViolations = scala.collection.mutable.ArrayBuffer[String]()
-    SparkEntry.queries
-      .filter { case (name, _) => onlyNames.isEmpty || onlyNames(name) }
-      .foreach { case (name, fn) =>
+    val oracles = scala.collection.mutable.ArrayBuffer[String]()
+    import Harness.{quote => q}
+    SparkEntry.registry
+      .filter(query => onlyNames.isEmpty || onlyNames(query.name))
+      .foreach { query =>
+        val out = s"$outDir/${query.name}"
+        oracles += s"${q(query.name)}: ${q(query.oracle)}"
+        // a failed build must not leave an earlier run's output to be
+        // compared as this run's
+        graft.sources.DocsConnector.deleteTree(new java.io.File(out))
         try {
-          val df = fn(spark, sfDir)
-          planViolations ++= graft.plans.PlanAudit.violations(name, df)
-          df.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+          val df = query.build(spark, sfDir)
+          planViolations ++=
+            graft.plans.PlanAudit.violations(query.name, query.plan, df)
+          df.coalesce(1).write.mode("overwrite").parquet(out)
         } catch { case e: Throwable =>
-          System.err.println(s"[verify] $name failed: ${e.getMessage}")
+          System.err.println(s"[verify] ${query.name} failed: ${e.getMessage}")
         }
       }
-    import Harness.{quote => q}
-    val json = SparkEntry.oracleSql
-      .filter { case (k, _) => onlyNames.isEmpty || onlyNames(k) }
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
-    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
+    Files.writeString(Paths.get(s"$outDir/oracle_sql.json"),
+      oracles.mkString("{", ",", "}"))
     Files.writeString(Paths.get(s"$outDir/plan_violations.json"),
       planViolations.map(q).mkString("[", ",", "]"))
     // artifact lifecycle beside the results: builds and build-lambda

@@ -148,22 +148,6 @@ object Pipeline {
       s"pipeline failed after ${maxRetries + 1} attempts", lastErr)
   }
 
-  /** [[run]] under the reference's retry/timeout policy ([[withRetry]]). */
-  def runWithRetry(
-      spark: SparkSession,
-      sfDir: String,
-      start: String,
-      end: String,
-      runId: String,
-      workDir: String,
-      maxRetries: Int = 2,
-      retryDelayMs: Long = 5L * 60 * 1000,
-      timeoutMs: Long = 60L * 60 * 1000,
-      onFailure: (Int, Throwable) => Unit = (_, _) => ()): Result =
-    withRetry(maxRetries, retryDelayMs, timeoutMs, onFailure = onFailure) {
-      run(spark, sfDir, start, end, runId, workDir)
-    }
-
   def run(
       spark: SparkSession,
       sfDir: String,

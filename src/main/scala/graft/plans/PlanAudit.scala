@@ -11,17 +11,17 @@ import org.apache.spark.sql.execution.window.WindowExec
  *    acceptable in any query here.
  *  - `BroadcastNestedLoopJoin` — acceptable ONLY when the broadcast side
  *    is a bounded scalar / model artifact (a 1-row aggregate, a k-row
- *    centroid or query set). Those queries are whitelisted BY NAME in
- *    [[bnljAllowed]]; everything else must plan an equi-join.
- *  - `Window` in the ANN top-k family ([[annHeapOnly]]) — the
- *    bounded-heap aggregate is the contract (the exchange carries
+ *    centroid or query set). Those queries declare [[Bnlj]] on their
+ *    `SparkEntry.QueryDef`; everything else must plan an equi-join.
+ *  - `Window` in the ANN top-k family (queries declaring [[AnnHeap]]) —
+ *    the bounded-heap aggregate is the contract (the exchange carries
  *    ≤k-element buffers, not |Q|·|C| ranked pairs); a Window node means
  *    the heap regressed to a rank window.
  *  - UNPARTITIONED `Window` — a single-task sort at 100 TB unless the
  *    window input is bounded by construction (a grid whose cardinality
- *    does NOT grow with corpus size); those are whitelisted BY NAME in
- *    [[unpartWindowAllowed]], and a whitelisted query that stops
- *    planning one is itself a violation (stale entry) so the list can
+ *    does NOT grow with corpus size); those queries declare
+ *    [[UnpartWindow]], and a query declaring it that stops planning one
+ *    is itself a violation (stale allowance) so the allowances can
  *    never rot into a bypass.
  *
  * Enforced in TWO places off this object: `PlanAuditSpec` (the
@@ -40,364 +40,43 @@ import org.apache.spark.sql.execution.window.WindowExec
  */
 object PlanAudit {
 
-  /** Queries whose plan legitimately carries a BroadcastNestedLoopJoin:
-    * every entry's broadcast side is a bounded artifact (1-row corpus
-    * aggregate, ≤k centroids, the broadcast query set of a top-k), so the
-    * "nested loop" is a constant-width scalar join, the correct 100 TB
-    * plan. Reviewed per name — add here only with the same justification. */
-  val bnljAllowed: Set[String] = Set(
-    "q22_dormant_customers", // 1-row scalar subquery (avg acctbal) broadcast
-    "q_benford",             // 1-row total-count broadcast
-    "q_bm25_topk",           // 1-row corpus stats (N, avgdl) broadcasts
-    "q_cosine_topk",         // broadcast query set — the documented top-k shape
-    "q_count_reconcile",     // two 1-row counts joined
-    "q_cross_join",          // the operator IS cross join (3 tiny dims, 125 rows)
-    "q_drift_psi",           // 1-row per-side totals broadcast
-    "q_embedding_dist_hist", // bounded sampled-pair broadcast side
-    "q_hybrid_rrf",          // fuses q_bm25_topk + q_cosine_topk: inherits
-                             // their 1-row-stats and query-set broadcasts
-    "q_importance_weights",  // 1-row target/corpus token totals (DSIR)
-    "q_category_pmi",        // 1-row corpus-count broadcast
-    "q_decayed_activity",    // 1-row reference-timestamp broadcast
-    "q_join_preflight",      // three 1-row count aggregates joined
-    "q_centroid_matrix",     // |labels|-row centroid artifact theta-joined
-                             // against itself (label1 < label2) — bounded
-    "q_hill_tail",           // 1-row reference order statistic broadcast
-    "q_margin_mining",       // cosineTopK's broadcast query set
-    "q_split_parity",        // 1-row corpus-count broadcast
-    "q_modularity",          // 1-row total-edge-count broadcast
-    "q_shard_conductance",   // 1-row total-edge-count broadcast
-    "q_ivf_topk_probe2",     // ≤c-row centroid broadcast on both sides
-    "q_ivfpq_topk",          // exact-baseline cosineTopK's broadcast query set
-    "q_pmi_collocations",    // 1-row corpus token total broadcast
-    "q_bm25_batch",          // 1-row corpus-stats broadcast
-    "q_lm_dirichlet",        // 1-row corpus-token-total broadcast (the
-                             // q_bm25_batch stats shape)
-    "q_bootstrap_ci",        // 1-row replicate-count + 1-row lo/hi-means
-                             // broadcasts over the R-row replicate table
-    "q_bm25_index_topk",     // same 1-row stats broadcast, index-backed
-    "q_hybrid_store_rrf",    // inherits the index-backed BM25 stats join
-    "q_ann_store_pq",        // exact-baseline cosineTopK's broadcast query set
-    "q_self_retrieval_mrr",  // 1-row corpus-stats + 1-row query-count broadcasts
-    "q_kneser_ney",          // 1-row bigram-type-count broadcast
-    "q_nb_classify",         // K-row prior/total + 1-row vocab-size broadcasts
-    "q_nb_confusion",        // same model artifacts as q_nb_classify
-    "q_nb_threshold_sweep",  // + tiny threshold-grid and 1-row total broadcasts
-    "q_temperature_mix",     // 1-row total + 1-row normalizer broadcasts
-    "q_waterfill_mix",       // 1-row stratum-count + 1-row saturation broadcasts
-    "q_pq_rerank",           // codebook-pool + query-set broadcasts (4 stages)
-    "q_ann_recall_audit",    // per-grid-point 1-row n_hit × n_true joins
-    "q_ann_recall_audit_pq", // same, over the IVF+PQ grid
-    "q_tfidf_topterms",      // 1-row doc-count broadcast
-    "q_unigram_logprob",     // 1-row corpus token total broadcast
-    "q_embedding_drift",     // driftPsi's 1-row smoothing-totals broadcast
-    "q_knn_classify",        // cosineTopK's broadcast query set
-    "q_linkage_scores",      // 1-row u-weight artifact built from per-field
-                             // scalar aggs (2 builds + 1 scoring join)
-    "q_cluster_agreement",   // three 1-row C(n,2)-sum artifacts joined
-    "q_knn_confusion",       // cosineTopK's broadcast query set
-    "q_chi_square",          // 1-row total + 1-row dof broadcasts
-    "q_jarque_bera",         // 1-row Σx/n anchor broadcast (two-pass
-                             // anchored moments — the overflow-safe form)
-    "q_ks_test",             // 1-row group-total broadcast
-    "q_rfm",                 // 1-row corpus-max-date broadcast
-    "q_basket_lift",         // 1-row basket-total broadcast
-    "q_vocab_overlap",       // |sources|-row sketch table theta-joined
-                             // against itself (src_a < src_b) — bounded
-    "q_mutual_info",         // 1-row corpus-total broadcast (chi² shape)
-    "q_g_test",              // chi²'s 1-row total + dof broadcasts
-    "q_ipf_rake",            // 1-row n/ka/kb broadcast over the bounded
-                             // cell grid (round joins are equi/hashed)
-    "q_seasonal_decompose",  // 1-row day-bounds broadcast over the day
-                             // grid (the acf shape)
-    "q_granger_lite",        // 1-row day-bounds broadcast; lag join is
-                             // the day-grid equi self-join
-    "q_cramers_v",           // chi²'s 1-row total + dof broadcasts
-    "q_cohen_kappa",         // two 1-row artifacts (diag, Σ ra·rb) joined
-    "q_tcloseness",          // 1-row support-size/total broadcast over the
-                             // bounded cells×support grid
-    "q_cusum",               // 1-row grand-total broadcast over the
-                             // day-count-sized series
-    "q_ewma_baseline",       // day-count-sized triangular self-join (i ≤ j)
-                             // — quadratic in DAYS, not data; bounded
-    "q_theil_sen",           // same day×day triangular join (i < j) + 1-row
-                             // min-day and day-count broadcasts
-    "q_mann_kendall",        // theil_sen's day×day triangle + a 1-row
-                             // tie-mass broadcast
-    "q_durbin_watson",       // 1-row day-bounds + fitted-coefficient
-                             // broadcasts over the day grid
-    "q_cuped",               // 1-row time-midpoint + 1-row pooled-moment
-                             // broadcasts (the experiment-readout shape)
-    "q_chi_residuals",       // chi²'s marginal grid (ra×rb, |levels|²-
-                             // bounded) + 1-row total broadcast
-    "q_skew_report",         // 1-row summary × 1-row top-key broadcast
-    "q_kaplan_meier",        // 1-row corpus-max-day + 1-row at-risk-total
-                             // broadcasts over the duration histogram
-    "q_lorenz",              // 1-row totals + 10-row decile grid broadcast
-                             // over the value histogram
-    "q_median_survival",     // the q_kaplan_meier shape (1-row max-day +
-                             // at-risk-total broadcasts), crossed at 0.5
-    "q_jsd_langs",           // 1-row token/vocab-totals broadcast over
-                             // the vocabulary-sized count table
-    "q_qq_points",           // two 1-row decile-array artifacts zipped
-    "q_standardized_effect", // 1-row stratum-total broadcast over the
-                             // |strata|-row cell table
-    "q_degree_assortativity", // two 1-row artifacts (moments × node
-                             // count) joined
-    "q_mmr_rerank",          // cosineTopK's broadcast query set; greedy
-                             // rounds run on checkpointed pool-sized frames
-    "q_mmr_store",           // same shape off the persisted index
-    "q_did_readout",         // q_cuped's 1-row time-midpoint broadcast
-    "q_qte_deciles",         // two 1-row decile-array artifacts zipped
-    "q_conformal_interval",  // 1-row n_cal and q-hat artifacts over the
-                             // residual histogram
-    "q_skipgram_pmi",        // 1-row token-total + pair-total broadcasts
-                             // (the q_pmi_collocations shape)
-    "q_ndcg_self",           // q_self_retrieval_mrr's 1-row artifacts
-    "q_mcnemar",             // q_cuped's 1-row time-midpoint broadcast
-    "q_parity_audit",        // 1-row best-rate broadcast over the
-                             // |langs|-row rate table
-    "q_seasonality_strength", // 1-row grand-total broadcast over the
-                             // 7-row day-of-week cells
-    "q_entropy_rate",        // 1-row transition-total broadcast over the
-                             // states²-bounded cell table
-    "q_isotonic_calibration", // the bins²-bounded minimax grid is a
-                             // broadcast theta-join by construction
-    "q_recalibration_gain",  // same grid, scored to the two ECEs
-    "q_gains_curve",         // 1-row population/positive-totals broadcast
-                             // over the 10-bin histogram
-    "q_pr_curve",            // same 10-bin histogram shape
-    "q_hazard_curve",        // q_kaplan_meier's 1-row broadcasts
-    "q_neyman_allocation",   // 1-row weight-total broadcast over the
-                             // |strata|-row cells
-    "q_median_ci",           // 1-row rank-thresholds broadcast over the
-                             // value histogram
-    "q_acf",                 // 1-row day-bounds + series-totals broadcasts
-                             // over the day-count-sized grid
-    "q_xcf",                 // same shape, bivariate
-    "q_anova_f",             // 1-row grand-total broadcast over the k-row
-                             // group moments (anovaCore)
-    "q_levene",              // anovaCore's 1-row total broadcast (the
-                             // group-means join itself is equi/hashed)
-    "q_tukey_pairs",         // k-row group aggregate theta-joined against
-                             // itself (g_a < g_b) + 1-row MS_W broadcast
-    "q_kruskal_wallis",      // 1-row n/ties-total broadcast over the
-                             // k-row group rank sums
-    "q_changepoint_mean",    // 1-row grand-total broadcast over the
-                             // day-count-sized series (the cusum shape)
-    "q_pettitt",             // 1-row day-count broadcast over the day grid
-    "q_log_rank",            // 1-row max-day + arm-total broadcasts over
-                             // the duration grid (the kaplan-meier shape)
-    "q_wasserstein",         // 1-row group-total broadcast over the
-                             // pre-binned value support (the KS shape)
-    "q_cvm_test",            // same KS-shape 1-row total broadcast
-    "q_brunner_munzel",      // 1-row rank-total broadcast over the
-                             // support histogram (the KS shape)
-    "q_nelson_aalen",        // kaplan-meier's 1-row max-day + risk-total
-                             // broadcasts over the duration grid
-    "q_kendall_tau",         // |X|x|Y| marginal cross (the cramers_v
-                             // dense-grid shape) + 1-row tie broadcasts
-    "q_friedman",            // day-grid x |types| dense cross + 1-row
-                             // k/tie-mass broadcasts
-    "q_page_trend",          // friedman's 1-row k broadcast + k-row
-                             // weight artifact
-    "q_jonckheere",          // k-row groups broadcast crossed over the
-                             // pre-binned value support (the friedman
-                             // dense-grid shape) + 1-row sizes broadcast
-                             // (StatsOps.jonckheereTerpstra)
-    "q_somers_d",            // kendall_tau's |X|x|Y| marginal cross +
-                             // 1-row tie-mass broadcasts (shared
-                             // concordanceCore)
-    "q_gk_lambda",           // four 1-row modal/marginal-mass artifacts
-                             // joined (the chi² marginal shape)
-    "q_theils_u",            // 1-row corpus-total + two 1-row marginal-
-                             // entropy broadcasts (the mutual_info shape)
-    "q_kendall_w",           // friedman's dense day x |types| cross +
-                             // 1-row k/tie-mass broadcasts (derives from
-                             // friedmanQ)
-    "q_cochran_q",           // two 1-row rollup artifacts + 1-row k
-                             // broadcast over the (block, trt) cells
-    "q_fleiss_kappa",        // 1-row item-rollup × 1-row category-rollup
-                             // broadcasts
-    "q_rmst",                // kaplan_meier's 1-row broadcasts + a 1-row
-                             // lead-segment/total artifact
-    "q_cuminc",              // kaplan_meier's 1-row total broadcast over
-                             // the duration grid
-    "q_theil_decomp",        // k-row group-stats broadcast join + 1-row
-                             // totals over the k-row grid
-    "q_brier_decomp",        // 1-row base-rate broadcast over the 10-bin
-                             // histogram (the calibration shape)
-    "q_ljung_box",           // acf's 1-row series-totals broadcast over
-                             // the day grid
-    "q_kpss",                // 1-row series-totals + 1-row weighted-lag
-                             // broadcasts over the day grid (acf shape)
-    "q_dominant_cycle",      // 1-row series-totals + 1-row max-power
-                             // broadcasts over the bounded period grid
-    "q_chatterjee_xi",       // 1-row day-bounds + grid-length broadcasts
-                             // over the day grid
-    "q_dist_distance",       // 1-row per-side totals broadcast over the
-                             // category support (the drift_psi shape)
-    "q_hl_shift",            // support × support broadcast cross (bounded
-                             // pre-binned levels — the kendall dense-grid
-                             // class) + 1-row position artifacts
-    "q_mood_scale",          // 1-row group-totals broadcast over the
-                             // kernel-ranked support histogram
-    "q_kuiper",              // q_ks_test's 1-row group-total broadcast
-    "q_fano_factor",         // bounded groups × units dense cross (the
-                             // friedman dense-grid class)
-    "q_quade",               // friedman's dense day × |types| cross +
-                             // 1-row k broadcast + day-sized weight join
-    "q_runs_test",           // 1-row day-bounds/median/grid-length
-                             // broadcasts over the day grid
-    "q_basket_rules",        // q_basket_lift's 1-row basket-total
-                             // broadcast
-    "q_icc",                 // anova's 1-row grand-total broadcast over
-                             // the k-row group moments
-    "q_cronbach_alpha",      // friedman's dense day × |types| cross +
-                             // 1-row k broadcast + 1-row subject-moment
-                             // artifact
-    "q_lin_ccc",             // 1-row five-moment reduce (the
-                             // partial_corr shape; the pair join itself
-                             // is equi/hashed)
-    "q_bland_altman",        // 1-row difference-moment reduce
-    "q_newcombe_ci",         // 1-row four-count reduce (the cuped shape)
-    "q_ks_uniform",          // 1-row totals broadcast over the bounded
-                             // bucket support (the KS shape)
-    "q_median_test",         // 1-row total + 1-row median broadcasts
-                             // over the cents histogram; the 2×k cell
-                             // table is localCheckpoint-pinned
-    "q_bowker",              // 1-row pair-term reduce over the
-                             // states²-bounded transition cells
-    "q_spectral_entropy",    // dominant_cycle's 1-row series-totals +
-                             // 1-row normalizer broadcasts (periodogram
-                             // localCheckpoint-pinned)
-    "q_poisson_rate",        // 1-row day-bounds broadcast (the
-                             // reconcile shape)
-    "q_gwet_ac1",            // fleiss_kappa's 1-row item-rollup ×
-                             // 1-row category-rollup broadcasts
-    "q_grubbs",              // 1-row moment reduce broadcast over the
-                             // day grid (the cusum shape)
-    "q_welch_anova",         // 1-row weight-totals broadcast over the
-                             // k-row group moments (the anova shape)
-    "q_page_hinkley",        // 1-row day-bounds + 1-row n_days
-                             // broadcasts over the day grid (acf shape)
-    "q_perm_entropy",        // 1-row day-bounds + 1-row pattern-total
-                             // broadcasts over the day grid (acf shape)
-    "q_energy_distance",     // 1-row per-side totals broadcast over the
-                             // pre-binned support (wasserstein shape)
-    "q_cuzick_trend",        // 1-row n/tie-mass broadcast over the
-                             // k-row score rollup (the kruskal shape)
-    "q_brown_forsythe",      // anovaF's 1-row grand-total broadcast over
-                             // the k-row deviation moments (the levene
-                             // shape; the median join itself is equi)
-    "q_games_howell",        // k-row moment artifact theta-joined
-                             // against itself (g_a < g_b) — the
-                             // q_tukey_pairs bounded-grid shape
-    "q_siegel_slope")        // theil_sen's day×day bounded-grid join
-                             // (j ≠ i) + 1-row min-day/median broadcasts
+  /** A reviewed plan allowance, declared on the query's
+    * `SparkEntry.QueryDef` as `plan = Set(...)` with its justification
+    * beside it: [[Bnlj]] and [[UnpartWindow]] each lift one gate,
+    * [[AnnHeap]] adds the bounded-heap gate. A query that declares none
+    * is held to every gate. */
+  sealed trait Allowance
 
-  /** ANN/top-k paths that must stay on the bounded-heap aggregate. */
-  val annHeapOnly: Set[String] = Set(
-    "q_cosine_topk", "q_ann_topk", "q_ivf_topk", "q_ivf_topk_probe2",
-    "q_pq_rerank", "q_ivfpq_topk", "q_minhash_topk", "q_group_topk",
-    "q_cell_prototypes", "q_stratified_topk", "q_contrastive_pairs",
-    "q_item_cf_topk")
+  /** The plan legitimately carries a BroadcastNestedLoopJoin: the
+    * broadcast side is a bounded artifact (1-row corpus aggregate, ≤k
+    * centroids, the broadcast query set of a top-k), so the "nested
+    * loop" is a constant-width scalar join, the correct 100 TB plan.
+    * Reviewed per query — declare it only with the same justification. */
+  case object Bnlj extends Allowance
 
-  /** Queries whose plan legitimately carries an UNPARTITIONED Window:
-    * every entry's window input is bounded by construction — a grid
-    * whose cardinality does NOT grow with corpus size (days, bins,
-    * cents/value range, top-k limits, replicate counts, or the ≤256-row
-    * bucket grid of the distributed rank kernel). This is the
-    * q_spearman gate (round 12's one `weak`): an unpartitioned window
-    * over a corpus-scaled input is a single-task sort at 100 TB, so any
-    * query NOT named here must plan zero unpartitioned windows — and a
-    * name listed here that stops planning one must be removed (the
-    * stale-entry check), so the list can't rot into a bypass.
-    * Add entries only with the same input-bound justification. */
-  val unpartWindowAllowed: Set[String] = Set(
-    "q_bootstrap_ci",       // ≤R(=40) replicate-mean rows ranked for the CI
-    "q_conformal_interval", // 8dp-rounded residual histogram — value-range-
-                            // bounded, the KS pre-bin convention
-    "q_curriculum_interleave", // distributed-rank kernel bucket grid (≤256
-                            // bucket totals; the support windows are
-                            // __bkt-partitioned)
-    "q_brunner_munzel",     // kernel bucket grid ×3 rank maps
-    "q_changepoint_mean",   // day-grid series (the cusum shape)
-    "q_cliffs_delta",       // distributed-rank kernel bucket grid
-    "q_cusum",              // day-grid series (one exact-cents row per day)
-    "q_cvm_test",           // dollar-binned support (the KS shape)
-    "q_durbin_watson",      // day-grid residual lag window
-    "q_kruskal_wallis",     // distributed-rank kernel bucket grid (≤256
-                            // bucket totals; support windows __bkt-split)
-    "q_drawdown",           // day-grid close series
-    "q_ewma_baseline",      // day-grid series (3 windows, all day-bounded)
-    "q_gains_curve",        // 10 score-decile bins
-    "q_hazard_curve",       // duration-day grid (Kaplan-Meier shape)
-    "q_hill_tail",          // top-101 order statistics (limit before rank)
-    "q_hybrid_rrf",         // k(=20)-row BM25 top-k artifact re-ranked
-    "q_isotonic_calibration", // ≤50 calibration bins
-    "q_kaplan_meier",       // duration-day grid
-    "q_ks_test",            // dollar-binned support — value-range-bounded
-    "q_log_rank",           // duration-day grid (the kaplan-meier shape)
-    "q_nelson_aalen",       // duration-day grid (the kaplan-meier shape)
-    "q_page_trend",         // k-row treatment-weight artifact ranked
-    "q_pettitt",            // day-grid rank + time windows
-    "q_qini",               // ≤10 decile rows cumulated (deciles ride
-                            // the NTILE kernel's partitioned windows)
-    "q_seasonal_decompose", // day-grid 7-day centered window
-    "q_wasserstein",        // dollar-binned support (the KS shape)
-    "q_lorenz",             // cents histogram — value-range-bounded
-    "q_mann_whitney",       // distributed-rank kernel bucket grid
-    "q_wilcoxon_signed_rank", // distributed-rank kernel bucket grid over
-                            // the |d| difference support
-    "q_mase",               // day-grid series
-    "q_median_ci",          // cents histogram of order totals
-    "q_median_survival",    // duration-day grid
-    "q_peak_concurrency",   // distributed-cumsum kernel bucket grid (the
-                            // boundary-second support itself is
-                            // __bkt-partitioned)
-    "q_pr_curve",           // 10 score-decile bins
-    "q_rank_overlap",       // two top-30 ranked lists
-    "q_recalibration_gain", // calibration-bin grid
-    "q_roc_auc",            // distributed-rank kernel bucket grid
-    "q_skyline",            // pass-2 frontier: per-partition Pareto
-                            // survivors only (the constant partition key
-                            // folds away in the physical plan)
-    "q_spearman",           // kernel bucket grid, one per rank map
-    "q_sprt_monitor",       // day-grid decision series
-    "q_vocab_growth",       // crawl-batch grid (one row per ingest wave —
-                            // schedule-bounded, not data-proportional)
-    "q_volatility",         // day-grid close series
-    "q_waterfill_mix",      // |strata|-row allocation grid
-    "q_zipf_slope",         // top-200 vocabulary ranks (limit before rank)
-    "q_rmst",               // duration-day grid (the kaplan-meier shape)
-    "q_cuminc",             // duration-day grid (all-cause risk/survival;
-                            // the per-cause cumsum is cause-partitioned)
-    "q_kpss",               // day-grid partial-sum cumulative
-    "q_chatterjee_xi",      // day-grid rank maps (tie-inclusive RANGE
-                            // frames over the bounded contiguous grid)
-    "q_hl_shift",           // cumulative over the bounded pre-binned
-                            // difference support (the KS shape)
-    "q_mood_scale",         // distributed-rank kernel bucket grid
-    "q_kuiper",             // dollar-binned support (the KS shape)
-    "q_quade",              // block-RANGE rank over the day grid (one
-                            // row per block — grid-bounded)
-    "q_runs_test",          // day-grid median rank + lag windows
-    "q_ks_uniform",         // bounded hash-bucket support cumulative
-                            // (the KS shape; q_median_test's median
-                            // cumulative runs inside its eager
-                            // localCheckpoint and never reaches the
-                            // audited plan)
-    "q_page_hinkley",       // day-grid cumulative + running-min windows
-                            // (the cusum shape)
-    "q_perm_entropy",       // day-grid lead windows (the runs_test shape)
-    "q_energy_distance",    // pre-binned support cumulative (KS shape)
-    "q_cuzick_trend")       // distributed-rank kernel bucket grid
+  /** An ANN/top-k path that must stay on the bounded-heap aggregate:
+    * no Window node, and an ObjectHashAggregate present. */
+  case object AnnHeap extends Allowance
 
-  /** All gate violations for one query's compiled plan (no execution).
-    * Empty = the plan is clean. The stale-whitelist check is included
-    * so a rotted entry surfaces in every enforcement site. */
-  def violations(name: String, df: DataFrame): Seq[String] = {
+  /** The plan legitimately carries an UNPARTITIONED Window: the window
+    * input is bounded by construction — a grid whose cardinality does
+    * NOT grow with corpus size (days, bins, cents/value range, top-k
+    * limits, replicate counts, or the ≤256-row bucket grid of the
+    * distributed rank kernel). This is the q_spearman gate (round 12's
+    * one `weak`): an unpartitioned window over a corpus-scaled input is a
+    * single-task sort at 100 TB, so any query NOT declaring this must
+    * plan zero unpartitioned windows — and a query declaring it that
+    * stops planning one must drop it (the stale-allowance check), so the
+    * allowances can't rot into a bypass. Declare it only with the same
+    * input-bound justification. */
+  case object UnpartWindow extends Allowance
+
+  /** All gate violations for one query's compiled plan (no execution),
+    * given the query's declared allowances. Empty = the plan is clean.
+    * The stale-allowance check is included so a rotted allowance
+    * surfaces in every enforcement site. */
+  def violations(name: String, allowed: Set[Allowance],
+                 df: DataFrame): Seq[String] = {
     val plan = df.queryExecution.executedPlan.toString
     val cart = "CartesianProduct".r.findAllIn(plan).length
     val bnlj = "BroadcastNestedLoopJoin".r.findAllIn(plan).length
@@ -405,24 +84,24 @@ object PlanAudit {
       case w: WindowExec if w.partitionSpec.isEmpty => w
     }.length
     val annWin =
-      if (annHeapOnly(name)) "Window".r.findAllIn(plan).length else 0
+      if (allowed(AnnHeap)) "Window".r.findAllIn(plan).length else 0
     val checks = Seq(
       (cart > 0) ->
         s"$name: CartesianProduct x$cart",
-      (bnlj > 0 && !bnljAllowed(name)) ->
-        s"$name: BroadcastNestedLoopJoin x$bnlj (not whitelisted)",
+      (bnlj > 0 && !allowed(Bnlj)) ->
+        s"$name: BroadcastNestedLoopJoin x$bnlj (no Bnlj allowance)",
       (annWin > 0) ->
         s"$name: Window x$annWin in ANN plan",
-      (annHeapOnly(name) && !plan.contains("ObjectHashAggregate")) ->
+      (allowed(AnnHeap) && !plan.contains("ObjectHashAggregate")) ->
         s"$name: ANN plan missing ObjectHashAggregate (heap) node",
-      (nUnpart > 0 && !unpartWindowAllowed(name)) ->
+      (nUnpart > 0 && !allowed(UnpartWindow)) ->
         (s"$name: $nUnpart unpartitioned Window(s) — single-task sort at " +
           "scale; partition it, route it through the distributed rank " +
           "kernel (StatsOps.distributedCumSum), or justify the bound in " +
-          "PlanAudit.unpartWindowAllowed"),
-      (nUnpart == 0 && unpartWindowAllowed(name)) ->
-        (s"$name: whitelisted but plans no unpartitioned window — " +
-          "remove the stale entry"))
+          "its QueryDef's plan = Set(UnpartWindow)"),
+      (nUnpart == 0 && allowed(UnpartWindow)) ->
+        (s"$name: allowed UnpartWindow but plans no unpartitioned " +
+          "window — remove the stale allowance"))
     checks.collect { case (true, msg) => msg }
   }
 }

@@ -1,7 +1,7 @@
 package graft
 
 /**
- * CI plan gate over EVERY `SparkEntry.queries` entry: compiles each query's
+ * CI plan gate over EVERY `SparkEntry.registry` entry: compiles each query's
  * physical plan at sf0.001 and asserts the anti-patterns that sink a 100 TB
  * run can never silently return:
  *
@@ -9,11 +9,12 @@ package graft
  *    acceptable in any query here.
  *  - `BroadcastNestedLoopJoin` — acceptable ONLY when the broadcast side is
  *    a bounded scalar / model artifact (a 1-row aggregate, a k-row centroid
- *    or query set). Those queries are whitelisted BY NAME below; everything
- *    else must plan an equi-join.
- *  - `Window` in the ANN top-k family — the bounded-heap aggregate is the
- *    contract (the exchange carries ≤k-element buffers, not |Q|·|C| ranked
- *    pairs); a Window node means the heap regressed to a rank window.
+ *    or query set). Those queries declare it on their `SparkEntry.QueryDef`
+ *    (`plan = Set(Bnlj)`); everything else must plan an equi-join.
+ *  - `Window` in the ANN top-k family (`plan = Set(AnnHeap)`) — the
+ *    bounded-heap aggregate is the contract (the exchange carries
+ *    ≤k-element buffers, not |Q|·|C| ranked pairs); a Window node means
+ *    the heap regressed to a rank window.
  *
  * The assertions run on the statically-planned `executedPlan` (no
  * execution): AQE runtime replanning can turn a shuffle join into a
@@ -27,24 +28,25 @@ class PlanAuditSpec extends SparkSpec {
     SparkEntry.queries(name)(spark, sf0001).queryExecution.executedPlan.toString
 
   test("plan gate: every query clean under graft.plans.PlanAudit (cartesian / BNLJ whitelist / ANN heap / unpartitioned windows, live whitelists)") {
-    // The rule set (and its per-name whitelists with bound
-    // justifications) lives in src/main graft.plans.PlanAudit so the
-    // driver's Verify pass enforces the SAME gate per round — round 13
-    // shipped an oracle-green query with a red plan that only this
-    // suite could see.
-    val names = SparkEntry.queries.keys.toSeq.sorted
-    val violations = names.flatMap { name =>
-      graft.plans.PlanAudit.violations(
-        name, SparkEntry.queries(name)(spark, sf0001))
+    // The rule set lives in src/main graft.plans.PlanAudit and each
+    // query's allowances (with their bound justifications) on its
+    // SparkEntry.QueryDef, so the driver's Verify pass enforces the SAME
+    // gate per round — round 13 shipped an oracle-green query with a red
+    // plan that only this suite could see.
+    val violations = SparkEntry.registry.sortBy(_.name).flatMap { q =>
+      graft.plans.PlanAudit.violations(q.name, q.plan, q.build(spark, sf0001))
     }
     withClue(violations.mkString("plan violations:\n", "\n", "\n")) {
       violations shouldBe empty
     }
-    // whitelists must reference live query names only (no rot)
-    (graft.plans.PlanAudit.bnljAllowed ++
-      graft.plans.PlanAudit.annHeapOnly ++
-      graft.plans.PlanAudit.unpartWindowAllowed)
-      .filterNot(SparkEntry.queries.contains) shouldBe empty
+  }
+
+  test("query registry: 456 distinct names, each with an oracle; the driver maps are its views") {
+    val names = SparkEntry.registry.map(_.name)
+    names.diff(names.distinct) shouldBe empty
+    names should have size 456
+    SparkEntry.registry.filter(_.oracle.trim.isEmpty).map(_.name) shouldBe empty
+    SparkEntry.queries.keySet shouldBe SparkEntry.oracleSql.keySet
   }
 
   test("nested-document source: predicate pushdown + nested schema pruning reach the scan") {

@@ -2,7 +2,8 @@
 """Local mirror of the driver's t2 correctness gate: run each oracle SQL in
 DuckDB against bare-name views over the sf parquet tables, and compare
 row-by-row (columns sorted by name) with the Spark parquet dumps produced by
-`graft.Verify`. Usage: check_oracle.py <sfdir> <verify_out_dir>"""
+`graft.Verify`. Usage: check_oracle.py <sfdir> <verify_out_dir>
+Exits 1 unless every oracle matches."""
 import json, math, sys
 
 import duckdb
@@ -55,6 +56,7 @@ def main(sfdir, outdir):
             print(f"OK   {name} ({len(o)} rows)")
             n_ok += 1
     print(f"== {n_ok}/{len(oracle)} queries match")
+    return n_ok == len(oracle)
 
 if __name__ == "__main__":
-    main(sys.argv[1], sys.argv[2])
+    sys.exit(0 if main(sys.argv[1], sys.argv[2]) else 1)
