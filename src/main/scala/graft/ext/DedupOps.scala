@@ -984,11 +984,6 @@ object DedupOps {
     labels
   }
 
-  /** Exact Jaccard of two texts' shingle sets as a single expression —
-    * used to verify LSH candidates without another shuffle. */
-  def jaccardExpr(t1: Column, t2: Column, n: Int): Column =
-    round(shingleJaccard(shingleHashes(t1, n), shingleHashes(t2, n)), 4)
-
   /** SimHash (bitwise-majority) signature over token hashes, `bits` wide
     * (≤ 32 here; production uses 64 via two 32-bit halves). Per doc:
     * for each bit b, sum ±1 over distinct tokens' hash-bit b; signature

@@ -927,29 +927,6 @@ object StreamingPipeline {
       .start()
   }
 
-  /** True iff `path` exists and holds at least one COMMITTED data file —
-    * i.e. a visible file not under a `_temporary` attempt directory and not
-    * a `_`/`.`-prefixed marker. A directory failing this is treated as an
-    * absent index: either never written, or a crashed first write whose
-    * replay will overwrite it wholesale. */
-  private def hasCommittedParquet(fs: org.apache.hadoop.fs.FileSystem,
-                                  path: org.apache.hadoop.fs.Path): Boolean =
-    fs.exists(path) && {
-      val it = fs.listFiles(path, true)
-      var found = false
-      while (!found && it.hasNext) {
-        val f = it.next().getPath
-        // check every path component STRICTLY below the base dir (the base
-        // dir's own name is the caller's business, not a visibility marker)
-        val hidden = Iterator.iterate(f)(_.getParent)
-          .takeWhile(p => p != null && p.toUri.getPath.length >
-            path.toUri.getPath.length)
-          .exists(p => p.getName.startsWith("_") || p.getName.startsWith("."))
-        found = !hidden
-      }
-      found
-    }
-
   /** The per-batch admission core of [[dedupIngest]]: collapse in-batch
     * duplicate clusters to their min-id member, reject near-dups of the
     * already-admitted corpus via the persisted band index, then write
@@ -980,17 +957,20 @@ object StreamingPipeline {
       }
     val fs = new org.apache.hadoop.fs.Path(indexPath)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    // committed-files guard, not bare exists: a first-batch crash mid-write
-    // can leave indexPath holding only `_temporary` files; schema inference
-    // over zero committed files throws and wedges every replay. (The id
-    // column's type follows the caller's idCol, so an explicit schema can't
-    // be pinned here the way exactDedupIngest pins its fingerprint index.)
+    // the index and the corpus hold what earlier batches of this schema
+    // wrote: read them under it, never by inference. A first-batch crash
+    // mid-write can leave indexPath holding only `_temporary` files; read
+    // under a schema they are an empty index, where inference would throw
+    // and wedge every replay.
+    val idField = b.schema(idCol)
     val crossPairs =
-      if (hasCommittedParquet(fs, new org.apache.hadoop.fs.Path(indexPath))) Some {
-        val idx = spark.read.parquet(indexPath)
-          .select("band_key", "id")
-        val ctext = spark.read.parquet(corpusPath)
-          .select(col(idCol), col(textCol))
+      if (fs.exists(new org.apache.hadoop.fs.Path(indexPath))) Some {
+        val idx = spark.read.schema(StructType(Seq(
+            StructField("band_key", StringType), idField.copy(name = "id"))))
+          .parquet(indexPath).select("band_key", "id")
+        val ctext = spark.read.schema(StructType(Seq(idField,
+            b.schema(textCol))))
+          .parquet(corpusPath).select(col(idCol), col(textCol))
         DedupOps.incrementalNearDupPairs(batchKept, idCol, textCol,
           idx, ctext, n, numHashes, bands, threshold)
       } else None

@@ -10,7 +10,8 @@ import java.nio.file.Files
 /** Spark-job budgets of the paths whose cost is their job count, not their
   * compute: one steady-state pipeline window, a ClusterStore commit, a
   * LexIndexStore and an AnnIndexStore append, one steady-state ingest
-  * wave, and a driver-side finisher's guarded grid collect. */
+  * wave, a warm graph query and a driver-side finisher's guarded grid
+  * collect. */
 class JobBudgetSpec extends SparkSpec {
   import spark.implicits._
   private lazy val sc = spark.sparkContext
@@ -108,6 +109,20 @@ class JobBudgetSpec extends SparkSpec {
         not startWith "parquet at IngestOps"
       jobs.size should be <= 42
     }
+  }
+
+  test("a warm graph build reads the edge store only where its query does") {
+    // the prepared graph's cache hit checks the caller's session alone; it
+    // runs no job to re-read the evidence store's pairs
+    def storeReads(q: String): Seq[String] = {
+      SparkEntry.queries(q)(spark, sf0001)
+      val (_, Profile(jobs, _, _)) = profiled(sc)(SparkEntry.queries(q)(spark, sf0001))
+      jobs.map(_.site).filter(_.startsWith("parquet at ClusterStore.scala"))
+    }
+    storeReads("q_pagerank") shouldBe empty
+    storeReads("q_kcore") shouldBe empty
+    // q_ppr_seeds reads the pairs once itself, for its seed set
+    storeReads("q_ppr_seeds") should have size 1
   }
 
   test("ipfRake over the grid cap: a named contract violation, no extra job") {

@@ -609,6 +609,47 @@ class StreamingPipelineSpec extends SparkSpec {
       .as[Long].collect().sorted shouldBe Array(1L, 2L, 4L)
   }
 
+  test("dedupIngest: an index holding only a crashed write's _temporary files is empty") {
+    import graft.ext.DedupOps
+    val work = Files.createTempDirectory("graft_dedup_crashed_").toString
+    val corpus = s"$work/corpus"; val index = s"$work/index"
+    // a first write that crashed in its band-index write: the corpus
+    // committed docs 11 and 12, the index holds only the attempt's files
+    val crashed = Seq((11L, "alpha beta gamma delta epsilon zeta"),
+      (12L, "one two three four five six")).toDF("doc_id", "text")
+    crashed.write.parquet(s"$corpus/run=crashed/batch_id=0")
+    DedupOps.bandIndex(crashed, "doc_id", "text", 2, 16, 4)
+      .write.parquet(s"$work/attempt")
+    val attempt = java.nio.file.Paths.get(
+      s"$index/run=crashed/batch_id=0/_temporary/0/_temporary/attempt_0")
+    Files.createDirectories(attempt)
+    Files.list(java.nio.file.Paths.get(s"$work/attempt"))
+      .filter(_.getFileName.toString.endsWith(".parquet"))
+      .forEach { f => Files.move(f, attempt.resolve(f.getFileName)); () }
+
+    // the next run: docs 1 and 2 repeat the crashed docs' texts, and the
+    // attempt's uncommitted band keys must not reject them
+    Seq((1L, "alpha beta gamma delta epsilon zeta"),
+      (2L, "one two three four five six"), (3L, "seven eight nine ten"))
+      .toDF("doc_id", "text").write.parquet(s"$work/src")
+    StreamingPipeline.dedupIngest(spark,
+        spark.readStream.schema(crashed.schema).parquet(s"$work/src"),
+        "doc_id", "text", corpus, index, s"$work/rejects", s"$work/cp",
+        n = 2, numHashes = 16, bands = 4, threshold = 0.9)
+      .awaitTermination()
+
+    def written(root: String) = Files.list(java.nio.file.Paths.get(root))
+      .toArray.map(_.toString).filterNot(_.endsWith("run=crashed"))
+      .filter(r => Files.isDirectory(java.nio.file.Paths.get(s"$r/batch_id=0")))
+    written(corpus) should have size 1
+    written(index) should have size 1
+    spark.read.parquet(corpus).filter(col("run") =!= "crashed")
+      .select("doc_id").as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
+    spark.read.parquet(index).select("id").distinct()
+      .as[Long].collect().sorted shouldBe Array(1L, 2L, 3L)
+    Files.exists(java.nio.file.Paths.get(s"$work/rejects")) shouldBe false
+  }
+
   test("dedupAnnIngest: ANN index grows with exactly the admitted set, equal to a batch rebuild under the same centroids") {
     import graft.ext.{AnnIndexStore, LexIndexStore, SimilarityOps, TextOps}
     val work = Files.createTempDirectory("graft_dedup_ann_").toString
